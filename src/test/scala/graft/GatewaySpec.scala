@@ -3440,4 +3440,102 @@ class GatewaySpec extends AnyFunSuite {
       s"default delay: the trailing DELETE must be admitted and tombstone the key: $atDefault")
     assert(droppedAtDefault === 0L, "default delay must not drop the 5-minute trail")
   }
+
+  test("every feed line parser drops malformed lines: output(valid ∪ malformed) == output(valid)") {
+    // One table row per feed whose arguments are plain values. The
+    // feed-line grammar is `epoch_sec tok… [rest]`; a line with the
+    // wrong token count or a non-numeric token where the feed needs a
+    // number must be dropped by the parse — under Spark 4's default
+    // ANSI mode a bare `cast` guard throws CAST_INVALID_INPUT there
+    // instead, and one bad line stops the whole feed. Feeds run as
+    // batch jobs on one ordered partition (hitterFeed's sketch is
+    // fold-order dependent); the three whose operators only exist on
+    // streams run on a MemoryStream closed by a far-future line.
+    // manifestFeed has no line grammar (every line is a row), and the
+    // feeds taking index or dictionary frames are out of this table.
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val en = "the a of to and is in " + (1 to 14).map(i => s"tok$i").mkString(" ")
+    val evalVecs = Seq((1L, Seq(1.0, 0.0))).toDF("eval_id", "ev")
+    // (name, feed, bodies after the epoch, numeric token positions
+    // counted from the epoch at 0, fewest tokens a valid line has,
+    // streaming-only)
+    val cases: Seq[(String, DataFrame => DataFrame, Seq[String], Seq[Int], Int, Boolean)] = Seq(
+      ("curatedFeed", Gateway.curatedFeed(_), Seq(s"1 $en", s"2 $en"), Seq(1), 3, false),
+      ("driftFeed", Gateway.driftFeed(_, Seq(0L, 1L, 2L), Seq(1L, 2L, 3L), 3L),
+        Seq("power 4.5", "temp 17"), Seq(2), 3, false),
+      ("dedupExactFeed", Gateway.dedupExactFeed(_), Seq("power 100.0", "temp 21.5"), Seq(2), 3, true),
+      ("hitterFeed", Gateway.hitterFeed(_), Seq(s"1 $en", "2 a b a"), Seq(1), 3, false),
+      ("skewFeed", Gateway.skewFeed(_), Seq("k1 x", "k2 y", "k1 z"), Nil, 3, false),
+      ("srmFeed", Gateway.srmFeed(_), Seq("0 101", "1 102 1", "0 103"), Seq(1, 2), 3, false),
+      ("abFeed", Gateway.abFeed(_), Seq("0 101 1", "1 102 0", "0 103 0 extra"), Seq(1, 2, 3), 4,
+        false),
+      ("cupedFeed", Gateway.cupedFeed(_),
+        Seq("0 101 3 4", "1 102 2 5", "0 103 1 1", "1 104 5 2"), Seq(1, 2, 3, 4), 5, false),
+      ("qteFeed", Gateway.qteFeed(_), Seq("0 101 4", "1 102 2", "0 103 7"), Seq(1, 2, 3), 4, false),
+      ("calibrationFeed", Gateway.calibrationFeed(_), Seq(s"1 $en", s"2 $en x"), Seq(1), 3, false),
+      ("watermarkFeed", Gateway.watermarkFeed(_), Seq(s"1 $en", "2 some other words"), Seq(1), 3,
+        false),
+      ("rankEvalFeed", Gateway.rankEvalFeed(_, Seq((3L, 2L), (1L, 5L))),
+        Seq("1 3", "2 1 d7", "2 0 d8"), Seq(1, 2), 3, false),
+      ("temperatureFeed", Gateway.temperatureFeed(_), Seq("1 en", "2 de", "3 en"), Seq(1), 3, false),
+      ("unimaxFeed", Gateway.unimaxFeed(_), Seq(s"1 en $en", "2 de drei worte hier"), Seq(1), 4,
+        false),
+      ("hllFeed", Gateway.hllFeed(_), Seq(s"src1 $en", "src2 two words"), Nil, 3, false),
+      ("hllRollingFeed", Gateway.hllRollingFeed(_), Seq("view 101", "click 102", "view 103"),
+        Seq(2), 3, true),
+      ("histQuantilesFeed", Gateway.histQuantilesFeed(_), Seq(s"src1 $en", "src2 a b"), Nil, 3,
+        false),
+      ("labelNoiseFeed", Gateway.labelNoiseFeed(_, 1200000L, 2L, 800000L, 2L),
+        Seq(s"1 $en", "2 short"), Seq(1), 3, false),
+      ("clusterSizesFeed", Gateway.clusterSizesFeed(_), Seq("1 7", "2 7", "3 -3"), Seq(1, 2), 3,
+        false),
+      ("profileDriftFeed", Gateway.profileDriftFeed(_,
+        graft.streaming.ProfileBaseline(10L, 1L, 2L, 2L, 500L, 400L)),
+        Seq("1 en src1 120 some text here", "2 - src2 80 more"), Seq(1, 4), 6, false),
+      ("topicFeed", Gateway.topicFeed(_), Seq(s"1 $en", "2 court judge law ruling"), Seq(1), 3,
+        false),
+      ("entityFeed", Gateway.entityFeed(_),
+        Seq("src1 mail a@b.com or http://x.io in 2020", "src2 none"), Nil, 3, false),
+      ("winsorizeFeed", Gateway.winsorizeFeed(_, Seq(("power", 1000L, 20000L))),
+        Seq("power 100.0", "power 5.5", "power 250"), Seq(2), 3, false),
+      ("schemaDriftFeed", Gateway.schemaDriftFeed(_, Seq("a")),
+        Seq("""1 {"a": 1, "b": 2}""", """2 {"c": true}"""), Seq(1), 3, false),
+      ("novelFeed", Gateway.novelFeed(_, Seq("the", "a")), Seq(s"1 $en", "2 zz yy"), Seq(1), 3,
+        false),
+      ("decontamFeed", Gateway.decontamFeed(_, evalVecs), Seq("7 1.0,0.0", "8 0.6,0.8"), Seq(1), 3,
+        true))
+    val base = 1700000000L
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    def run(feed: DataFrame => DataFrame, lines: Seq[String], close: String,
+        streamed: Boolean): Seq[String] =
+      if (!streamed) rows(feed(lines.toDF("value").coalesce(1)))
+      else {
+        val ms = MemoryStream[String]
+        val sink = s"malformed_${System.nanoTime()}"
+        val q = feed(ms.toDF())
+          .writeStream.format("memory").queryName(sink).outputMode("append").start()
+        try {
+          Seq(lines, Seq(close), Seq(close)).foreach { b => ms.addData(b: _*); q.processAllAvailable() }
+          rows(spark.table(sink))
+        } finally q.stop()
+      }
+    for ((name, feed, bodies, numeric, minTokens, streamed) <- cases) {
+      val valid = bodies.zipWithIndex.map { case (b, i) => s"${base + 3 * i} $b" }
+      val toks = valid.head.split(" ")
+      val bad = Seq("", toks.head, toks.take(minTokens - 1).mkString(" "),
+        ("abc" +: toks.tail).mkString(" ")) ++
+        numeric.map(i => toks.updated(i, "x9").mkString(" ")) ++
+        (if (name == "decontamFeed") Seq(s"$base 9 1.0,abc") else Nil)
+      // interleave so each dropped line sits between valid ones
+      val mixed = valid.zipAll(bad, "", "").flatMap { case (v, b) => Seq(v, b) }
+      val close = s"${base + 400L * 86400L} ${bodies.head}"
+      val clean = run(feed, valid, close, streamed)
+      assert(clean.nonEmpty, s"vacuous: $name emits nothing on its valid lines")
+      val got =
+        try run(feed, mixed, close, streamed)
+        catch { case e: Exception => fail(s"$name threw on malformed lines: ${e.getMessage}") }
+      assert(got === clean, s"$name: malformed lines changed the output")
+    }
+  }
 }
