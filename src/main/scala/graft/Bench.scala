@@ -1,9 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // r6 verdict task 4 + r7 task 1: recorded totals were 1.5-2.8x
     // inflated by machine contention four rounds running (r7: 63.9s
     // recorded vs 30.4s judge rerun of the same binary). Two defenses:
@@ -26,26 +24,7 @@ object Bench {
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt
     val maxPasses = sys.env.getOrElse("SPARK_GRAFT_BENCH_MAX_PASSES", "6").toInt
     val only = sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(",").map(_.trim).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // OPTIMIZATION r21 (guide §1.2 step 2 — per-task/fixed work): the
-      // JVM-wide cache of whole-stage-codegen'd classes defaults to 100
-      // entries, and this surface compiles ~8 generated classes per
-      // query × 235 queries — the cache thrashed and EVERY pass
-      // re-Janino-compiled every stage. Sized to the surface's working
-      // set with headroom; pure compile caching (no data, no results),
-      // scale-independent, and a real many-query deployment sets the
-      // same. STATIC conf, so it lives here (before getOrCreate), not
-      // in GraftConf.ensure. Measured on the 20-query mid-tail slice,
-      // alternating A/B ×2: 20.4/29.6 s (default) → 13.6/12.3 s.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftConf.ensure(spark)
+    val spark = GraftSession.build()
     // JIT/codegen/parquet-footer warmup so the first timed query isn't
     // charged ~3s of JVM cost (r1 verdict: q_scan_events leads only
     // because it runs first). One cheap pass over each base table.

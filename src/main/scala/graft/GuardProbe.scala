@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Standing df-saturation guard probe (VERDICT r19 #8): DedupSpec's
@@ -22,15 +21,7 @@ object GuardProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/graft_sf1full")
     val expectSaturated = args.lift(1).forall(_.toBoolean)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftConf.ensure(spark)
+    val spark = GraftSession.build()
     val near = SparkEntry.queries("q_dedup_near")(spark, sfDir)
     val rows = near.select(col("id_a"), col("df_saturated")).collect()
     val sentinels = rows.count(_.getLong(0) == -1L)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round measurement harness (guide §1.5/§7.1): runs the
   * named queries exactly like [[Bench]] (same master/shuffle conf,
@@ -14,22 +13,10 @@ import org.apache.spark.sql.SparkSession
 object Inspect {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val holdSec = sys.env.getOrElse("SPARK_GRAFT_INSPECT_HOLD_SEC", "600").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_INSPECT_REPS", "2").toInt
     val only = sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(",").map(_.trim).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "true")
-      // match Bench's codegen-class cache sizing (r21) so inspect
-      // numbers stay comparable to bench numbers
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftConf.ensure(spark)
+    val spark = GraftSession.build(ui = true)
     Tables.all.foreach { t =>
       try Tables(spark, sfDir, t).count() catch { case _: Throwable => () }
     }

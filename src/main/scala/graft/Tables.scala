@@ -76,15 +76,10 @@ object Tables {
     * at sites whose downstream per-row work was measured compute-dense
     * (seconds of digest/explode work per task), where the ~0.1 s
     * exchange of a few hundred corpus rows buys a ~cores-way speedup.
-    * `spark.graft.scan.fanout=off` disables (A/B reproducibility).
     */
   private[graft] def fanOutForCompute(df: DataFrame): DataFrame = {
-    val s = df.sparkSession
-    if (s.conf.get("spark.graft.scan.fanout", "auto") == "off") df
-    else {
-      val target = s.sparkContext.defaultParallelism
-      if (df.rdd.getNumPartitions < target) df.repartition(target) else df
-    }
+    val target = df.sparkSession.sparkContext.defaultParallelism
+    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
   }
 }
 
@@ -119,9 +114,45 @@ object GraftConf {
     // forcing coalescePartitions.parallelismFirst=false instead was
     // measured WORSE (44-46 s: it serializes the compute-heavy
     // index-build aggregates) and is deliberately left at default.
-    // Env-overridable so the A/B stays reproducible.
-    spark.conf.set("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-      sys.env.getOrElse("SPARK_GRAFT_AQE_CACHED_REPARTITION", "true"))
+    spark.conf.set("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+  }
+}
+
+/** The one local session builder: every main (Bench, Verify, Inspect,
+  * Explain, GuardProbe) and the test fixture start their session here,
+  * so master width, shuffle width, extensions, codegen-cache sizing and
+  * [[GraftConf.ensure]] cannot drift apart between them.
+  */
+object GraftSession {
+  /** `$SPARK_GRAFT_CPUS` when set, else every core of the host. */
+  private def defaultCpus: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** `local[cpus]` with `cpus` shuffle partitions; `ui` turns the Spark
+    * UI on (Inspect holds it open to read stage metrics).
+    */
+  def build(cpus: Int = defaultCpus, ui: Boolean = false): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+      .config("spark.ui.enabled", ui.toString)
+      // OPTIMIZATION r21 (guide §1.2 step 2 — per-task/fixed work): the
+      // JVM-wide cache of whole-stage-codegen'd classes defaults to 100
+      // entries, and this surface compiles ~8 generated classes per
+      // query × 235 queries — the cache thrashed and EVERY bench pass
+      // re-Janino-compiled every stage. Sized to the surface's working
+      // set with headroom; pure compile caching (no data, no results).
+      // STATIC conf, so it lives here (before getOrCreate), not in
+      // GraftConf.ensure. Measured on the 20-query mid-tail slice,
+      // alternating A/B ×2: 20.4/29.6 s (default) → 13.6/12.3 s.
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    GraftConf.ensure(spark)
+    spark
   }
 }
 

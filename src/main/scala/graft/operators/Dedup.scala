@@ -984,6 +984,20 @@ object Dedup {
           element_at(col("sig"), 2 * b + 2).as("k2"))): _*)).as("bk"))
       .select(col("doc_id"), col("bk.band").as("band"), col("bk.k1").as("k1"), col("bk.k2").as("k2"))
 
+  /** [[minhashBands]]' (band, k1, k2) keys of ONE row's shingle array,
+    * as an array of structs to explode: an `array_min` over the row's
+    * own shingles equals the sketch aggregate over the same set, so
+    * the streaming feeds that see a whole document per row
+    * (`Gateway.dedupFeed`, `Gateway.ingestFeed`) band exactly like the
+    * batch index they probe.
+    */
+  private[graft] def minhashBandKeys(shingles: Column): Column = {
+    def slot(i: Int): Column = array_min(transform(shingles, sh =>
+      (h32(sh) % 2147483648L * mixA(i) + mixB(i)) % minhashMod))
+    array((0 until nBands).map(b =>
+      struct(lit(b).as("band"), slot(2 * b).as("k1"), slot(2 * b + 1).as("k2"))): _*)
+  }
+
   /** The two static-index tables the STREAMING incremental dedup
     * ([[graft.streaming.Gateway.dedupFeed]]) joins each micro-batch
     * against — exactly what X53's batch form derives from the indexed

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import scala.collection.immutable.ListMap
@@ -656,6 +656,59 @@ object Extensions {
     */
   private[graft] val abConvThreshold = 14L
 
+  /** Signed 4dp HALF_UP of num/den in integer space, as a BIGINT SQL
+    * expression: sign(num)·((|num|·20000 + den) div (2·den)), 0 when
+    * den = 0 (den ≥ 0). The one rounding helper behind the experiment
+    * statistics below, their streaming dials and the oracle strings,
+    * which pass DuckDB's `//` as `div`.
+    */
+  private[graft] def sq4(num: String, den: String, div: String = "DIV"): String =
+    s"""CAST(CASE WHEN ($den) = 0 THEN 0
+       |ELSE (CASE WHEN ($num) < 0 THEN -1 ELSE 1 END)
+       |     * ((abs($num) * 20000 + ($den)) $div (2 * ($den))) END AS BIGINT)"""
+      .stripMargin
+
+  /** X141's 2×2 table folded from a (variant, n_users, n_conv)
+    * dictionary: a = conv_0, b = non-conv_0, c = conv_1, d = non-conv_1.
+    * [[abNum]] through [[abSignificant]] read these columns; the batch
+    * [[abTestOf]] and the streaming `Gateway.abFeed` share all of them.
+    */
+  private[graft] def abCells: Seq[Column] = Seq(
+    sum(when(col("variant") === 0, col("n_conv")).otherwise(0L)).as("a"),
+    sum(when(col("variant") === 0, col("n_users") - col("n_conv")).otherwise(0L)).as("b"),
+    sum(when(col("variant") === 1, col("n_conv")).otherwise(0L)).as("c"),
+    sum(when(col("variant") === 1, col("n_users") - col("n_conv")).otherwise(0L)).as("d"))
+
+  /** χ² numerator n·(ad−bc)², DECIMAL(38,0). */
+  private[graft] def abNum: Column = expr(
+    """CAST(a + b + c + d AS DECIMAL(38,0)) *
+      |(CAST(a AS DECIMAL(38,0)) * d - CAST(b AS DECIMAL(38,0)) * c) *
+      |(CAST(a AS DECIMAL(38,0)) * d - CAST(b AS DECIMAL(38,0)) * c)""".stripMargin)
+
+  /** χ² denominator (a+b)(c+d)(a+c)(b+d), DECIMAL(38,0). */
+  private[graft] def abDen: Column = expr(
+    """(CAST(a AS DECIMAL(38,0)) + b) * (CAST(c AS DECIMAL(38,0)) + d)
+      |* (CAST(a AS DECIMAL(38,0)) + c) * (CAST(b AS DECIMAL(38,0)) + d)""".stripMargin)
+
+  /** χ² = num/den at 4dp (BIGINT ×10⁴) over `num`/`den` columns; 0 on
+    * a degenerate margin (den = 0 forces ad − bc = 0).
+    */
+  private[graft] def abChi2: Column = expr(sq4("num", "den"))
+
+  /** The 0.05-level verdict 10000·num > 38415·den as a pure integer
+    * cross-multiply, 0 on a degenerate margin. NULL when a scaled
+    * intermediate (10000·num, 38415·den, the χ² quotient) overflowed
+    * DECIMAL(38,0) under ANSI off: those need ~4 more digits than
+    * num/den, so a guard keyed on num/den alone would read that
+    * corner as a confident 0.
+    */
+  private[graft] def abSignificant: Column = {
+    val (lhs, rhs) = (expr("10000 * num"), expr("38415 * den"))
+    when(lhs.isNull || rhs.isNull || abChi2.isNull, lit(null).cast("long"))
+      .when(col("den") === 0, lit(0L))
+      .otherwise(when(lhs > rhs, 1L).otherwise(0L))
+  }
+
   /** X141 core — the two-proportion test off a (variant, converted)
     * per-user frame. Factored so ExtensionsSpec can drive the
     * closed forms (identical rates → χ² = 0, not significant; an
@@ -676,31 +729,15 @@ object Extensions {
     val cells = perUser.groupBy(col("variant"))
       .agg(count(lit(1)).as("n_users"), sum(col("converted")).as("n_conv"))
       .localCheckpoint(true)
-    val wide = cells.agg(
-      sum(when(col("variant") === 0, col("n_conv")).otherwise(0L)).as("a"),
-      sum(when(col("variant") === 0, col("n_users") - col("n_conv")).otherwise(0L)).as("b"),
-      sum(when(col("variant") === 1, col("n_conv")).otherwise(0L)).as("c"),
-      sum(when(col("variant") === 1, col("n_users") - col("n_conv")).otherwise(0L)).as("d"))
-      .withColumn("n", col("a") + col("b") + col("c") + col("d"))
-      .withColumn("num", expr(
-        """CAST(n AS DECIMAL(38,0)) *
-          |(CAST(a AS DECIMAL(38,0)) * d - CAST(b AS DECIMAL(38,0)) * c) *
-          |(CAST(a AS DECIMAL(38,0)) * d - CAST(b AS DECIMAL(38,0)) * c)""".stripMargin))
-      .withColumn("den", expr(
-        """(CAST(a AS DECIMAL(38,0)) + b) * (CAST(c AS DECIMAL(38,0)) + d)
-          |* (CAST(a AS DECIMAL(38,0)) + c) * (CAST(b AS DECIMAL(38,0)) + d)"""
-          .stripMargin))
-      .select(
-        when(col("den") === 0, lit(0L)).otherwise(
-          expr("CAST((20000 * num + den) DIV (2 * den) AS BIGINT)")).as("chi4"),
-        when(col("den") === 0, lit(0L)).otherwise(
-          expr("CAST(CASE WHEN 10000 * num > 38415 * den THEN 1 ELSE 0 END AS BIGINT)"))
-          .as("significant"))
+    val wide = cells.agg(abCells.head, abCells.tail: _*)
+      .withColumn("num", abNum)
+      .withColumn("den", abDen)
+      .select(abChi2.as("chi4"), abSignificant.as("significant"))
     val wAll = org.apache.spark.sql.expressions.Window.partitionBy()
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
         org.apache.spark.sql.expressions.Window.unboundedFollowing)
     cells
-      .withColumn("r4", expr("CAST((20000 * n_conv + n_users) DIV (2 * n_users) AS BIGINT)"))
+      .withColumn("r4", expr(sq4("n_conv", "n_users")))
       .crossJoin(broadcast(wide))
       .select(
         col("variant").cast("long").as("variant"),
@@ -740,38 +777,70 @@ object Extensions {
       sum(expr("CAST(x AS DECIMAL(38,0)) * x")).as("sxx"),
       sum(expr("CAST(x AS DECIMAL(38,0)) * y")).as("sxy"),
       sum(expr("CAST(y AS DECIMAL(38,0)) * y")).as("syy"))
-      .withColumn("cov_n", expr("CAST(n AS DECIMAL(38,0)) * sxy - CAST(sx AS DECIMAL(38,0)) * sy"))
-      .withColumn("var_n", expr("CAST(n AS DECIMAL(38,0)) * sxx - CAST(sx AS DECIMAL(38,0)) * sx"))
-      .withColumn("vary_n", expr("CAST(n AS DECIMAL(38,0)) * syy - CAST(sy AS DECIMAL(38,0)) * sy"))
+      .withColumn("cov_n", cupedCovN)
+      .withColumn("var_n", cupedVarN)
+      .withColumn("vary_n", cupedVaryN)
     val per = perUser.groupBy(col("variant"))
       .agg(count(lit(1)).as("n_v"), sum(col("x")).as("sx_v"), sum(col("y")).as("sy_v"))
-    def sq4(num: String, den: String): String =
-      s"""CAST(CASE WHEN $den = 0 THEN 0
-         |ELSE (CASE WHEN $num < 0 THEN -1 ELSE 1 END)
-         |     * ((abs($num) * 20000 + $den) DIV (2 * ($den))) END AS BIGINT)"""
-        .stripMargin
     per.crossJoin(broadcast(tot))
-      .withColumn("adj_num", expr(
-        """CAST(sy_v AS DECIMAL(38,0)) * var_n * n
-          |- cov_n * (CAST(sx_v AS DECIMAL(38,0)) * n - CAST(sx AS DECIMAL(38,0)) * n_v)"""
-          .stripMargin))
-      .withColumn("adj_den", expr("CAST(n_v AS DECIMAL(38,0)) * var_n * n"))
       .select(
         col("variant").cast("long").as("variant"),
         col("n_v").cast("long").as("n_users"),
-        (expr("CAST((20000 * sy_v + n_v) DIV (2 * n_v) AS BIGINT)")
-          / lit(10000.0)).as("mean_y"),
-        (when(col("var_n") === 0,
-          expr("CAST((20000 * sy_v + n_v) DIV (2 * n_v) AS BIGINT)"))
-          .otherwise(expr(sq4("adj_num", "adj_den"))) / lit(10000.0)).as("mean_y_adj"),
-        (expr(sq4("cov_n", "var_n")) / lit(10000.0)).as("theta"),
-        (when(col("var_n") === 0 || col("vary_n") === 0, lit(0L))
-          .otherwise(expr(
-            """CAST((20000 * cov_n * cov_n + var_n * vary_n)
-              |  DIV (2 * var_n * vary_n) AS BIGINT)""".stripMargin))
-          / lit(10000.0)).as("var_reduction"))
+        (cupedMean("v") / lit(10000.0)).as("mean_y"),
+        (cupedMeanAdj("v") / lit(10000.0)).as("mean_y_adj"),
+        (cupedTheta / lit(10000.0)).as("theta"),
+        (cupedVarReduction / lit(10000.0)).as("var_reduction"))
       .orderBy("variant")
   }
+
+  /** X142's n-scaled moments over (n, sx, sy, sxx, sxy, syy) columns,
+    * DECIMAL(38,0): cov_n = n·Σxy − Σx·Σy, var_n = n·Σx² − (Σx)²,
+    * vary_n = n·Σy² − (Σy)². [[cupedMean]] through
+    * [[cupedVarReduction]] read them; [[cupedOf]] and the streaming
+    * `Gateway.cupedFeed` share all of them.
+    */
+  private[graft] def cupedCovN: Column =
+    expr("CAST(n AS DECIMAL(38,0)) * sxy - CAST(sx AS DECIMAL(38,0)) * sy")
+  private[graft] def cupedVarN: Column =
+    expr("CAST(n AS DECIMAL(38,0)) * sxx - CAST(sx AS DECIMAL(38,0)) * sx")
+  private[graft] def cupedVaryN: Column =
+    expr("CAST(n AS DECIMAL(38,0)) * syy - CAST(sy AS DECIMAL(38,0)) * sy")
+
+  private def cupedMeanSql(v: String): String =
+    s"CASE WHEN n_$v = 0 THEN 0 ELSE CAST((20000 * sy_$v + n_$v) DIV (2 * n_$v) AS BIGINT) END"
+
+  /** Variant `v`'s raw outcome mean ×10⁴ off its (n_v, sy_v) columns
+    * (suffix `v`); 0 for a variant absent from the table.
+    */
+  private[graft] def cupedMean(v: String): Column = expr(cupedMeanSql(v))
+
+  /** Variant `v`'s adjusted mean ×10⁴, ȳ_v − θ(x̄_v − x̄) =
+    * (Sy_v·var_n·n − cov_n·(Sx_v·n − Sx·n_v)) / (n_v·var_n·n), off the
+    * (n_v, sx_v, sy_v) columns and the totals; the raw mean when
+    * var_n = 0, 0 for an absent variant.
+    */
+  private[graft] def cupedMeanAdj(v: String): Column = expr(
+    s"""CASE WHEN n_$v = 0 THEN 0
+       |WHEN var_n = 0 THEN ${cupedMeanSql(v)}
+       |ELSE ${sq4(
+        s"CAST(sy_$v AS DECIMAL(38,0)) * var_n * n" +
+          s" - cov_n * (CAST(sx_$v AS DECIMAL(38,0)) * n - CAST(sx AS DECIMAL(38,0)) * n_$v)",
+        s"CAST(n_$v AS DECIMAL(38,0)) * var_n * n")} END""".stripMargin)
+
+  /** θ = cov_n/var_n ×10⁴, 0 when var_n = 0. */
+  private[graft] def cupedTheta: Column = expr(sq4("cov_n", "var_n"))
+
+  /** ρ² = cov_n²/(var_n·vary_n) ×10⁴, 0 when either variance is 0.
+    * NULL short-circuits BEFORE the 0-arm: NULL OR TRUE is TRUE, so an
+    * overflowed var_n paired with vary_n = 0 would otherwise read 0 —
+    * a silent zero where the streaming overflow guard must see NULL.
+    */
+  private[graft] def cupedVarReduction: Column =
+    when(col("var_n").isNull || col("vary_n").isNull, lit(null).cast("long"))
+      .when(col("var_n") === 0 || col("vary_n") === 0, lit(0L))
+      .otherwise(expr(
+        """CAST((20000 * cov_n * cov_n + var_n * vary_n)
+          |  DIV (2 * var_n * vary_n) AS BIGINT)""".stripMargin))
 
   /** X142 — CUPED variance-reduced readout (`q_cuped`): the
     * production upgrade to X141 — experiments on heavy-tailed
@@ -807,12 +876,7 @@ object Extensions {
         .select(col("variant"), col("x"), col("y")))
   }
 
-  private def cupedSql: String = {
-    def sq4(num: String, den: String): String =
-      s"""CAST(CASE WHEN $den = 0 THEN 0
-         |ELSE (CASE WHEN $num < 0 THEN -1 ELSE 1 END)
-         |     * ((abs($num) * 20000 + $den) // (2 * ($den))) END AS BIGINT)"""
-        .stripMargin
+  private def cupedSql: String =
     s"""WITH st AS (
        |  SELECT (min(epoch_us(ts)) + max(epoch_us(ts))) // 2 AS mid FROM events),
        |pu AS (
@@ -844,15 +908,14 @@ object Extensions {
        |       THEN CAST((20000 * sy_v + n_v) // (2 * n_v) AS BIGINT) / 10000.0
        |       ELSE ${sq4(
       "CAST(sy_v AS HUGEINT) * mo.var_n * mo.n - mo.cov_n * (CAST(sx_v AS HUGEINT) * mo.n - CAST(mo.sx AS HUGEINT) * n_v)",
-      "CAST(n_v AS HUGEINT) * mo.var_n * mo.n")} / 10000.0
+      "CAST(n_v AS HUGEINT) * mo.var_n * mo.n", "//")} / 10000.0
        |  END AS mean_y_adj,
-       |  ${sq4("mo.cov_n", "mo.var_n")} / 10000.0 AS theta,
+       |  ${sq4("mo.cov_n", "mo.var_n", "//")} / 10000.0 AS theta,
        |  CASE WHEN mo.var_n = 0 OR mo.vary_n = 0 THEN 0.0
        |       ELSE CAST((20000 * mo.cov_n * mo.cov_n + mo.var_n * mo.vary_n)
        |             // (2 * mo.var_n * mo.vary_n) AS BIGINT) / 10000.0
        |  END AS var_reduction
        |FROM per, mo ORDER BY variant""".stripMargin
-  }
 
   /** X144 core — per-variant exact quartiles off a (variant, uid, y)
     * frame. Type-1 order statistics (the value at rank ⌈q·n⌉ under
@@ -989,21 +1052,33 @@ object Extensions {
       .withColumn("k", count(lit(1)).over(wAll))
       .withColumn("n", sum(col("n_users")).over(wAll))
       .withColumn("so2", sum(expr("CAST(n_users AS DECIMAL(38,0)) * n_users")).over(wAll))
-      .withColumn("num", expr("CAST(k AS DECIMAL(38,0)) * so2 - CAST(n AS DECIMAL(38,0)) * n"))
+      .withColumn("num", srmNum)
       .select(
         col("variant").cast("long").as("variant"),
         col("n_users").cast("long").as("n_users"),
         expr("CAST((20000 * n_users + n) DIV (2 * n) AS BIGINT)")
           ./(lit(10000.0)).as("obs_share"),
         (lit(10000L) / col("k") / lit(10000.0)).as("exp_share"),
-        when(col("n") === 0, lit(0.0)).otherwise(
-          expr("CAST((20000 * num + CAST(n AS DECIMAL(38,0))) DIV (2 * CAST(n AS DECIMAL(38,0))) AS BIGINT)")
-            / lit(10000.0)).as("chi2"),
-        when(col("n") =!= 0 &&
-          expr("10000 * num > 108280 * CAST(n AS DECIMAL(38,0))"), 1L)
-          .otherwise(0L).as("srm_alarm"))
+        srmChi2.as("chi2"),
+        srmAlarm.as("srm_alarm"))
       .orderBy("variant")
   }
+
+  /** X145's χ² numerator num = k·Σo² − n² over (k, n, so2) columns,
+    * DECIMAL(38,0) — shared with the streaming `Gateway.srmFeed`, as
+    * are [[srmChi2]] and [[srmAlarm]] over `num`/`n`.
+    */
+  private[graft] def srmNum: Column =
+    expr("CAST(k AS DECIMAL(38,0)) * so2 - CAST(n AS DECIMAL(38,0)) * n")
+
+  /** χ² = num/n at 4 dp (num ≥ 0 by Cauchy–Schwarz), 0.0 for n = 0. */
+  private[graft] def srmChi2: Column =
+    expr(sq4("num", "CAST(n AS DECIMAL(38,0))")) / lit(10000.0)
+
+  /** The 0.001-level alarm 10⁴·num > 108280·n (χ² > 10.828, df = 1). */
+  private[graft] def srmAlarm: Column =
+    when(col("n") =!= 0 && expr("10000 * num > 108280 * CAST(n AS DECIMAL(38,0))"), 1L)
+      .otherwise(0L)
 
   /** X145 — sample-ratio mismatch guard (`q_srm`): the FIRST check an
     * experiment readout runs — before any effect estimate, verify the
@@ -1188,10 +1263,7 @@ object Extensions {
       .select(col("event_type"), col("day"),
         Hashing.h60(col("user_id").cast("string")).as("h"))
       .select(col("event_type"), col("day"),
-        expr("h DIV 4503599627370496").as("j"),
-        expr("h % 4503599627370496").as("w"))
-      .withColumn("rho",
-        when(col("w") === 0, lit(53L)).otherwise(lit(53L) - length(bin(col("w")))))
+        Hashing.hllBucket(col("h")).as("j"), Hashing.hllRank(col("h")).as("rho"))
       .groupBy(col("event_type"), col("day"), col("j"))
       .agg(max(col("rho")).as("mj"))
     val grid = e.select(col("event_type"), col("day")).distinct()

@@ -346,7 +346,7 @@ object Multimodal {
     * production shape for catching re-encodes, crops and re-uploads
     * that exact payload hashing (X43's distinct-payload count)
     * misses. The per-frame fingerprint is the frame's 32-bit value
-    * (width-configurable via [[mediaPrintSpace]]) — the pHash
+    * ([[printsOf]]) — the pHash
     * stand-in, deterministic and derivable by BOTH engines (a real
     * deploy swaps in pHash/dHash inside the same mapPartitions body;
     * nothing else changes, exactly the X12 decode contract). Per
@@ -373,24 +373,6 @@ object Multimodal {
     * joined back onto the collision-bounded pair table (the X5a
     * shape). No corpus all-pairs anywhere.
     */
-  /** Fingerprint width knob (VERDICT r18 #2): number of bits of the
-    * per-frame fingerprint kept, `spark.graft.media.printBits`,
-    * default 32 = the FULL frame value. The r17/r18 stand-in was the
-    * frame byte-sum mod 256 — 256 buckets, so the pair table was
-    * Θ(N²/256) by construction (843 M pair rows measured at 100×).
-    * At the default width a cross-video collision IS a shared frame,
-    * so pair volume tracks TRUE duplicates (linear in the planted/real
-    * dup rate), not corpus²; narrower widths re-create collision-rich
-    * banding for recall experiments. The DuckDB oracle states the
-    * DEFAULT width — running with a non-default knob is a declared
-    * experiment, not an oracle-checked configuration.
-    */
-  private[graft] def mediaPrintSpace(s: SparkSession): Long = {
-    val bits = s.conf.get("spark.graft.media.printBits", "32").toInt
-    require(bits >= 1 && bits <= 62, s"spark.graft.media.printBits out of range: $bits")
-    1L << bits
-  }
-
   /** X111's video corpus: the video slice of [[containers]] ∪ planted
     * re-encode copies — the dedup family's planted-truth pattern
     * (VERDICT r18 #2: with 2³²-wide prints, organic md5-frame
@@ -449,19 +431,17 @@ object Multimodal {
   /** The distinct per-video frame fingerprints — X111's inner table,
     * factored so the streaming admission filter
     * ([[graft.streaming.Gateway.mediaFeed]]) indexes EXACTLY the
-    * prints the batch pair join consumes. The fingerprint is the
-    * frame's big-endian value mod [[mediaPrintSpace]] — identity at
-    * the default 32-bit width (a real deploy swaps in pHash/dHash
-    * inside the same mapPartitions body; nothing else changes).
+    * prints the batch pair join consumes ([[printsOf]]; a real deploy
+    * swaps in pHash/dHash inside the same mapPartitions body; nothing
+    * else changes).
     */
   private[graft] def framePrints(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val space = mediaPrintSpace(s)
     videoContainers(s, dir)
       .select(col("container")).as[Array[Byte]]
       .mapPartitions { it =>
         it.flatMap { bytes =>
-          val (docId, prints) = printsOf(bytes, space)
+          val (docId, prints) = printsOf(bytes)
           prints.map(p => (docId, p))
         }
       }
@@ -477,15 +457,18 @@ object Multimodal {
       .groupBy(col("doc_id").as("idx_doc"))
       .agg(sort_array(collect_set(col("phash"))).as("idx_prints"))
 
-  /** The per-frame fingerprint of one decoded container — shared by
-    * the batch path above and the streaming decode. Frame value =
-    * big-endian positional byte value, reduced mod `space`.
+  /** The per-frame fingerprints of one decoded container — shared by
+    * the batch path above and the streaming decode. A fingerprint is
+    * the frame's big-endian value mod 2³², the FULL value of a 4-byte
+    * frame (VERDICT r18 #2: the r17/r18 byte-sum mod 256 made the pair
+    * table Θ(N²/256), 843 M pair rows at 100×). At full width a
+    * cross-video collision IS a shared frame, so pair volume tracks
+    * true duplicates, and the DuckDB oracle states this width.
     */
-  private[graft] def printsOf(
-      bytes: Array[Byte], space: Long = 1L << 32): (Long, Seq[Long]) = {
+  private[graft] def printsOf(bytes: Array[Byte]): (Long, Seq[Long]) = {
     val d = MediaCodec.decode(bytes)
     d.docId -> MediaCodec.sampleFrames(d.payload, frameBytes)
-      .map(f => f.foldLeft(0L)((acc, b) => (acc << 8) | (b & 0xFF)) % space)
+      .map(f => f.foldLeft(0L)((acc, b) => (acc << 8) | (b & 0xFF)) % (1L << 32))
       .distinct.sorted
   }
 

@@ -84,29 +84,40 @@ object Shuffle {
       .filter(col("c") === col("max_cnt"))
       .groupBy(col("n_rows"), col("n_keys"), col("max_cnt"))
       .agg(min(col("k")).as("hot_key"))
-      .withColumn("q4", expr(
-        """CAST((CAST(max_cnt AS DECIMAL(38,0)) * n_keys * 20000
-          |       + CAST(n_rows AS DECIMAL(38,0)))
-          |  DIV (2 * CAST(n_rows AS DECIMAL(38,0))) AS BIGINT)""".stripMargin))
       .select(
         lit(label).as("key_name"),
         col("n_rows").cast("long").as("n_rows"),
         col("n_keys").cast("long").as("n_keys"),
         col("max_cnt").cast("long").as("max_cnt"),
         col("hot_key"),
-        (col("q4") / lit(10000.0)).as("skew_ratio"),
-        expr(
-          s"""CAST(CASE WHEN CAST(max_cnt AS DECIMAL(38,0)) * n_keys
-             |         > $skewThreshold * CAST(n_rows AS DECIMAL(38,0))
-             |    THEN 1 ELSE 0 END AS BIGINT)""".stripMargin).as("is_skewed"),
-        expr(
-          s"""CAST(CASE WHEN CAST(max_cnt AS DECIMAL(38,0)) * n_keys
-             |         > $skewThreshold * CAST(n_rows AS DECIMAL(38,0))
-             |    THEN (CAST(max_cnt AS DECIMAL(38,0)) * n_keys
-             |          + CAST(n_rows AS DECIMAL(38,0)) - 1)
-             |         DIV CAST(n_rows AS DECIMAL(38,0))
-             |    ELSE 1 END AS BIGINT)""".stripMargin).as("salt_n"))
+        skewRatio.as("skew_ratio"),
+        skewVerdict(skewThreshold).as("is_skewed"),
+        skewSalt(skewThreshold).as("salt_n"))
   }
+
+  /** X128's skew algebra over (n_rows, n_keys, max_cnt) columns,
+    * shared with the streaming `Gateway.skewFeed`: the exact max/avg
+    * ratio max_cnt·n_keys/n_rows at 4 dp, in DECIMAL(38,0).
+    */
+  private[graft] def skewRatio: Column = expr(
+    """CAST((CAST(max_cnt AS DECIMAL(38,0)) * n_keys * 20000
+      |       + CAST(n_rows AS DECIMAL(38,0)))
+      |  DIV (2 * CAST(n_rows AS DECIMAL(38,0))) AS BIGINT)""".stripMargin) / lit(10000.0)
+
+  private def skewed(threshold: Long): String =
+    s"CAST(max_cnt AS DECIMAL(38,0)) * n_keys > $threshold * CAST(n_rows AS DECIMAL(38,0))"
+
+  /** 1 when max/avg exceeds `threshold`, by integer cross-multiply. */
+  private[graft] def skewVerdict(threshold: Long): Column =
+    expr(s"CAST(CASE WHEN ${skewed(threshold)} THEN 1 ELSE 0 END AS BIGINT)")
+
+  /** The salt factor ceil(max/avg) a skewed key needs; 1 otherwise. */
+  private[graft] def skewSalt(threshold: Long): Column = expr(
+    s"""CAST(CASE WHEN ${skewed(threshold)}
+       |    THEN (CAST(max_cnt AS DECIMAL(38,0)) * n_keys
+       |          + CAST(n_rows AS DECIMAL(38,0)) - 1)
+       |         DIV CAST(n_rows AS DECIMAL(38,0))
+       |    ELSE 1 END AS BIGINT)""".stripMargin)
 
   /** X128 — shuffle-key skew audit (`q_key_skew`): the pre-flight
     * check a planner runs before committing a 100 TB shuffle. Per

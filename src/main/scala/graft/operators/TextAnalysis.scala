@@ -96,15 +96,16 @@ object TextAnalysis {
         .otherwise(lit(0L))).as("fn"),
       sum(when(col("truth") === "other" && col("pred") === "other", col("c"))
         .otherwise(lit(0L))).as("tn"))
-    def r4(num: String, den: String): org.apache.spark.sql.Column =
-      when(expr(den) === 0, lit(0.0)).otherwise(
-        expr(s"CAST((20000 * ($num) + ($den)) DIV (2 * ($den)) AS BIGINT)") / lit(10000.0))
+    val metrics = Seq(
+      "accuracy" -> ("tp + tn", "tp + fp + fn + tn"),
+      "precision_en" -> ("tp", "tp + fp"),
+      "recall_en" -> ("tp", "tp + fn"),
+      "f1_en" -> ("2 * tp", "2 * tp + fp + fn"))
     grid.crossJoin(broadcast(m))
-      .select(col("truth"), col("pred"), col("c").cast("long").as("n"),
-        r4("tp + tn", "tp + fp + fn + tn").as("accuracy"),
-        r4("tp", "tp + fp").as("precision_en"),
-        r4("tp", "tp + fn").as("recall_en"),
-        r4("2 * tp", "2 * tp + fp + fn").as("f1_en"))
+      .select(Seq(col("truth"), col("pred"), col("c").cast("long").as("n")) ++
+        metrics.map { case (name, (num, den)) =>
+          (expr(Extensions.sq4(num, den)) / lit(10000.0)).as(name)
+        }: _*)
       .orderBy("truth", "pred")
   }
 
@@ -1984,20 +1985,22 @@ object TextAnalysis {
     * SHARED domain both the sketch and the exact audit count: word
     * 2-grams, the same grain X5a shingles for near-dup candidates.
     * Factored so the spec and the streaming dial reuse the exact
-    * expression.
+    * expression; `carry` columns (the dial's event time) ride ahead
+    * of (source, tok).
     */
-  private[graft] def hllBigrams(docsDf: DataFrame): DataFrame =
+  private[graft] def hllBigrams(docsDf: DataFrame, carry: String*): DataFrame =
     docsDf
       .withColumn("w", split(col("text"), " "))
       // Total-guard (ADVICE r18): size(w)=1 makes sequence(1, 0) the
-      // DESCENDING [1, 0] and element_at(w, 0) throws — while the
-      // oracle's generate_series(1, 0) is empty. Guarding keeps both
-      // engines agreeing that a <2-word doc contributes zero bigrams.
-      .select(col("source"), explode(expr(
+      // DESCENDING [1, 0] and element_at(w, 0) throws (one short line
+      // would kill a streaming query) — while the oracle's
+      // generate_series(1, 0) is empty. Guarding keeps both engines
+      // agreeing that a <2-word doc contributes zero bigrams.
+      .select(carry.map(col) ++ Seq(col("source"), explode(expr(
         "CASE WHEN size(w) >= 2 THEN transform(sequence(1, size(w) - 1), " +
           "i -> concat(element_at(w, i), ' ', element_at(w, i + 1))) " +
           "ELSE CAST(array() AS ARRAY<STRING>) END"))
-        .as("tok"))
+        .as("tok")): _*)
 
   /** X157 declarative register twin: per (key, bucket) the max rank,
     * computed as plain relational algebra — the parity reference
@@ -2011,11 +2014,7 @@ object TextAnalysis {
     toks
       .select(col("source"), Hashing.h60(col("tok")).as("h"))
       .select(col("source"),
-        expr("h DIV 4503599627370496").as("j"),
-        expr("h % 4503599627370496").as("w"))
-      .withColumn("rho",
-        when(col("w") === 0, lit(53L))
-          .otherwise(lit(53L) - length(bin(col("w")))))
+        Hashing.hllBucket(col("h")).as("j"), Hashing.hllRank(col("h")).as("rho"))
       .groupBy(col("source"), col("j"))
       .agg(max(col("rho")).as("mj"))
 

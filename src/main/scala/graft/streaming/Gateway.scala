@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.FrameCodec
+import graft.operators.{Dedup, Extensions, FrameCodec, Hashing, Shuffle}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
@@ -350,9 +350,9 @@ object Gateway {
   }
 
   /** The north-star composition as ONE streaming pipeline: a document
-    * FEED through the gateway machinery — parse the feed line
-    * `"<epoch-seconds> <doc_id> <text…>"` (the document analog of the
-    * socket frame dialect), run the X35 curation verdict as the
+    * FEED through the gateway machinery — parse the document feed
+    * line (the document analog of the socket frame dialect), run the
+    * X35 curation verdict as the
     * admission gate (stateless narrow, so the batch projection runs
     * unchanged under the streaming engine —
     * [[graft.operators.Curation.withGateVerdicts]], CurationSpec pins
@@ -370,14 +370,7 @@ object Gateway {
       lines: DataFrame,
       windowDuration: String = "10 seconds",
       watermarkDelay: String = "30 seconds"): DataFrame = {
-    val parsed = lines
-      .select(split(col("value"), " ", 3).as("p"))
-      .filter(size(col("p")) === 3 && col("p").getItem(0).cast("long").isNotNull &&
-        col("p").getItem(1).cast("long").isNotNull)
-      .select(
-        timestamp_seconds(col("p").getItem(0).cast("long")).as("ts"),
-        col("p").getItem(1).cast("long").as("doc_id"),
-        col("p").getItem(2).as("text"))
+    val parsed = FeedLine.parse(lines, "doc_id:long text")
       // watermark declared on the parsed feed — but note Catalyst
       // pushes the stateless gate predicate BELOW the watermark node,
       // so event-time progress effectively tracks ADMITTED rows: a
@@ -437,14 +430,7 @@ object Gateway {
     require(refGrid.nonEmpty && refGrid.size == refCum.size,
       "reference grid and cumulative counts must align")
     require(refGrid == refGrid.sorted && nRef > 0, "reference grid must be ascending and non-empty")
-    val parsed = lines
-      .select(split(col("value"), " ", 3).as("p"))
-      .filter(size(col("p")) === 3 && col("p").getItem(0).cast("long").isNotNull &&
-        col("p").getItem(2).cast("double").isNotNull)
-      .select(
-        timestamp_seconds(col("p").getItem(0).cast("long")).as("ts"),
-        col("p").getItem(1).as("event_type"),
-        col("p").getItem(2).cast("double").as("value"))
+    val parsed = FeedLine.parse(lines, "event_type value:double")
       .withWatermark("ts", watermarkDelay)
     val bMax = refGrid.size - 1
     val idx = least(
@@ -494,18 +480,10 @@ object Gateway {
     * R27 [[graft.operators.Relational]] `q_debounce` is the
     * gap-based relational analog; this is the key-identity variant).
     */
-  def dedupExactFeed(lines: DataFrame, watermarkDelay: String = "30 seconds"): DataFrame = {
-    lines
-      .select(split(col("value"), " ", 3).as("p"))
-      .filter(size(col("p")) === 3 && col("p").getItem(0).cast("long").isNotNull &&
-        col("p").getItem(2).cast("double").isNotNull)
-      .select(
-        timestamp_seconds(col("p").getItem(0).cast("long")).as("ts"),
-        col("p").getItem(1).as("event_type"),
-        col("p").getItem(2).cast("double").as("reading"))
+  def dedupExactFeed(lines: DataFrame, watermarkDelay: String = "30 seconds"): DataFrame =
+    FeedLine.parse(lines, "event_type reading:double")
       .withWatermark("ts", watermarkDelay)
       .dropDuplicatesWithinWatermark("event_type", "reading")
-  }
 
   /** Streaming X22 — windowed heavy-hitter monitor (`hitterFeed`):
     * the [[graft.functions.MisraGries]] `TypedImperativeAggregate`
@@ -531,13 +509,7 @@ object Gateway {
       capacity: Int = 16,
       windowDuration: String = "10 seconds",
       watermarkDelay: String = "30 seconds"): DataFrame = {
-    val parsed = lines
-      .select(split(col("value"), " ", 3).as("p"))
-      .filter(size(col("p")) === 3 && col("p").getItem(0).cast("long").isNotNull &&
-        col("p").getItem(1).cast("long").isNotNull)
-      .select(
-        timestamp_seconds(col("p").getItem(0).cast("long")).as("ts"),
-        col("p").getItem(2).as("text"))
+    val parsed = FeedLine.parse(lines, "doc_id:long text")
       .withWatermark("ts", watermarkDelay)
     parsed
       .select(col("ts"), explode(split(col("text"), " ")).as("tok"))
@@ -569,9 +541,9 @@ object Gateway {
     * `window_time` and collapses the count dictionary to the 1-row
     * audit. Hot-key tie-break is MIN key among max-count ties, carried
     * as `min(struct(-count, key))` — order-free, so micro-batch
-    * boundaries cannot move it; ratio/verdict/salt are the identical
-    * DECIMAL(38,0) integer forms of the batch `keySkewOf`
-    * (GatewaySpec pins stream ≡ batch ≡ sequential recount, with the
+    * boundaries cannot move it; ratio/verdict/salt are the batch
+    * `keySkewOf`'s own DECIMAL(38,0) definitions
+    * ([[graft.operators.Shuffle.skewRatio]]; GatewaySpec pins stream ≡ batch ≡ sequential recount, with the
     * fired branch driven by a hot-key window in the same feed).
     */
   def skewFeed(
@@ -579,12 +551,7 @@ object Gateway {
       skewThreshold: Long = 4L,
       windowDuration: String = "10 seconds",
       watermarkDelay: String = "30 seconds"): DataFrame = {
-    val parsed = lines
-      .select(split(col("value"), " ", 3).as("p"))
-      .filter(size(col("p")) === 3 && col("p").getItem(0).cast("long").isNotNull)
-      .select(
-        timestamp_seconds(col("p").getItem(0).cast("long")).as("ts"),
-        col("p").getItem(1).as("k"))
+    val parsed = FeedLine.parse(lines, "k rest")
       .withWatermark("ts", watermarkDelay)
     val perKey = parsed
       .groupBy(window(col("ts"), windowDuration), col("k"))
@@ -602,22 +569,9 @@ object Gateway {
         col("n_keys").cast("long").as("n_keys"),
         col("max_cnt").cast("long").as("max_cnt"),
         col("hot").getField("hk").as("hot_key"),
-        (expr(
-          """CAST((CAST(max_cnt AS DECIMAL(38,0)) * n_keys * 20000
-            |       + CAST(n_rows AS DECIMAL(38,0)))
-            |  DIV (2 * CAST(n_rows AS DECIMAL(38,0))) AS BIGINT)""".stripMargin)
-          / lit(10000.0)).as("skew_ratio"),
-        expr(
-          s"""CAST(CASE WHEN CAST(max_cnt AS DECIMAL(38,0)) * n_keys
-             |         > $skewThreshold * CAST(n_rows AS DECIMAL(38,0))
-             |    THEN 1 ELSE 0 END AS BIGINT)""".stripMargin).as("is_skewed"),
-        expr(
-          s"""CAST(CASE WHEN CAST(max_cnt AS DECIMAL(38,0)) * n_keys
-             |         > $skewThreshold * CAST(n_rows AS DECIMAL(38,0))
-             |    THEN (CAST(max_cnt AS DECIMAL(38,0)) * n_keys
-             |          + CAST(n_rows AS DECIMAL(38,0)) - 1)
-             |         DIV CAST(n_rows AS DECIMAL(38,0))
-             |    ELSE 1 END AS BIGINT)""".stripMargin).as("salt_n"))
+        Shuffle.skewRatio.as("skew_ratio"),
+        Shuffle.skewVerdict(skewThreshold).as("is_skewed"),
+        Shuffle.skewSalt(skewThreshold).as("salt_n"))
   }
 
   /** Streaming X145 — windowed sample-ratio-mismatch guard
@@ -626,9 +580,7 @@ object Gateway {
     * assignment-logging bug) invalidates the whole experiment, and
     * every hour it runs undetected is an hour of corrupted data, so
     * the offline X145 gate becomes a per-window alarm on the ingest
-    * path. Lines are `epoch_sec variant user_id [y]` — the
-    * assignment-log shape the experimentation quartet shares (the
-    * trailing metric token is ignored here).
+    * path, on the assignment log the experimentation quartet shares.
     *
     * Execution is the [[skewFeed]] chained-windowed-aggregation
     * pattern one level deeper — THREE stateful aggregates in append
@@ -647,16 +599,7 @@ object Gateway {
       lines: DataFrame,
       windowDuration: String = "10 seconds",
       watermarkDelay: String = "30 seconds"): DataFrame = {
-    val parsed = lines
-      .select(split(col("value"), " ", 4).as("p"))
-      .filter(size(col("p")) >= 3 &&
-        col("p").getItem(0).cast("long").isNotNull &&
-        col("p").getItem(1).cast("long").isNotNull &&
-        col("p").getItem(2).cast("long").isNotNull)
-      .select(
-        timestamp_seconds(col("p").getItem(0).cast("long")).as("ts"),
-        col("p").getItem(1).cast("long").as("variant"),
-        col("p").getItem(2).cast("long").as("user_id"))
+    val parsed = FeedLine.parse(lines, "variant:long user_id:long [y]")
       .withWatermark("ts", watermarkDelay)
     val perUser = parsed
       .groupBy(window(col("ts"), windowDuration), col("variant"), col("user_id"))
@@ -670,17 +613,13 @@ object Gateway {
         count(lit(1)).as("k"),
         sum(col("n_users")).as("n"),
         sum(expr("CAST(n_users AS DECIMAL(38,0)) * n_users")).as("so2"))
-      .withColumn("num", expr("CAST(k AS DECIMAL(38,0)) * so2 - CAST(n AS DECIMAL(38,0)) * n"))
+      .withColumn("num", Extensions.srmNum)
       .select(
         col("window.start").as("window_start"),
         col("k").cast("long").as("n_variants"),
         col("n").cast("long").as("n_users"),
-        when(col("n") === 0, lit(0.0)).otherwise(
-          expr("CAST((20000 * num + CAST(n AS DECIMAL(38,0))) DIV (2 * CAST(n AS DECIMAL(38,0))) AS BIGINT)")
-            / lit(10000.0)).as("chi2"),
-        when(col("n") =!= 0 &&
-          expr("10000 * num > 108280 * CAST(n AS DECIMAL(38,0))"), 1L)
-          .otherwise(0L).as("srm_alarm"))
+        Extensions.srmChi2.as("chi2"),
+        Extensions.srmAlarm.as("srm_alarm"))
   }
 
   /** Streaming X141 — windowed A/B readout (`abFeed`): the live
@@ -690,9 +629,8 @@ object Gateway {
     * χ² = n·(ad−bc)²/((a+b)(c+d)(a+c)(b+d)) and the 0.05-level
     * verdict by the same 38415 integer cross-multiply as the offline
     * [[graft.operators.Extensions.abTestOf]] — so the live dial and
-    * the offline readout can never disagree on a digit. Lines are
-    * the quartet's `epoch_sec variant user_id y` shape (y = 0/1
-    * conversion event); a user converts in a window if ANY of their
+    * the offline readout can never disagree on a digit. y is a 0/1
+    * conversion event; a user converts in a window if ANY of their
     * events converted (`max(y)` — delivery-order-free).
     *
     * Same three-stage chained-windowed-aggregation shape as
@@ -727,18 +665,7 @@ object Gateway {
       lines: DataFrame,
       windowDuration: String = "10 seconds",
       watermarkDelay: String = "30 seconds"): DataFrame = {
-    val parsed = lines
-      .select(split(col("value"), " ", 5).as("p"))
-      .filter(size(col("p")) >= 4 &&
-        col("p").getItem(0).cast("long").isNotNull &&
-        col("p").getItem(1).cast("long").isNotNull &&
-        col("p").getItem(2).cast("long").isNotNull &&
-        col("p").getItem(3).cast("long").isNotNull)
-      .select(
-        timestamp_seconds(col("p").getItem(0).cast("long")).as("ts"),
-        col("p").getItem(1).cast("long").as("variant"),
-        col("p").getItem(2).cast("long").as("user_id"),
-        col("p").getItem(3).cast("long").as("y"))
+    val parsed = FeedLine.parse(lines, "variant:long user_id:long y:long [rest]")
       .withWatermark("ts", watermarkDelay)
     val perUser = parsed
       .groupBy(window(col("ts"), windowDuration), col("variant"), col("user_id"))
@@ -748,11 +675,7 @@ object Gateway {
       .agg(count(lit(1)).as("n_users"), sum(col("converted")).as("n_conv"))
     abVerdict(cells
       .groupBy(window(window_time(col("window")), windowDuration))
-      .agg(
-        sum(when(col("variant") === 0, col("n_conv")).otherwise(0L)).as("a"),
-        sum(when(col("variant") === 0, col("n_users") - col("n_conv")).otherwise(0L)).as("b"),
-        sum(when(col("variant") === 1, col("n_conv")).otherwise(0L)).as("c"),
-        sum(when(col("variant") === 1, col("n_users") - col("n_conv")).otherwise(0L)).as("d")))
+      .agg(Extensions.abCells.head, Extensions.abCells.tail: _*))
   }
 
   /** [[abFeed]]'s post-fold verdict algebra over a (window, a, b, c,
@@ -763,40 +686,16 @@ object Gateway {
     * so the spec drives the identical expressions with forged cells
     * (the same pattern as factoring qteOf for hand-ranked fixtures).
     */
-  private[graft] def abVerdict(folded: DataFrame): DataFrame = {
+  private[graft] def abVerdict(folded: DataFrame): DataFrame =
     folded
-      .withColumn("n", col("a") + col("b") + col("c") + col("d"))
-      .withColumn("num", expr(
-        """CAST(n AS DECIMAL(38,0)) *
-          |(CAST(a AS DECIMAL(38,0)) * d - CAST(b AS DECIMAL(38,0)) * c) *
-          |(CAST(a AS DECIMAL(38,0)) * d - CAST(b AS DECIMAL(38,0)) * c)""".stripMargin))
-      .withColumn("den", expr(
-        """(CAST(a AS DECIMAL(38,0)) + b) * (CAST(c AS DECIMAL(38,0)) + d)
-          |* (CAST(a AS DECIMAL(38,0)) + c) * (CAST(b AS DECIMAL(38,0)) + d)"""
-          .stripMargin))
-      .withColumn("r0", when(col("a") + col("b") === 0, lit(0L)).otherwise(
-        expr("CAST((20000 * a + (a + b)) DIV (2 * (a + b)) AS BIGINT)")))
-      .withColumn("r1", when(col("c") + col("d") === 0, lit(0L)).otherwise(
-        expr("CAST((20000 * c + (c + d)) DIV (2 * (c + d)) AS BIGINT)")))
-      // the SCALED verdict/χ² intermediates named as columns so the
-      // overflow guard can test THEM for NULL (the cupedFeed
-      // adj0_i/theta_i pattern): 10000·num, 38415·den and
-      // 20000·num + den need ~4 more digits than num/den themselves,
-      // so around 1e7–7e7 users/window they can overflow while
-      // num/den still fit — a guard keyed on num/den alone read that
-      // corner as a confident significant = 0 with overflow = 0
-      // (r18 ADVICE; only chi2 going NULL hinted at it)
-      .withColumn("chi2_i",
-        when(col("num").isNull || col("den").isNull, lit(null).cast("long"))
-          .when(col("den") === 0, lit(0L))
-          .otherwise(expr("CAST((20000 * num + den) DIV (2 * den) AS BIGINT)")))
-      .withColumn("sig_lhs", expr("10000 * num"))
-      .withColumn("sig_rhs", expr("38415 * den"))
-      .withColumn("sig_i",
-        when(col("sig_lhs").isNull || col("sig_rhs").isNull || col("chi2_i").isNull,
-          lit(null).cast("long"))
-          .when(col("den") === 0, lit(0L))
-          .otherwise(when(col("sig_lhs") > col("sig_rhs"), 1L).otherwise(0L)))
+      .withColumn("num", Extensions.abNum)
+      .withColumn("den", Extensions.abDen)
+      .withColumn("r0", expr(Extensions.sq4("a", "a + b")))
+      .withColumn("r1", expr(Extensions.sq4("c", "c + d")))
+      // the only NULL source is decimal overflow (a..d are non-null
+      // longs); abSignificant already NULLs on its scaled intermediates
+      .withColumn("chi2_i", Extensions.abChi2)
+      .withColumn("sig_i", Extensions.abSignificant)
       .select(
         col("window.start").as("window_start"),
         (col("a") + col("b")).cast("long").as("users_0"),
@@ -810,7 +709,6 @@ object Gateway {
         col("sig_i").as("significant"),
         when(col("sig_i").isNull || col("chi2_i").isNull, 1L).otherwise(0L)
           .as("overflow"))
-  }
 
   /** Streaming X142 — windowed CUPED readout (`cupedFeed`): the
     * variance-reduced live dashboard — per event-time window, the
@@ -820,12 +718,11 @@ object Gateway {
     * exact-rational DECIMAL(38,0) form of the offline
     * [[graft.operators.Extensions.cupedOf]] (signed 4dp HALF_UP;
     * var = 0 degenerates to the raw mean / θ = 0 in the same CASE).
-    * Lines are `epoch_sec variant user_id x y` — x the user's
-    * static pre-period covariate (the assignment log ships it with
-    * every event, the production shape), y the per-event outcome
-    * increment; per window a user's covariate is `max(x)`
-    * (delivery-order-free on a static value) and their outcome
-    * `sum(y)`.
+    * x is the user's static pre-period covariate (the assignment log
+    * ships it with every event, the production shape), y the
+    * per-event outcome increment; per window a user's covariate is
+    * `max(x)` (delivery-order-free on a static value) and their
+    * outcome `sum(y)`.
     *
     * Same three-stage chained-windowed-aggregation shape as
     * [[srmFeed]]/[[abFeed]] — the second stage also folds the
@@ -860,20 +757,7 @@ object Gateway {
       lines: DataFrame,
       windowDuration: String = "10 seconds",
       watermarkDelay: String = "30 seconds"): DataFrame = {
-    val parsed = lines
-      .select(split(col("value"), " ", 6).as("p"))
-      .filter(size(col("p")) >= 5 &&
-        col("p").getItem(0).cast("long").isNotNull &&
-        col("p").getItem(1).cast("long").isNotNull &&
-        col("p").getItem(2).cast("long").isNotNull &&
-        col("p").getItem(3).cast("long").isNotNull &&
-        col("p").getItem(4).cast("long").isNotNull)
-      .select(
-        timestamp_seconds(col("p").getItem(0).cast("long")).as("ts"),
-        col("p").getItem(1).cast("long").as("variant"),
-        col("p").getItem(2).cast("long").as("user_id"),
-        col("p").getItem(3).cast("long").as("x"),
-        col("p").getItem(4).cast("long").as("y"))
+    val parsed = FeedLine.parse(lines, "variant:long user_id:long x:long y:long [rest]")
       .withWatermark("ts", watermarkDelay)
     val perUser = parsed
       .groupBy(window(col("ts"), windowDuration), col("variant"), col("user_id"))
@@ -892,24 +776,6 @@ object Gateway {
         sum(expr("CAST(x AS DECIMAL(38,0)) * x")).as("sxx_v"),
         sum(expr("CAST(x AS DECIMAL(38,0)) * y")).as("sxy_v"),
         sum(expr("y * y")).as("syy_v"))
-    def sq4(num: String, den: String): String =
-      s"""CAST(CASE WHEN $den = 0 THEN 0
-         |ELSE (CASE WHEN $num < 0 THEN -1 ELSE 1 END)
-         |     * ((abs($num) * 20000 + $den) DIV (2 * ($den))) END AS BIGINT)"""
-        .stripMargin
-    // raw/adjusted mean for one variant, the cupedOf forms verbatim:
-    // adj = (sy_v·var_n·n − cov_n·(sx_v·n − sx·n_v)) / (n_v·var_n·n),
-    // degenerating to the raw mean when var_n = 0 and to 0 when the
-    // variant is absent from the window (n_v = 0).
-    def meanRaw(v: Int): String =
-      s"CASE WHEN n_$v = 0 THEN 0 ELSE CAST((20000 * sy_$v + n_$v) DIV (2 * n_$v) AS BIGINT) END"
-    def meanAdj(v: Int): String =
-      s"""CASE WHEN n_$v = 0 THEN 0
-         |WHEN var_n = 0 THEN CAST((20000 * sy_$v + n_$v) DIV (2 * n_$v) AS BIGINT)
-         |ELSE ${sq4(
-          s"(CAST(sy_$v AS DECIMAL(38,0)) * var_n * n" +
-            s" - cov_n * (CAST(sx_$v AS DECIMAL(38,0)) * n - CAST(sx AS DECIMAL(38,0)) * n_$v))",
-          s"(CAST(n_$v AS DECIMAL(38,0)) * var_n * n)")} END""".stripMargin
     cells
       .groupBy(window(window_time(col("window")), windowDuration))
       .agg(
@@ -923,33 +789,22 @@ object Gateway {
         sum(when(col("variant") === 1, col("n_v")).otherwise(0L)).as("n_1"),
         sum(when(col("variant") === 1, col("sx_v")).otherwise(0L)).as("sx_1"),
         sum(when(col("variant") === 1, col("sy_v")).otherwise(0L)).as("sy_1"))
-      .withColumn("cov_n", expr("CAST(n AS DECIMAL(38,0)) * sxy - CAST(sx AS DECIMAL(38,0)) * sy"))
-      .withColumn("var_n", expr("CAST(n AS DECIMAL(38,0)) * sxx - CAST(sx AS DECIMAL(38,0)) * sx"))
-      .withColumn("vary_n", expr("CAST(n AS DECIMAL(38,0)) * syy - CAST(sy AS DECIMAL(38,0)) * sy"))
+      .withColumn("cov_n", Extensions.cupedCovN)
+      .withColumn("var_n", Extensions.cupedVarN)
+      .withColumn("vary_n", Extensions.cupedVaryN)
       // 4dp integer intermediates named once so the overflow guard can
       // test THEM for NULL — the only NULL source here is decimal
       // overflow (every count/sum input is a non-null long)
-      .withColumn("adj0_i", expr(meanAdj(0)))
-      .withColumn("adj1_i", expr(meanAdj(1)))
-      .withColumn("theta_i", expr(sq4("cov_n", "var_n")))
-      .withColumn("vr_i",
-        // NULL must short-circuit BEFORE the 0-arm: NULL OR TRUE is
-        // TRUE, so an overflowed var_n paired with vary_n = 0 would
-        // otherwise read var_reduction = 0.0 on a row whose overflow
-        // flag is 1 — the silent-zero class the contract bans
-        // (r18 ADVICE)
-        when(col("var_n").isNull || col("vary_n").isNull,
-          lit(null).cast("long"))
-          .when(col("var_n") === 0 || col("vary_n") === 0, lit(0L))
-          .otherwise(expr(
-            """CAST((20000 * cov_n * cov_n + var_n * vary_n)
-              |  DIV (2 * var_n * vary_n) AS BIGINT)""".stripMargin)))
+      .withColumn("adj0_i", Extensions.cupedMeanAdj("0"))
+      .withColumn("adj1_i", Extensions.cupedMeanAdj("1"))
+      .withColumn("theta_i", Extensions.cupedTheta)
+      .withColumn("vr_i", Extensions.cupedVarReduction)
       .select(
         col("window.start").as("window_start"),
         col("n_0").cast("long").as("users_0"),
         col("n_1").cast("long").as("users_1"),
-        (expr(meanRaw(0)) / lit(10000.0)).as("mean_0"),
-        (expr(meanRaw(1)) / lit(10000.0)).as("mean_1"),
+        (Extensions.cupedMean("0") / lit(10000.0)).as("mean_0"),
+        (Extensions.cupedMean("1") / lit(10000.0)).as("mean_1"),
         (col("adj0_i") / lit(10000.0)).as("mean_adj_0"),
         (col("adj1_i") / lit(10000.0)).as("mean_adj_1"),
         (col("theta_i") / lit(10000.0)).as("theta"),
@@ -966,8 +821,7 @@ object Gateway {
     * per-user outcome and the median gap, the same order statistics
     * as the offline [[graft.operators.Extensions.qteOf]] (positions
     * (n+3)÷4, (n+1)÷2, (3n+3)÷4 — integers, no interpolation, so no
-    * float can move a digit). Lines are the quartet's
-    * `epoch_sec variant user_id y` shape.
+    * float can move a digit).
     *
     * Execution: the [[srmFeed]] three-stage chain with a HISTOGRAM
     * second stage — (1) per-(window, variant, user) outcome sums;
@@ -986,18 +840,7 @@ object Gateway {
       lines: DataFrame,
       windowDuration: String = "10 seconds",
       watermarkDelay: String = "30 seconds"): DataFrame = {
-    val parsed = lines
-      .select(split(col("value"), " ", 5).as("p"))
-      .filter(size(col("p")) >= 4 &&
-        col("p").getItem(0).cast("long").isNotNull &&
-        col("p").getItem(1).cast("long").isNotNull &&
-        col("p").getItem(2).cast("long").isNotNull &&
-        col("p").getItem(3).cast("long").isNotNull)
-      .select(
-        timestamp_seconds(col("p").getItem(0).cast("long")).as("ts"),
-        col("p").getItem(1).cast("long").as("variant"),
-        col("p").getItem(2).cast("long").as("user_id"),
-        col("p").getItem(3).cast("long").as("y"))
+    val parsed = FeedLine.parse(lines, "variant:long user_id:long y:long [rest]")
       .withWatermark("ts", watermarkDelay)
     val perUser = parsed
       .groupBy(window(col("ts"), windowDuration), col("variant"), col("user_id"))
@@ -1054,8 +897,6 @@ object Gateway {
     * .clfCalibration]] math on that window's slice (exact-rational
     * p6 squash, per-bin 4dp HALF_UP means, ECE folded from ROUNDED
     * bin gaps), so the dial and the audit can never disagree.
-    * Lines are the [[admitFeed]] document shape
-    * (`epoch_sec doc_id text`).
     *
     * Execution: both gates are stateless in-row column work (the
     * [[admitFeed]] precedent); the only state is the skewFeed
@@ -1068,14 +909,7 @@ object Gateway {
       lines: DataFrame,
       windowDuration: String = "10 seconds",
       watermarkDelay: String = "30 seconds"): DataFrame = {
-    val parsed = lines
-      .select(split(col("value"), " ", 3).as("p"))
-      .filter(size(col("p")) === 3 && col("p").getItem(0).cast("long").isNotNull &&
-        col("p").getItem(1).cast("long").isNotNull)
-      .select(
-        timestamp_seconds(col("p").getItem(0).cast("long")).as("ts"),
-        col("p").getItem(1).cast("long").as("doc_id"),
-        col("p").getItem(2).as("text"))
+    val parsed = FeedLine.parse(lines, "doc_id:long text")
       .withWatermark("ts", watermarkDelay)
     val scored = graft.operators.Curation.withRuleFlags(
       graft.operators.Curation.withClfColumns(parsed))
@@ -1109,8 +943,7 @@ object Gateway {
     * (`watermarkFeed`): the green-list screen as an ingest dial —
     * a crawl whose watermark-flag rate jumps off the ~2.3% null tail
     * is suddenly full of machine-generated text (or re-crawling one
-    * generator's output), and that is a THIS-WINDOW question. Lines
-    * are the admission shape (`epoch_sec doc_id text`); per
+    * generator's output), and that is a THIS-WINDOW question. Per
     * event-time window one audit row: docs, flagged docs (the
     * IDENTICAL integer-exact (2g−n)² ≥ 4n verdict as the batch
     * X154), the 4dp flag share, and the mean z — each per-doc z
@@ -1125,13 +958,8 @@ object Gateway {
       lines: DataFrame,
       windowDuration: String = "10 seconds",
       watermarkDelay: String = "30 seconds"): DataFrame = {
-    val parsed = lines
-      .select(split(col("value"), " ", 3).as("p"))
-      .filter(size(col("p")) === 3 && col("p").getItem(0).cast("long").isNotNull &&
-        col("p").getItem(1).cast("long").isNotNull)
-      .select(
-        timestamp_seconds(col("p").getItem(0).cast("long")).as("ts"),
-        split(col("p").getItem(2), " ").as("w"))
+    val parsed = FeedLine.parse(lines, "doc_id:long text")
+      .select(col("ts"), split(col("text"), " ").as("w"))
       .select(
         col("ts"),
         size(col("w")).cast("long").as("n"),
@@ -1171,8 +999,8 @@ object Gateway {
     * offline X138 eval scores a ranking once; production wants the
     * TREND, because an index rebuild, a scorer regression, or corpus
     * drift shows up as nDCG creep long before users complain. Input
-    * is the judged impression log (`epoch_sec rank rel` — the rank a
-    * document was served at and its editorial grade riding the log);
+    * is the judged impression log (the rank a document was served at
+    * and its editorial grade riding the log);
     * per event-time window and cut-off K ∈ {5, 10, 20} one audit row:
     * precision@K, nDCG@K, MRR — every number the IDENTICAL form of
     * the offline [[graft.operators.Search]] X138 math (per-term
@@ -1198,7 +1026,7 @@ object Gateway {
     *
     * Multi-impression handling (r16 ADVICE → closed structurally
     * r18): lines may carry an optional 4th token, the served
-    * document's id (`epoch_sec rank rel doc`). Stage 1 keys state by
+    * document's id. Stage 1 keys state by
     * (rank, doc), so REPLAY of an impression is still absorbed by
     * max(rel) — but two DISTINCT documents genuinely served at the
     * same rank in one window now score as two impressions: stage 2
@@ -1246,21 +1074,10 @@ object Gateway {
     def dcg6(arr: String): String =
       s"aggregate(filter($arr, e -> e.rk <= k), CAST(0 AS BIGINT)," +
         s" (a, e) -> a + ${t6("e.rk", "e.rel")})"
-    val parsed = lines
-      .select(split(col("value"), " ", 4).as("p"))
-      .filter(size(col("p")) >= 3 &&
-        col("p").getItem(0).cast("long").isNotNull &&
-        col("p").getItem(1).cast("long").isNotNull &&
-        col("p").getItem(2).cast("long").isNotNull)
-      .select(
-        timestamp_seconds(col("p").getItem(0).cast("long")).as("ts"),
-        col("p").getItem(1).cast("long").as("rk"),
-        col("p").getItem(2).cast("long").as("rel"),
-        // optional doc id: id-less logs collapse each rank slot to
-        // ONE state key ("") — the pre-r18 max(rel) semantics exactly
-        // (get(), not getItem: a missing 4th token must read NULL,
-        // not throw under ANSI mode)
-        coalesce(get(col("p"), lit(3)), lit("")).as("doc"))
+    val parsed = FeedLine.parse(lines, "rk:long rel:long [doc]")
+      // optional doc id: id-less logs collapse each rank slot to
+      // ONE state key ("") — the pre-r18 max(rel) semantics exactly
+      .withColumn("doc", coalesce(col("doc"), lit("")))
       .filter(col("rk") >= 1L && col("rk") <= ks.max.toLong &&
         col("rel") >= 0L && col("rel") <= 3L)
       .withWatermark("ts", watermarkDelay)
@@ -1316,8 +1133,8 @@ object Gateway {
     * what we ingested THIS window" — the offline X151 alpha-sweep
     * grid as a live dial, so a crawl whose language balance drifts
     * shows its repetition-risk consequences (`epochs`, `max_epochs`)
-    * while the batch is still being written. Lines are
-    * `epoch_sec doc_id lang`; per (window, T ∈ {1,2,4,8}, slice) one
+    * while the batch is still being written. Per (window,
+    * T ∈ {1,2,4,8}, slice) one
     * row with the identical iterated-sqrt p ∝ n^(1/T), 4dp weight /
     * epochs quotients, and the per-T max-epochs verdict column.
     *
@@ -1341,14 +1158,7 @@ object Gateway {
     val p = (nE: String) =>
       s"CASE WHEN t = 1 THEN CAST($nE AS DOUBLE) WHEN t = 2 THEN sqrt($nE) " +
         s"WHEN t = 4 THEN sqrt(sqrt($nE)) ELSE sqrt(sqrt(sqrt($nE))) END"
-    val parsed = lines
-      .select(split(col("value"), " ", 3).as("p"))
-      .filter(size(col("p")) === 3 &&
-        col("p").getItem(0).cast("long").isNotNull &&
-        col("p").getItem(1).cast("long").isNotNull)
-      .select(
-        timestamp_seconds(col("p").getItem(0).cast("long")).as("ts"),
-        col("p").getItem(2).as("lang"))
+    val parsed = FeedLine.parse(lines, "doc_id:long lang")
       .withWatermark("ts", watermarkDelay)
     parsed
       .groupBy(window(col("ts"), windowDuration), col("lang"))
@@ -1385,8 +1195,7 @@ object Gateway {
     * live dial beside [[temperatureFeed]], so a crawl whose language
     * balance drifts shows its allocation consequences (which
     * languages cap at the repetition bound, how much budget the head
-    * language absorbs) as they happen. Lines are the admission shape
-    * `epoch_sec doc_id lang text…`; per-doc token counts are in-row.
+    * language absorbs) as they happen. Per-doc token counts are in-row.
     *
     * Execution: (1) collapse to (window, lang, doc) with `max(tok)` —
     * at-least-once replay of a document is absorbed here, the
@@ -1406,16 +1215,9 @@ object Gateway {
       epochsCap: Long = graft.operators.Curation.unimaxEpochCap,
       windowDuration: String = "10 seconds",
       watermarkDelay: String = "30 seconds"): DataFrame = {
-    val parsed = lines
-      .select(split(col("value"), " ", 4).as("p"))
-      .filter(size(col("p")) === 4 &&
-        col("p").getItem(0).cast("long").isNotNull &&
-        col("p").getItem(1).cast("long").isNotNull)
-      .select(
-        timestamp_seconds(col("p").getItem(0).cast("long")).as("ts"),
-        col("p").getItem(1).cast("long").as("doc_id"),
-        col("p").getItem(2).as("lang"),
-        size(split(col("p").getItem(3), " ")).cast("long").as("tok"))
+    val parsed = FeedLine.parse(lines, "doc_id:long lang text")
+      .select(col("ts"), col("doc_id"), col("lang"),
+        size(split(col("text"), " ")).cast("long").as("tok"))
       .withWatermark("ts", watermarkDelay)
     val perDoc = parsed
       .groupBy(window(col("ts"), windowDuration), col("lang"), col("doc_id"))
@@ -1485,9 +1287,8 @@ object Gateway {
     * distinct bigram shingles ingested, the number an ingest owner
     * watches to catch a source that suddenly collapses to templates
     * (distinct shingles flat while volume grows) or explodes in
-    * vocabulary (a crawl that drifted into another language). Lines
-    * are the admission shape `epoch_sec source text…`; no exact audit
-    * column in the stream — the audit lives in the batch query; the
+    * vocabulary (a crawl that drifted into another language). No exact
+    * audit column in the stream — the audit lives in the batch query; the
     * stream ships ONLY the sketch (that being its whole point).
     *
     * Replay absorption is structural, not bolted on: the stateful
@@ -1496,45 +1297,23 @@ object Gateway {
     * any line leaves every register bit-identical, with no extra
     * per-doc dedup state (contrast [[unimaxFeed]], which needs the
     * per-doc collapse). State is bounded by 256 registers per
-    * (window, source) regardless of volume. The estimate algebra
-    * downstream is the SAME [[graft.operators.TextAnalysis.hllEstimate]]
-    * the batch query and the oracle share — GatewaySpec pins stream ≡
+    * (window, source) regardless of volume. Bigrams
+    * ([[graft.operators.TextAnalysis.hllBigrams]]), register
+    * coordinates and the estimate algebra
+    * ([[graft.operators.TextAnalysis.hllEstimate]]) are the SAME
+    * definitions the batch query uses — GatewaySpec pins stream ≡
     * batch digit-for-digit at two SFs.
     */
   def hllFeed(
       lines: DataFrame,
       windowDuration: String = "10 seconds",
       watermarkDelay: String = "30 seconds"): DataFrame = {
-    val parsed = lines
-      .select(split(col("value"), " ", 3).as("p"))
-      .filter(size(col("p")) === 3 &&
-        col("p").getItem(0).cast("long").isNotNull)
-      .select(
-        timestamp_seconds(col("p").getItem(0).cast("long")).as("ts"),
-        col("p").getItem(1).as("source"),
-        split(col("p").getItem(2), " ").as("w"))
+    val parsed = FeedLine.parse(lines, "source text")
       .withWatermark("ts", watermarkDelay)
-    // Total-guard (ADVICE r18): a 1-word (or empty) line gives
-    // sequence(1, 0), which Spark evaluates as the DESCENDING array
-    // [1, 0] — element_at(w, 0) then throws INVALID_INDEX_OF_ZERO and
-    // one short line kills the whole streaming query. Same rule as the
-    // dedup feed's guard: generator-adjacent lambdas must be total.
-    // A <2-word doc contributes zero bigrams, exactly what the oracle's
-    // empty generate_series(1, 0) yields.
-    val regs = parsed
-      .select(col("ts"), col("source"), explode(expr(
-        "CASE WHEN size(w) >= 2 THEN transform(sequence(1, size(w) - 1), " +
-          "i -> concat(element_at(w, i), ' ', element_at(w, i + 1))) " +
-          "ELSE CAST(array() AS ARRAY<STRING>) END"))
-        .as("tok"))
+    val regs = graft.operators.TextAnalysis.hllBigrams(parsed, "ts")
+      .select(col("ts"), col("source"), Hashing.h60(col("tok")).as("h"))
       .select(col("ts"), col("source"),
-        graft.operators.Hashing.h60(col("tok")).as("h"))
-      .select(col("ts"), col("source"),
-        expr("h DIV 4503599627370496").as("j"),
-        expr("h % 4503599627370496").as("w"))
-      .withColumn("rho",
-        when(col("w") === 0, lit(53L))
-          .otherwise(lit(53L) - length(bin(col("w")))))
+        Hashing.hllBucket(col("h")).as("j"), Hashing.hllRank(col("h")).as("rho"))
       .groupBy(window(col("ts"), windowDuration), col("source"), col("j"))
       .agg(max(col("rho")).as("mj"))
     val perKey = regs
@@ -1559,8 +1338,7 @@ object Gateway {
     * [[graft.operators.Extensions.hllRollingDays]]-day window, the
     * WAU/MAU-style dial that completes the sketch cube (VERDICT r18
     * #8: [[hllFeed]] covers per-window registers; this feed adds the
-    * RANGE-max MERGE over per-day register state). Lines are
-    * `epoch_sec event_type user_id`.
+    * RANGE-max MERGE over per-day register state).
     *
     * Execution: register coordinates (day, j, ρ) are computed IN-ROW
     * by the same expressions as the batch cube, then ONE
@@ -1590,26 +1368,14 @@ object Gateway {
     val sp = lines.sparkSession
     import sp.implicits._
     val dayMs = 86400000L
-    val regs = lines
-      .select(split(col("value"), " ", 3).as("p"))
-      .filter(size(col("p")) === 3 &&
-        col("p").getItem(0).cast("long").isNotNull &&
-        col("p").getItem(2).cast("long").isNotNull)
-      .select(
-        timestamp_seconds(col("p").getItem(0).cast("long")).as("evTs"),
-        col("p").getItem(1).as("eventType"),
-        col("p").getItem(2).as("user_id"))
+    val regs = FeedLine.parse(lines, "eventType user_id:long", time = "evTs")
       .withWatermark("evTs", watermarkDelay)
       .select(col("evTs"), col("eventType"),
         expr("CAST(unix_micros(evTs) DIV 86400000000 AS BIGINT)").as("day"),
-        graft.operators.Hashing.h60(col("user_id")).as("h"))
-      .select(col("evTs"), col("eventType"), col("day"),
-        expr("CAST(h DIV 4503599627370496 AS INT)").as("j"),
-        expr("h % 4503599627370496").as("w"))
-      .withColumn("rho",
-        when(col("w") === 0, lit(53L))
-          .otherwise(lit(53L) - length(bin(col("w")))))
-      .select(col("eventType"), col("day"), col("j"), col("rho"), col("evTs"))
+        Hashing.h60(col("user_id").cast("string")).as("h"))
+      .select(col("eventType"), col("day"),
+        Hashing.hllBucket(col("h")).cast("int").as("j"), Hashing.hllRank(col("h")).as("rho"),
+        col("evTs"))
       .as[HllRollReg]
     val rolled = regs
       .groupByKey(_.eventType)
@@ -1682,7 +1448,6 @@ object Gateway {
     * length-distribution drift dial an ingest owner pairs with
     * [[hllFeed]] (a source whose p99 collapses toward its p50 went
     * template-shaped; a p99 blow-up is a concatenation/parse bug).
-    * Lines are the admission shape `epoch_sec source text…`.
     *
     * Execution: ONE stateful windowed count per (window, source, bin)
     * — state bounded by the ≤ ~1000-bin dictionary per key, counts
@@ -1703,14 +1468,8 @@ object Gateway {
       lines: DataFrame,
       windowDuration: String = "10 seconds",
       watermarkDelay: String = "30 seconds"): DataFrame = {
-    val parsed = lines
-      .select(split(col("value"), " ", 3).as("p"))
-      .filter(size(col("p")) === 3 &&
-        col("p").getItem(0).cast("long").isNotNull)
-      .select(
-        timestamp_seconds(col("p").getItem(0).cast("long")).as("ts"),
-        col("p").getItem(1).as("source"),
-        size(split(col("p").getItem(2), " ")).cast("long").as("n"))
+    val parsed = FeedLine.parse(lines, "source text")
+      .select(col("ts"), col("source"), size(split(col("text"), " ")).cast("long").as("n"))
       .withWatermark("ts", watermarkDelay)
     val binned = graft.operators.TextAnalysis.histBinned(parsed)
       .groupBy(window(col("ts"), windowDuration), col("source"), col("idx"),
@@ -1758,8 +1517,7 @@ object Gateway {
     * offline X155 estimates label error once; what production wants
     * is the TREND, because a rule-gate regression (or a crawl whose
     * text distribution moved under the classifier) shows up as
-    * off-diagonal creep per window. Lines are the admission shape
-    * (`epoch_sec doc_id text`); both gates run in-row (the
+    * off-diagonal creep per window. Both gates run in-row (the
     * [[calibrationFeed]] precedent) and the CL assignment is
     * STATELESS because the class thresholds ship as the offline
     * artifact in plan literals (Σp6 and count per class — the
@@ -1777,14 +1535,7 @@ object Gateway {
       s1: Long, n1: Long, s0: Long, n0: Long,
       windowDuration: String = "10 seconds",
       watermarkDelay: String = "30 seconds"): DataFrame = {
-    val parsed = lines
-      .select(split(col("value"), " ", 3).as("p"))
-      .filter(size(col("p")) === 3 && col("p").getItem(0).cast("long").isNotNull &&
-        col("p").getItem(1).cast("long").isNotNull)
-      .select(
-        timestamp_seconds(col("p").getItem(0).cast("long")).as("ts"),
-        col("p").getItem(1).cast("long").as("doc_id"),
-        col("p").getItem(2).as("text"))
+    val parsed = FeedLine.parse(lines, "doc_id:long text")
       .withWatermark("ts", watermarkDelay)
     val assigned = graft.operators.Curation.withRuleFlags(
       graft.operators.Curation.withClfColumns(parsed))
@@ -1828,8 +1579,8 @@ object Gateway {
     * TODAY'S crawl is suddenly template-heavy (one giant cluster) or
     * pair-noisy (many 2-clusters), because the remediations differ
     * (keep-one dedup vs upstream template investigation). Lines are
-    * label assignments `epoch_sec doc_id cluster_id` — the output
-    * grain of an incremental-dedup assigner ([[dedupIncFeed]]'s
+    * label assignments — the output grain of an incremental-dedup
+    * assigner ([[dedupIncFeed]]'s
     * world); a SINGLETON (no duplicate partner) ships with a unique
     * sentinel cluster_id (the producer uses −doc_id), which is the
     * live substitute for the batch side's corpus anti-join (X153's
@@ -1860,16 +1611,7 @@ object Gateway {
       watermarkDelay: String = "30 seconds"): DataFrame = {
     val bucket = "CASE WHEN sz <= 4 THEN sz WHEN sz <= 8 THEN 5 " +
       "WHEN sz <= 16 THEN 9 WHEN sz <= 32 THEN 17 ELSE 33 END"
-    val parsed = lines
-      .select(split(col("value"), " ", 4).as("p"))
-      .filter(size(col("p")) >= 3 &&
-        col("p").getItem(0).cast("long").isNotNull &&
-        col("p").getItem(1).cast("long").isNotNull &&
-        col("p").getItem(2).cast("long").isNotNull)
-      .select(
-        timestamp_seconds(col("p").getItem(0).cast("long")).as("ts"),
-        col("p").getItem(1).cast("long").as("doc_id"),
-        col("p").getItem(2).cast("long").as("cluster_id"))
+    val parsed = FeedLine.parse(lines, "doc_id:long cluster_id:long [rest]")
       .withWatermark("ts", watermarkDelay)
     val perDoc = parsed
       .groupBy(window(col("ts"), windowDuration), col("cluster_id"), col("doc_id"))
@@ -1914,8 +1656,7 @@ object Gateway {
     * against the last PROMOTED snapshot's profile, so an extractor
     * that starts NULLing `lang` or inflating `n_chars` mid-crawl
     * flags within a window instead of at the next nightly. Lines are
-    * the profile grain `epoch_sec doc_id lang source n_chars text…`
-    * (text is the tail, spaces and all); a missing lang ships as the
+    * the profile grain; a missing lang ships as the
     * `-` token (the wire form of NULL — the stream analog of the
     * batch synthesis's NULLed extractor).
     *
@@ -1945,19 +1686,9 @@ object Gateway {
       baseline: ProfileBaseline,
       windowDuration: String = "10 seconds",
       watermarkDelay: String = "30 seconds"): DataFrame = {
-    val parsed = lines
-      .select(split(col("value"), " ", 6).as("p"))
-      .filter(size(col("p")) === 6 &&
-        col("p").getItem(0).cast("long").isNotNull &&
-        col("p").getItem(1).cast("long").isNotNull &&
-        col("p").getItem(4).cast("long").isNotNull)
-      .select(
-        timestamp_seconds(col("p").getItem(0).cast("long")).as("ts"),
-        col("p").getItem(1).cast("long").as("doc_id"),
-        col("p").getItem(2).as("lang"),
-        col("p").getItem(3).as("source"),
-        col("p").getItem(4).cast("long").as("n_chars"),
-        length(col("p").getItem(5)).cast("long").as("text_len"))
+    val parsed = FeedLine.parse(lines, "doc_id:long lang source n_chars:long text")
+      .select(col("ts"), col("doc_id"), col("lang"), col("source"), col("n_chars"),
+        length(col("text")).cast("long").as("text_len"))
       .withWatermark("ts", watermarkDelay)
     // stage 0 — collapse to (window, doc): at-least-once replay of a
     // line is absorbed here (every profile field is static per doc, so
@@ -2039,13 +1770,7 @@ object Gateway {
       watermarkDelay: String = "30 seconds"): DataFrame = {
     val lex = graft.operators.TextAnalysis.topicLexicons
     val minHits = graft.operators.TextAnalysis.topicMinHits
-    val parsed = lines
-      .select(split(col("value"), " ", 3).as("p"))
-      .filter(size(col("p")) === 3 && col("p").getItem(0).cast("long").isNotNull &&
-        col("p").getItem(1).cast("long").isNotNull)
-      .select(
-        timestamp_seconds(col("p").getItem(0).cast("long")).as("ts"),
-        col("p").getItem(2).as("text"))
+    val parsed = FeedLine.parse(lines, "doc_id:long text")
       .withWatermark("ts", watermarkDelay)
     val flagged = lex.foldLeft(
       parsed.withColumn("__tw", array_distinct(split(col("text"), " ")))) {
@@ -2074,8 +1799,8 @@ object Gateway {
   /** Streaming X162 — windowed entity-mention audit (`entityFeed`):
     * per (event-time window, source), the email/URL/IPv4/year mention
     * counters of the declared batch `q_entity_stats` — the live
-    * pre-flight a PII/redaction stage reads on the ingest path. Line
-    * format `"<epoch> <source> <text>"`. Every counter is a stateless
+    * pre-flight a PII/redaction stage reads on the ingest path. Every
+    * counter is a stateless
     * in-row `regexp_extract_all` length over the SAME
     * [[graft.operators.TextAnalysis.entityPatterns]] grammar the
     * batch/oracle pair certifies (the X35 admission pattern: narrow
@@ -2091,13 +1816,7 @@ object Gateway {
       windowDuration: String = "10 seconds",
       watermarkDelay: String = "30 seconds"): DataFrame = {
     val pats = graft.operators.TextAnalysis.entityPatterns
-    val parsed = lines
-      .select(split(col("value"), " ", 3).as("p"))
-      .filter(size(col("p")) === 3 && col("p").getItem(0).cast("long").isNotNull)
-      .select(
-        timestamp_seconds(col("p").getItem(0).cast("long")).as("ts"),
-        col("p").getItem(1).as("source"),
-        col("p").getItem(2).as("text"))
+    val parsed = FeedLine.parse(lines, "source text")
       .withWatermark("ts", watermarkDelay)
     val counted = pats.foldLeft(parsed) { case (df, (name, pat)) =>
       df.withColumn(name,
@@ -2126,7 +1845,7 @@ object Gateway {
     * labelNoiseFeed/novelFeed pattern: a live quantile would make the
     * clamp depend on micro-batch boundaries; the batch cut table is
     * ≤|event types| rows, a bounded artifact like X100's eval suite).
-    * Line format `"<epoch> <event_type> <value>"`. The clamp and clip
+    * The clamp and clip
     * flags are stateless in-row integer work on cents; the means are
     * the batch query's identical `(200·Σ + n) DIV (2n)` HALF_UP
     * integer forms, so stream ≡ batch frame ≡ BigInt recount
@@ -2143,14 +1862,9 @@ object Gateway {
     require(cuts.nonEmpty, "winsorize cut artifact must be non-empty")
     val loMap = map(cuts.flatMap { case (t, lo, _) => Seq(lit(t), lit(lo)) }: _*)
     val hiMap = map(cuts.flatMap { case (t, _, hi) => Seq(lit(t), lit(hi)) }: _*)
-    val parsed = lines
-      .select(split(col("value"), " ", 3).as("p"))
-      .filter(size(col("p")) === 3 && col("p").getItem(0).cast("long").isNotNull &&
-        col("p").getItem(2).cast("double").isNotNull)
-      .select(
-        timestamp_seconds(col("p").getItem(0).cast("long")).as("ts"),
-        col("p").getItem(1).as("event_type"),
-        expr("CAST(round(CAST(p[2] AS DOUBLE) * 100) AS BIGINT)").as("cents"))
+    val parsed = FeedLine.parse(lines, "event_type value:double")
+      .select(col("ts"), col("event_type"),
+        expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
       .withWatermark("ts", watermarkDelay)
       .withColumn("lo_cut", element_at(loMap, col("event_type")))
       .withColumn("hi_cut", element_at(hiMap, col("event_type")))
@@ -2191,8 +1905,7 @@ object Gateway {
     * query's own key set up to the deployment cut) ships as plan
     * literals (the novelFeed pattern), so per-key novelty is a
     * stateless `array_contains` and needs no global first-seen state.
-    * Line format `"<epoch> <event_id> <props-json>"` (props may
-    * contain spaces — limit-3 split). Distinct key counts NEVER run
+    * Distinct key counts NEVER run
     * as streaming DISTINCT (the profileDriftFeed rule): stage 1
     * collapses to the (window, key) dictionary — state bounded by
     * distinct keys per horizon, not events — and stage 2 re-windows
@@ -2209,13 +1922,7 @@ object Gateway {
       watermarkDelay: String = "30 seconds"): DataFrame = {
     require(knownKeys.nonEmpty, "known-key artifact must be non-empty")
     val known = array(knownKeys.map(lit): _*)
-    val parsed = lines
-      .select(split(col("value"), " ", 3).as("p"))
-      .filter(size(col("p")) === 3 && col("p").getItem(0).cast("long").isNotNull &&
-        col("p").getItem(1).cast("long").isNotNull)
-      .select(
-        timestamp_seconds(col("p").getItem(0).cast("long")).as("ts"),
-        col("p").getItem(2).as("props"))
+    val parsed = FeedLine.parse(lines, "event_id:long props")
       .withWatermark("ts", watermarkDelay)
     val perKey = parsed
       .select(col("ts"), explode(expr("json_object_keys(props)")).as("key"))
@@ -2258,14 +1965,7 @@ object Gateway {
       windowDuration: String = "10 seconds",
       watermarkDelay: String = "30 seconds"): DataFrame = {
     require(vocab.nonEmpty, "reference vocabulary must be non-empty")
-    val parsed = lines
-      .select(split(col("value"), " ", 3).as("p"))
-      .filter(size(col("p")) === 3 && col("p").getItem(0).cast("long").isNotNull &&
-        col("p").getItem(1).cast("long").isNotNull)
-      .select(
-        timestamp_seconds(col("p").getItem(0).cast("long")).as("ts"),
-        col("p").getItem(1).cast("long").as("doc_id"),
-        col("p").getItem(2).as("text"))
+    val parsed = FeedLine.parse(lines, "doc_id:long text")
       .withWatermark("ts", watermarkDelay)
     val vocabArr = array(vocab.map(lit): _*)
     parsed
@@ -2357,15 +2057,7 @@ object Gateway {
       capPerWindow: Long = 1000L,
       windowDuration: String = "10 seconds",
       watermarkDelay: String = "30 seconds"): DataFrame = {
-    import graft.functions.MinHashSketch.{mixA, mixB, mod => mhMod}
-    val parsed = lines
-      .select(split(col("value"), " ", 3).as("p"))
-      .filter(size(col("p")) === 3 && col("p").getItem(0).cast("long").isNotNull &&
-        col("p").getItem(1).cast("long").isNotNull)
-      .select(
-        timestamp_seconds(col("p").getItem(0).cast("long")).as("ts"),
-        col("p").getItem(1).cast("long").as("doc_id"),
-        col("p").getItem(2).as("text"))
+    val parsed = FeedLine.parse(lines, "doc_id:long text")
       .withWatermark("ts", watermarkDelay)
       .join(meta, Seq("doc_id"), "left")
       .withColumn("source", coalesce(col("source"), lit("unknown")))
@@ -2386,18 +2078,10 @@ object Gateway {
           "i -> concat(element_at(w, i), ' ', element_at(w, i + 1), ' ', element_at(w, i + 2)))) " +
           "ELSE CAST(array() AS ARRAY<STRING>) END"))
       .withColumn("n_a", size(col("shingles")))
-    def sigSlot(i: Int) =
-      array_min(transform(col("shingles"), sh =>
-        ((conv(substring(md5(sh), 1, 8), 16, 10).cast("long") % 2147483648L)
-          * mixA(i) + mixB(i)) % mhMod))
     shingled
       .select(col("ts"), col("doc_id"), col("source"), col("strp"), col("gate"),
         col("clf"), col("shingles"), col("n_a"),
-        explode(array((0 until graft.operators.Dedup.nBands).map(b =>
-          struct(
-            lit(b).as("band"),
-            sigSlot(2 * b).as("k1"),
-            sigSlot(2 * b + 1).as("k2"))): _*)).as("bk"))
+        explode(Dedup.minhashBandKeys(col("shingles"))).as("bk"))
       .select(col("ts"), col("doc_id"), col("source"), col("strp"), col("gate"),
         col("clf"), col("shingles"), col("n_a"),
         col("bk.band").as("band"), col("bk.k1").as("k1"), col("bk.k2").as("k2"))
@@ -2440,14 +2124,7 @@ object Gateway {
       dict: DataFrame,
       windowDuration: String = "10 seconds",
       watermarkDelay: String = "30 seconds"): DataFrame = {
-    val parsed = lines
-      .select(split(col("value"), " ", 3).as("p"))
-      .filter(size(col("p")) === 3 && col("p").getItem(0).cast("long").isNotNull &&
-        col("p").getItem(1).cast("long").isNotNull)
-      .select(
-        timestamp_seconds(col("p").getItem(0).cast("long")).as("ts"),
-        col("p").getItem(1).cast("long").as("doc_id"),
-        col("p").getItem(2).as("text"))
+    val parsed = FeedLine.parse(lines, "doc_id:long text")
       .withWatermark("ts", watermarkDelay)
     val stripped = graft.operators.Dedup.stripWithHot(parsed, hotChunks)
     val admitted = graft.operators.Curation.withClfColumns(
@@ -2502,15 +2179,7 @@ object Gateway {
       indexBands: DataFrame,
       indexSets: DataFrame,
       watermarkDelay: String = "30 seconds"): DataFrame = {
-    import graft.functions.MinHashSketch.{mixA, mixB, mod => mhMod}
-    val parsed = lines
-      .select(split(col("value"), " ", 3).as("p"))
-      .filter(size(col("p")) === 3 && col("p").getItem(0).cast("long").isNotNull &&
-        col("p").getItem(1).cast("long").isNotNull)
-      .select(
-        timestamp_seconds(col("p").getItem(0).cast("long")).as("ts"),
-        col("p").getItem(1).cast("long").as("doc_id"),
-        col("p").getItem(2).as("text"))
+    val parsed = FeedLine.parse(lines, "doc_id:long text")
       .withWatermark("ts", watermarkDelay)
     val shingled = parsed
       .select(col("ts"), col("doc_id"), split(col("text"), " ").as("w"))
@@ -2521,17 +2190,9 @@ object Gateway {
             element_at(col("w"), i), lit(" "),
             element_at(col("w"), i + 1), lit(" "),
             element_at(col("w"), i + 2)))).as("shingles"))
-    def sigSlot(i: Int) =
-      array_min(transform(col("shingles"), sh =>
-        ((conv(substring(md5(sh), 1, 8), 16, 10).cast("long") % 2147483648L)
-          * mixA(i) + mixB(i)) % mhMod))
     shingled
       .select(col("ts"), col("doc_id"), col("shingles"), size(col("shingles")).as("n_a"),
-        explode(array((0 until graft.operators.Dedup.nBands).map(b =>
-          struct(
-            lit(b).as("band"),
-            sigSlot(2 * b).as("k1"),
-            sigSlot(2 * b + 1).as("k2"))): _*)).as("bk"))
+        explode(Dedup.minhashBandKeys(col("shingles"))).as("bk"))
       .select(col("ts"), col("doc_id"), col("shingles"), col("n_a"),
         col("bk.band").as("band"), col("bk.k1").as("k1"), col("bk.k2").as("k2"))
       .join(indexBands, Seq("band", "k1", "k2"))
@@ -2594,18 +2255,11 @@ object Gateway {
       watermarkDelay: String = "30 seconds"): DataFrame = {
     val spark = lines.sparkSession
     import spark.implicits._
-    // capture the fingerprint width at construction (session conf is
-    // driver-side); the closure below runs on executors
-    val printSpace = graft.operators.Multimodal.mediaPrintSpace(spark)
-    val parsed = lines
-      .select(split(col("value"), " ", 2).as("p"))
-      .filter(size(col("p")) === 2 && col("p").getItem(0).cast("long").isNotNull)
-      .select(
-        timestamp_seconds(col("p").getItem(0).cast("long")).as("ts"),
-        unhex(col("p").getItem(1)).as("container"))
+    val parsed = FeedLine.parse(lines, "hex")
+      .select(col("ts"), unhex(col("hex")).as("container"))
       .as[(java.sql.Timestamp, Array[Byte])]
       .map { case (ts, bytes) =>
-        val (docId, prints) = graft.operators.Multimodal.printsOf(bytes, printSpace)
+        val (docId, prints) = graft.operators.Multimodal.printsOf(bytes)
         (ts, docId, prints)
       }
       .toDF("ts", "doc_id", "prints")
@@ -2645,14 +2299,9 @@ object Gateway {
       evalVecs: DataFrame,
       threshold: Double = graft.operators.Curation.semThreshold,
       watermarkDelay: String = "30 seconds"): DataFrame = {
-    val parsed = lines
-      .select(split(col("value"), " ", 3).as("p"))
-      .filter(size(col("p")) === 3 && col("p").getItem(0).cast("long").isNotNull &&
-        col("p").getItem(1).cast("long").isNotNull)
-      .select(
-        timestamp_seconds(col("p").getItem(0).cast("long")).as("ts"),
-        col("p").getItem(1).cast("long").as("vec_id"),
-        transform(split(col("p").getItem(2), ","), x => x.cast("double")).as("tv"))
+    val parsed = FeedLine.parse(lines, "vec_id:long vec")
+      .select(col("ts"), col("vec_id"),
+        transform(split(col("vec"), ","), _.try_cast("double")).as("tv"))
       // malformed vector guard: any non-numeric component poisons the
       // whole row (the P2 discard discipline, element-wise)
       .filter(!exists(col("tv"), _.isNull))
@@ -2689,14 +2338,7 @@ object Gateway {
     * no streaming aggregate, no state store.
     */
   def deltaFeed(lines: DataFrame, manifest: DataFrame): DataFrame = {
-    val parsed = lines
-      .select(split(col("value"), " ", 3).as("p"))
-      .filter(size(col("p")) === 3 && col("p").getItem(0).cast("long").isNotNull &&
-        col("p").getItem(1).cast("long").isNotNull)
-      .select(
-        timestamp_seconds(col("p").getItem(0).cast("long")).as("ts"),
-        col("p").getItem(1).cast("long").as("doc_id"),
-        col("p").getItem(2).as("text"))
+    val parsed = FeedLine.parse(lines, "doc_id:long text")
     graft.operators.Curation.withRuleFlags(
       parsed
         .withColumn("nh", md5(col("text")))

@@ -8,19 +8,7 @@ import org.apache.spark.sql.SparkSession
   */
 object SparkFixture {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // r21: 426 tests × several plans each — same codegen-class cache
-      // sizing as the Bench/Verify mains (static conf)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = GraftSession.build(cpus = 4)
     // The operator surface deliberately runs dictionary-sized (tens to
     // hundreds of rows) global windows; WindowExec warns "No Partition
     // Defined" once per plan execution, and 461 tests × several plans
@@ -42,7 +30,6 @@ object SparkFixture {
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
       org.apache.logging.log4j.Level.ERROR)
-    GraftConf.ensure(s)
     s
   }
 }

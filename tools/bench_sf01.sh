@@ -26,7 +26,6 @@ done
 # extends adaptively (up to SPARK_GRAFT_BENCH_MAX_PASSES) if a whole
 # pass improves the summed best by >2%.
 SPARK_GRAFT_SF_DIR=${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1} \
-SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
 SPARK_GRAFT_BENCH_PASSES=${SPARK_GRAFT_BENCH_PASSES:-3} \
 SPARK_GRAFT_BENCH_OUT=/tmp/graft_bench_sf01_side.json \
 java $ADD_OPENS -Xmx24g \

@@ -10,6 +10,5 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
 SPARK_GRAFT_SF_DIR=${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1} \
-SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
 java $ADD_OPENS -Xmx24g -Dspark.sql.session.timeZone=UTC \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" graft.Inspect

@@ -13,7 +13,6 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
 done
 PASSES=${2:-2}
 SPARK_GRAFT_SF_DIR=${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1} \
-SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
 SPARK_GRAFT_BENCH_PASSES=$PASSES \
 SPARK_GRAFT_BENCH_MAX_PASSES=${3:-$PASSES} \
 SPARK_GRAFT_QUERIES="$1" \

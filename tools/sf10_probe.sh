@@ -36,7 +36,7 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
 run_bench() {  # $1 = query list for this JVM, $2 = output json path
-  SPARK_GRAFT_SF_DIR="$DIR" SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
+  SPARK_GRAFT_SF_DIR="$DIR" \
   SPARK_GRAFT_BENCH_PASSES=1 SPARK_GRAFT_QUERIES="$1" \
   java $ADD_OPENS -Xmx64g \
     -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \

@@ -18,7 +18,7 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
-SPARK_GRAFT_SF_DIR="$SF1_DIR" SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
+SPARK_GRAFT_SF_DIR="$SF1_DIR" \
 SPARK_GRAFT_BENCH_PASSES=1 \
 SPARK_GRAFT_BENCH_OUT=/tmp/graft_sf1_bench_side.json \
 java $ADD_OPENS -Xmx24g \
