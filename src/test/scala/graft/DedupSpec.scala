@@ -832,20 +832,24 @@ class DedupSpec extends AnyFunSuite {
     // persisted only inside a downstream thunk stayed unpersisted
     // after clearCache(). The fix is structural — ANY cachedIndex
     // access re-persists EVERY memo entry of the session — so the pin
-    // is: populate two entries, clearCache, touch only ONE, and the
-    // OTHER must be re-armed too (whatever builder nesting a future
-    // change introduces).
-    import graft.operators.Dedup
+    // is: populate several entries, clearCache, touch only ONE, and
+    // the OTHERS must be re-armed too (whatever builder nesting a
+    // future change introduces). The cluster labels are a memo of
+    // another module and must ride the same sweep.
+    import graft.operators.{Clustering, Dedup}
     val none = org.apache.spark.storage.StorageLevel.NONE
     val sh = Dedup.shingleIndex(spark, sf) // entry "shingles"
     val mh = Dedup.minhashVerified(spark, sf) // entry "minhash_pairs" (reads shingles upstream)
-    val entries = Seq(sh, mh)
-    assert(entries.forall(_.storageLevel != none), "both memo entries must start persisted")
+    val cl = Clustering.clusterLabels(spark, sf) // entry "cluster_labels"
+    val entries = Seq(sh, mh, cl)
+    assert(entries.forall(_.storageLevel != none), "every memo entry must start persisted")
     spark.catalog.clearCache()
-    assert(entries.forall(_.storageLevel == none), "clearCache must drop both")
+    assert(entries.forall(_.storageLevel == none), "clearCache must drop every entry")
     Dedup.minhashVerified(spark, sf) // memo HIT on ONE entry only — no builder runs
-    assert(entries.forall(_.storageLevel != none),
+    assert(Seq(sh, mh).forall(_.storageLevel != none),
       "one access must re-arm EVERY memo entry of the session, not just the touched tag")
+    assert(cl.storageLevel != none,
+      "one index access must re-arm the cluster-labels persist too")
   }
 
   test("q_shingle_df: sequential ladder recount at two SFs; grid complete") {
