@@ -40,27 +40,10 @@ object Bench {
     // regression). Warming them first each pass moves the build cost
     // into an explicit memo:<tag> line; the headline total is
     // unchanged in expectation (cost relocates, it doesn't grow), and
-    // every first-payer line returns to its plan cost. cluster_labels
-    // is construction-time work with the same first-payer skew; the
-    // same SPARK_GRAFT_QUERIES filter applies, so a single-query
-    // bench still measures that query's standalone (build-inclusive)
-    // cost.
-    val memoWarmers: Seq[(String, () => Unit)] = Seq(
-      ("memo:shingles", () => { operators.Dedup.shingleIndex(spark, sfDir).count(); () }),
-      ("memo:shingle_df", () => { operators.Dedup.shingleDfDict(spark, sfDir).count(); () }),
-      ("memo:substr_df", () => { operators.Dedup.substrDf(spark, sfDir).count(); () }),
-      ("memo:near_pairs", () => { operators.Dedup.nearPairsIndexed(spark, sfDir).count(); () }),
-      ("memo:containment_idx", () => { operators.Dedup.containmentIndex(spark, sfDir).count(); () }),
-      ("memo:containment_df", () => { operators.Dedup.containmentDf(spark, sfDir).count(); () }),
-      ("memo:minhash_pairs", () => { operators.Dedup.minhashVerified(spark, sfDir).count(); () }),
-      ("memo:simsketch", () => { operators.Dedup.simSketch(spark, sfDir).count(); () }),
-      ("memo:source_sigs", () => { operators.Dedup.sourceSigs(spark, sfDir).count(); () }),
-      ("memo:substr_grams", () => { operators.Dedup.substrGrams(spark, sfDir).count(); () }),
-      ("memo:substr_pairs", () => { operators.Dedup.substrPairs(spark, sfDir).count(); () }),
-      ("memo:gate_scored", () => { operators.Curation.gateScored(spark, sfDir).count(); () }),
-      ("memo:cluster_labels", () => { operators.Clustering.clusterLabels(spark, sfDir).count(); () }),
-      ("memo:bpe_merges", () => { operators.TextAnalysis.learnedMerges(spark, sfDir); () })
-    ).filter { case (n, _) => only.forall(_.contains(n)) }
+    // every first-payer line returns to its plan cost. The same
+    // SPARK_GRAFT_QUERIES filter applies, so a single-query bench
+    // still measures that query's standalone (build-inclusive) cost.
+    val memos = operators.SessionMemo.warmed.filter { case (t, _) => only.forall(_.contains(s"memo:$t")) }
     val best = scala.collection.mutable.LinkedHashMap[String, Double]()
     // a query that threw in ANY pass is reported, not silently timed:
     // its elapsed time is meaningless and the driver must see red
@@ -70,16 +53,11 @@ object Bench {
     var continue = true
     while (continue) {
       pass += 1
+      // some memos are CONSTRUCTION-time work (the CC fixpoint, the
+      // BPE learn loop), which clearCache alone would not make pass N
+      // re-pay — release them all so every pass times the real cost
       spark.catalog.clearCache()
-      // the cluster-labels memo is CONSTRUCTION-time work (the CC
-      // fixpoint runs when the query is built), which clearCache alone
-      // would not make pass N re-pay — release it so every pass times
-      // the real cost, same discipline as the cache clear
-      operators.Clustering.releaseLabels(spark)
-      // same discipline for the BPE merge memo (construction-time
-      // driver tuples): release so every pass re-pays the learn loop
-      // in its explicit memo:bpe_merges line
-      operators.TextAnalysis.releaseBpe(spark)
+      operators.SessionMemo.release(spark)
       def timeOne(name: String)(body: => Unit): Unit = {
         val t0 = System.nanoTime()
         val ok =
@@ -94,7 +72,7 @@ object Bench {
         System.err.println(f"bench pass $pass $name%-22s $sec%8.3f s${if (ok) "" else "  FAILED"}")
         if (ok) best(name) = math.min(best.getOrElse(name, Double.MaxValue), sec)
       }
-      for ((name, warm) <- memoWarmers) timeOne(name)(warm())
+      for ((tag, warm) <- memos) timeOne(s"memo:$tag")(warm(spark, sfDir))
       for ((name, fn) <- queries) timeOne(name)(fn(spark, sfDir).count())
       val total = if (best.nonEmpty) best.values.sum else 0.0
       System.err.println(f"bench pass $pass total-of-best $total%8.3f s")

@@ -22,12 +22,9 @@ object Inspect {
     }
     val queries = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
     for (r <- 1 to reps) {
+      // as in Bench: every rep re-pays the memo builds
       spark.catalog.clearCache()
-      operators.Clustering.releaseLabels(spark)
-      // r20 ADVICE: Bench releases the BPE merge memo per pass too —
-      // without this, rep>=2 timings for the BPE queries measure memo
-      // hits and stop being comparable to bench numbers
-      operators.TextAnalysis.releaseBpe(spark)
+      operators.SessionMemo.release(spark)
       for ((name, fn) <- queries) {
         spark.sparkContext.setJobDescription(s"$name rep$r")
         val t0 = System.nanoTime()

@@ -210,39 +210,13 @@ object Clustering {
       .orderBy("doc_id")
   }
 
-  /** Session-memoized cluster labels, the [[Dedup.shingleIndex]]
-    * pattern: `q_dedup_cluster` and `q_dedup_keep` share one CC run
-    * per (session, dir) — the iterative fixpoint is CONSTRUCTION-time
-    * work, so unlike the execution-time index caches it must be
-    * explicitly released wherever a fresh measurement is wanted
-    * (`graft.Bench` releases it between passes for exactly that
-    * reason; `Dedup.releaseIndexes` and [[SessionCleanup]] cover the
-    * lifecycle like every other memo).
+  /** Session-memoized cluster labels: `q_dedup_cluster` and
+    * `q_dedup_keep` share one CC run per (session, dir). The iterative
+    * fixpoint is CONSTRUCTION-time work, so a fresh measurement needs
+    * [[SessionMemo.release]], not just `clearCache()`.
     */
-  private val labelMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private[graft] def clusterLabels(s: SparkSession, dir: String): DataFrame = {
-    SessionCleanup.arm(s)
-    val df = labelMemo.getOrElseUpdate((s, dir),
-      connectedComponents(Dedup.minhashPairs(s, dir)))
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) df.persist()
-    df
-  }
-
-  /** Unpersist and forget the memoized cluster labels (and k-means
-    * centroids) of `s`.
-    */
-  def releaseLabels(s: SparkSession): Unit = releaseLabels(_ eq s)
-
-  private[graft] def releaseLabels(cond: SparkSession => Boolean): Unit = {
-    labelMemo.keys.filter(k => cond(k._1)).foreach { k =>
-      labelMemo.remove(k).foreach { df =>
-        try df.unpersist() catch { case _: Exception => () }
-      }
-    }
-    centroidMemo.keys.filter(k => cond(k._1)).foreach(centroidMemo.remove)
-  }
+  private[graft] def clusterLabels(s: SparkSession, dir: String): DataFrame =
+    SessionMemo(s, dir, "cluster_labels")(connectedComponents(Dedup.minhashPairs(s, dir)))
 
   /** The declared query: clusters over the MinHash-verified near-dup
     * pairs (X5b's output contract — any of the X5 pair streams would
@@ -386,15 +360,10 @@ object Clustering {
   private[graft] val centroidK = 8
 
   /** Session-memoized centroid vectors (the [[Similarity.queryVec]]
-    * pattern: one small eager fetch at query CONSTRUCTION, released
-    * by [[releaseLabels]]/[[graft.operators.SessionCleanup]]).
+    * pattern: one small eager fetch at query CONSTRUCTION).
     */
-  private val centroidMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Seq[(Long, Array[Float])]]
-
-  private[graft] def centroids(s: SparkSession, dir: String): Seq[(Long, Array[Float])] = {
-    SessionCleanup.arm(s)
-    centroidMemo.getOrElseUpdate((s, dir), {
+  private[graft] def centroids(s: SparkSession, dir: String): Seq[(Long, Array[Float])] =
+    SessionMemo(s, dir, "centroids") {
       val rows = graft.Tables(s, dir, "embeddings")
         .filter(col("vec_id").between(1, centroidK))
         .select(col("vec_id"), col("embedding")).collect()
@@ -402,8 +371,7 @@ object Clustering {
         s"expected $centroidK centroid rows (vec_id 1..$centroidK) in $dir/embeddings, " +
           s"found ${rows.length}")
       rows.map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).sortBy(_._1).toSeq
-    })
-  }
+    }
 
   /** X32 — k-means cluster assignment over the embedding column: the
     * semantic-curation bucketing step (SemDeDup-style pipelines

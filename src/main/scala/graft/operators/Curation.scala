@@ -2816,11 +2816,10 @@ object Curation {
     * clf + rule gate scan (the costliest in-row work in the engine —
     * the bigram-feature HOF fold); now the first consumer in a pass
     * pays it once and the family reads the 3-longs-per-doc cache
-    * (the [[Dedup.shingleIndex]] discipline; released with
-    * [[Dedup.releaseIndexes]]).
+    * (a [[SessionMemo]] entry, like [[Dedup.shingleIndex]]).
     */
   private[graft] def gateScored(s: SparkSession, dir: String): DataFrame =
-    Dedup.cachedIndex(s, dir, "gate_scored") {
+    SessionMemo(s, dir, "gate_scored") {
       withRuleFlags(withClfColumns(
         Tables(s, dir, "documents").select(col("doc_id"), col("text"))))
         .select(col("clf_logit6"), col("clf_keep"), col("keep"))
@@ -3055,21 +3054,38 @@ object Curation {
     * corpus aggregate to ≤10 bins with map-side partials; ECE/MCE
     * are windows over those bins. One scan, one exchange, no join.
     */
+  /** X149's predicted probability p6 = 5·(clf_logit6 + 10⁵) ∈ [0, 10⁶].
+    * [[calP6]] through [[calOb4]] are shared by [[clfCalibration]] and
+    * `Gateway.calibrationFeed`.
+    */
+  private[graft] def calP6: Column = (col("clf_logit6") + 100000L) * 5L
+
+  /** The 0.1-wide predicted-probability bin of `p6`, 0..9. */
+  private[graft] def calBin: Column = expr("least(p6 DIV 100000, 9)").cast("long")
+
+  /** A bin's mean predicted probability Σp6/n at 4dp HALF_UP. */
+  private[graft] def calMp4: Column = expr("CAST((2 * sp6 + 100 * n) DIV (200 * n) AS BIGINT)")
+
+  /** A bin's observed keep rate Σy/n at 4dp HALF_UP. */
+  private[graft] def calOb4: Column = expr("CAST((20000 * sy + n) DIV (2 * n) AS BIGINT)")
+
+  /** ECE = Σ n_b·ǀgap4_bǀ / N at 4dp HALF_UP, off the named sum and count columns. */
+  private[graft] def calEce(sgap: String, n: String): Column =
+    expr(s"CAST((2 * $sgap + $n) DIV (2 * $n) AS BIGINT)") / lit(10000.0)
+
   private def clfCalibration(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val wAll = Window.partitionBy()
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     gateScored(s, dir)
-      .select(
-        ((col("clf_logit6") + 100000L) * 5L).as("p6"),
-        col("keep").cast("long").as("y"))
-      .groupBy(expr("least(p6 DIV 100000, 9)").cast("long").as("bin"))
+      .select(calP6.as("p6"), col("keep").cast("long").as("y"))
+      .groupBy(calBin.as("bin"))
       .agg(
         count(lit(1)).as("n"),
         sum(col("p6")).as("sp6"),
         sum(col("y")).as("sy"))
-      .withColumn("mp4", expr("CAST((2 * sp6 + 100 * n) DIV (200 * n) AS BIGINT)"))
-      .withColumn("ob4", expr("CAST((20000 * sy + n) DIV (2 * n) AS BIGINT)"))
+      .withColumn("mp4", calMp4)
+      .withColumn("ob4", calOb4)
       .withColumn("gap4", col("mp4") - col("ob4"))
       .withColumn("tn", sum(col("n")).over(wAll))
       .withColumn("sgap", sum(col("n") * abs(col("gap4"))).over(wAll))
@@ -3079,7 +3095,7 @@ object Curation {
         (col("mp4") / lit(10000.0)).as("mean_pred"),
         (col("ob4") / lit(10000.0)).as("obs_rate"),
         (col("gap4") / lit(10000.0)).as("gap"),
-        (expr("CAST((2 * sgap + tn) DIV (2 * tn) AS BIGINT)") / lit(10000.0)).as("ece"),
+        calEce("sgap", "tn").as("ece"),
         (max(abs(col("gap4"))).over(wAll) / lit(10000.0)).as("mce"))
       .orderBy("bin")
   }
@@ -3135,22 +3151,33 @@ object Curation {
     * join, no shuffle except the final order. The screen composes
     * with X35's gates in the admission pipeline.
     */
+  /** X154's green-token count of the token array `w`: tokens whose
+    * h32("wm " ∥ token) is even. Shared with `Gateway.watermarkFeed`,
+    * like [[wmFlag]].
+    */
+  private[graft] def wmGreen(w: Column): Column =
+    size(filter(w, x =>
+      conv(substring(md5(concat(lit("wm "), x)), 1, 8), 16, 10).cast("long") % 2 === 0))
+      .cast("long")
+
+  /** X154's integer-exact z ≥ 2 verdict for `g` green of `n` tokens:
+    * 2g − n ≥ 0 ∧ (2g − n)² ≥ 4n, as 0/1.
+    */
+  private[graft] def wmFlag(g: Column, n: Column): Column =
+    (g * 2 >= n && (g * 2 - n) * (g * 2 - n) >= n * 4).cast("long")
+
   private def watermark(s: SparkSession, dir: String): DataFrame = {
-    val green =
-      "size(filter(w, x -> CAST(conv(substring(md5(concat('wm ', x)), 1, 8), 16, 10) AS BIGINT) % 2 = 0))"
     Tables(s, dir, "documents")
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .select(
         col("doc_id"),
         size(col("w")).cast("long").as("n_tokens"),
-        expr(green).cast("long").as("n_green"))
+        wmGreen(col("w")).as("n_green"))
       .select(
         col("doc_id"), col("n_tokens"), col("n_green"),
         round((lit(2L) * col("n_green") - col("n_tokens")) / sqrt(col("n_tokens")), 4)
           .as("z"),
-        (col("n_green") * 2 >= col("n_tokens") &&
-          (col("n_green") * 2 - col("n_tokens")) * (col("n_green") * 2 - col("n_tokens"))
-            >= col("n_tokens") * 4).cast("long").as("watermarked"))
+        wmFlag(col("n_green"), col("n_tokens")).as("watermarked"))
       .orderBy("doc_id")
   }
 
@@ -3202,9 +3229,7 @@ object Curation {
     import s.implicits._
     val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     def scored = gateScored(s, dir)
-      .select(
-        ((col("clf_logit6") + 100000L) * 5L).as("p6"),
-        col("keep").cast("long").as("y"))
+      .select(calP6.as("p6"), col("keep").cast("long").as("y"))
     val thr = scored.agg(
       sum(when(col("y") === 1L, col("p6"))).as("s1"),
       sum(when(col("y") === 1L, 1L).otherwise(0L)).as("n1"),

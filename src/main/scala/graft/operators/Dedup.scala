@@ -150,89 +150,13 @@ object Dedup {
     sh.withColumn("n", count(lit(1)).over(Window.partitionBy("doc_id")))
   }
 
-  /** Session-scoped memo of the PERSISTED shingle index, keyed by
-    * (session, dir). Every dedup variant reads the index through this
-    * — near alone has five consumers, minhash three, and a bench pass
-    * running the whole family would otherwise rebuild the
-    * explode+distinct shuffle up to a dozen times. Memoizing the
-    * DataFrame (not just persisting per query) also fixes the r7
-    * ADVICE leak: each `dedupNear` construction used to register a
-    * fresh session-lifetime cache entry; now there is exactly one per
-    * (session, dir), re-persisted on demand if something (bench
-    * `clearCache`, manual `unpersist`, LRU eviction of the *entry* —
-    * block-level eviction keeps the entry and recomputes) dropped it.
-    *
-    * Lifecycle: cache data lives until `spark.catalog.clearCache()`
-    * or [[releaseIndexes]]; the memoized plan itself is tiny and
-    * keyed by an active session. Long-lived sessions that are done
-    * deduping should call [[releaseIndexes]].
+  /** The persisted shingle index every dedup variant reads — near
+    * alone has five consumers, minhash three — memoized per (session,
+    * dir) in [[SessionMemo]], so a bench pass over the whole family
+    * runs the explode+distinct shuffle once instead of a dozen times.
     */
-  private val indexMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
-
-  /** NOTE for builders whose `build` READS another memoized index:
-    * still hoist the upstream memo access outside the thunk (a miss
-    * evaluates `build` under the map update, and nesting memo calls
-    * inside it does redundant work), but the hoist is no longer
-    * load-bearing for persistence: EVERY access re-arms every memo
-    * entry of the session (see below), so a future builder that reads
-    * a memoized index inside its thunk cannot reintroduce the
-    * un-re-armed-persist regression that bit twice in r16
-    * (q_lsh_stats 0.7 s in bench pass 1 → 7 s in passes 2+ until the
-    * hoist). DedupSpec pins the re-arm.
-    */
-  private[operators] def cachedIndex(s: SparkSession, dir: String, tag: String)(build: => DataFrame): DataFrame = {
-    SessionCleanup.arm(s)
-    val df = indexMemo.getOrElseUpdate((s, dir, tag), build)
-    // Re-arm EVERY entry of this session whose persist was dropped
-    // (clearCache / unpersist / entry eviction), not just `tag`: a
-    // memo HIT skips `build`, so an upstream index persisted inside a
-    // downstream builder's thunk would otherwise stay un-re-armed
-    // after clearCache() — the r16 ADVICE asked for this convention
-    // to be code, not comment. persist() only marks (no
-    // materialization), and the map holds <10 entries, so the sweep
-    // is O(entries) pointer work per access.
-    //
-    // SERIALIZED storage: the memo population grew to ~6 tables in
-    // r16 and deserialized row caches are long-lived GC load that
-    // taxed UNRELATED queries in the full-surface run (measured:
-    // q_cooccur 21 s in-run vs 4 s standalone at sf1-shape before
-    // this). Serialized blocks are 3-5x smaller, GC-opaque, and the
-    // decode cost on these narrow long/string rows is noise next to
-    // the joins they feed — the same trade a real cluster makes for
-    // large cached tables.
-    indexMemo.foreach { case ((ks, _, _), kdf) =>
-      if ((ks eq s) && kdf.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        kdf.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    }
-    df
-  }
-
   private[graft] def shingleIndex(s: SparkSession, dir: String): DataFrame =
-    cachedIndex(s, dir, "shingles")(shingles(s, dir))
-
-  /** Unpersist and forget every memoized dedup index of `s`, plus the
-    * ANN query vectors ([[Similarity.releaseQueryVecs]]) and the
-    * cluster labels ([[Clustering.releaseLabels]]) memoized for it —
-    * one call releases every session-keyed memo this library holds.
-    * [[SessionCleanup]] runs the same release automatically for
-    * stopped contexts, so forgetting this call bounds the leak instead
-    * of pinning sessions for the JVM lifetime.
-    */
-  def releaseIndexes(s: SparkSession): Unit = {
-    releaseIndexes(_ eq s)
-    Similarity.releaseQueryVecs(s)
-    Clustering.releaseLabels(s)
-    TextAnalysis.releaseBpe(s)
-  }
-
-  private[graft] def releaseIndexes(cond: SparkSession => Boolean): Unit =
-    indexMemo.keys.filter(k => cond(k._1)).foreach { k =>
-      indexMemo.remove(k).foreach { df =>
-        // unpersist on an already-stopped context is a no-op failure
-        try df.unpersist() catch { case _: Exception => () }
-      }
-    }
+    SessionMemo(s, dir, "shingles")(shingles(s, dir))
 
   /** Apply the ≥0.6 integer-arithmetic Jaccard threshold (10·|∩| ≥
     * 6·|∪| — no float in the cut, so no rounding divergence can flip a
@@ -533,15 +457,14 @@ object Dedup {
     * and a family pass (bench, the CC chain) was rebuilding the
     * collision join + correction once per consumer (r15 verdict: the
     * `q_lsh_recall` 2.5 s class; X117's sweep paid 8.3 s of it at
-    * sf1-shape). Dup-volume-bounded, so the persist is tiny; released
-    * with [[releaseIndexes]] like every other memo; this one repays a
-    * 13 s collision build across three consumers (its MinHash twin is
+    * sf1-shape). Dup-volume-bounded, so the persist is tiny; this one
+    * repays a 13 s collision build across three consumers (its MinHash twin is
     * [[minhashVerified]], which repays the iterative cluster family).
     */
   private[graft] def nearPairsIndexed(s: SparkSession, dir: String): DataFrame = {
     val sh = shingleIndex(s, dir) // hoisted: re-arms the upstream persist on memo hits
     val dfs = shingleDfDict(s, dir) // r20: cap filter + high-df probe read the cached dict
-    cachedIndex(s, dir, "near_pairs")(nearPairs(sh, nearMaxDf, Some(dfs)))
+    SessionMemo(s, dir, "near_pairs")(nearPairs(sh, nearMaxDf, Some(dfs)))
   }
 
   /** The X5a chain through `verified` (corpus → capped collisions →
@@ -860,7 +783,7 @@ object Dedup {
         .select(
           (col("doc_id") + 400000).as("doc_id"),
           array_join(slice(split(col("text"), " "), 1, excerptTokens), " ").as("text")))
-    cachedIndex(s, dir, "shingles_containment")(shinglesOf(ext))
+    SessionMemo(s, dir, "containment_idx")(shinglesOf(ext))
   }
 
   /** X54's (shingle, df) dictionary over the excerpt-extended index,
@@ -874,7 +797,7 @@ object Dedup {
     */
   private[graft] def containmentDf(s: SparkSession, dir: String): DataFrame = {
     val sh = containmentIndex(s, dir) // hoisted: re-arms upstream persist
-    cachedIndex(s, dir, "containment_df")(
+    SessionMemo(s, dir, "containment_df")(
       sh.groupBy(col("shingle")).agg(count(lit(1)).as("df")))
   }
 
@@ -1051,7 +974,7 @@ object Dedup {
     */
   private[graft] def minhashVerified(s: SparkSession, dir: String): DataFrame = {
     val sh = shingleIndex(s, dir) // hoisted: re-arms the upstream persist on memo hits
-    cachedIndex(s, dir, "minhash_pairs")(verifyJaccard(sh, minhashCands(sh)))
+    SessionMemo(s, dir, "minhash_pairs")(verifyJaccard(sh, minhashCands(sh)))
   }
 
   /** X53 — INCREMENTAL near-dedup: the production ingest shape, where
@@ -1181,7 +1104,7 @@ object Dedup {
     */
   private[graft] def simSketch(s: SparkSession, dir: String): DataFrame = {
     val sh = shingleIndex(s, dir) // hoisted: re-arms the upstream persist on memo hits
-    cachedIndex(s, dir, "simsketch") {
+    SessionMemo(s, dir, "simsketch") {
       import Hashing.h60
       sh.select(col("doc_id"), h60(col("shingle")).as("h"))
         .groupBy(col("doc_id"))
@@ -1940,10 +1863,10 @@ object Dedup {
     * (the df aggregate + the position join back), so a family pass
     * paid the split + positional explode + md5 four times. Volume is
     * ~(tokens − 11) rows/doc — linear in corpus tokens, same class as
-    * the shingle index; released with [[releaseIndexes]].
+    * the shingle index.
     */
   private[graft] def substrGrams(s: SparkSession, dir: String): DataFrame =
-    cachedIndex(s, dir, "substr_grams") {
+    SessionMemo(s, dir, "substr_grams") {
       val n = substrGramN
       val concatGram = (1 until n)
         .foldLeft("element_at(w, i)") { (acc, j) => s"concat($acc, ' ', element_at(w, i + $j))" }
@@ -1972,7 +1895,7 @@ object Dedup {
     */
   private[graft] def substrDf(s: SparkSession, dir: String): DataFrame = {
     val grams = substrGrams(s, dir)
-    cachedIndex(s, dir, "substr_df")(
+    SessionMemo(s, dir, "substr_df")(
       grams.select(col("doc_id"), col("h"))
         .groupBy("h").agg(countDistinct(col("doc_id")).as("df")))
   }
@@ -1982,7 +1905,7 @@ object Dedup {
     val grams = substrGrams(s, dir) // hoisted: re-arms the upstream persist on memo hits
       .select(col("doc_id"), col("i"), col("h"))
     val dfs = substrDf(s, dir) // hoisted for the same reason
-    cachedIndex(s, dir, "substr_pairs") {
+    SessionMemo(s, dir, "substr_pairs") {
     val dfreq = dfs
       .filter(col("df") <= substrMaxDf)
       .select("h")
@@ -2288,7 +2211,7 @@ object Dedup {
     * line keeps the first payer honest.
     */
   private[graft] def sourceSigs(s: SparkSession, dir: String): DataFrame =
-    cachedIndex(s, dir, "source_sigs") {
+    SessionMemo(s, dir, "source_sigs") {
       val base = h32(col("shingle")) % 2147483648L
       // r21: one md5 + 64 min-lane products per shingle on a single-
       // task scan — fan out before the explode
@@ -2656,7 +2579,7 @@ object Dedup {
     */
   private[graft] def shingleDfDict(s: SparkSession, dir: String): DataFrame = {
     val sh = shingleIndex(s, dir) // hoisted: re-arms the upstream persist on memo hits
-    cachedIndex(s, dir, "shingle_df")(
+    SessionMemo(s, dir, "shingle_df")(
       sh.groupBy(col("shingle")).agg(count(lit(1)).as("df")))
   }
 

@@ -62,33 +62,15 @@ object Similarity {
     * time and early-abandon scoring (graft.plans.ScoredTopK). Note
     * the one-row fetch is an eager Spark job at query CONSTRUCTION.
     */
-  private val qMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Array[Float]]
-
-  private[graft] def queryVec(s: SparkSession, dir: String): Array[Float] = {
-    SessionCleanup.arm(s)
-    qMemo.getOrElseUpdate((s, dir),
+  private[graft] def queryVec(s: SparkSession, dir: String): Array[Float] =
+    SessionMemo(s, dir, "query_vec") {
       Tables(s, dir, "embeddings").filter(col("vec_id") === 0)
         .select("embedding").head(1).headOption
         .map(_.getSeq[Float](0).toArray)
         .getOrElse(throw new IllegalArgumentException(
           s"query vector row (vec_id = 0) not found in $dir/embeddings — " +
-            "the similarity queries take their query vector from that row")))
-  }
-
-  /** Forget `s`'s memoized query vectors. [[Dedup.releaseIndexes]]
-    * calls this too, so one release call covers every session-keyed
-    * memo; [[SessionCleanup]] is the backstop for callers that forget.
-    */
-  def releaseQueryVecs(s: SparkSession): Unit = releaseQueryVecs(_ eq s)
-
-  private[graft] def releaseQueryVecs(cond: SparkSession => Boolean): Unit = {
-    qMemo.keys.filter(k => cond(k._1)).foreach(qMemo.remove)
-    sq8Memo.keys.filter(k => cond(k._1)).foreach(sq8Memo.remove)
-  }
-
-  private[graft] def hasMemoizedQueryVec(s: SparkSession, dir: String): Boolean =
-    qMemo.contains((s, dir))
+            "the similarity queries take their query vector from that row"))
+    }
 
   /** The Hamming-≤1 probe keys for one plane set: the query's bucket
     * plus each one-plane flip — 1 + |planes| literal ints. Because
@@ -576,9 +558,6 @@ object Similarity {
     */
   private[graft] val sq8Levels = 256
 
-  private val sq8Memo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Array[(Double, Double)]]
-
   /** Per-dimension [lo, hi] quantization bounds for X64, trained on
     * the search corpus in ONE aggregate pass (128 min/max partials,
     * map-side combined — the "train" step a deployment runs once and
@@ -588,9 +567,8 @@ object Similarity {
     * silently emitting a 0-width step would turn that dimension's
     * codes into division-by-zero NaNs downstream.
     */
-  private[graft] def sq8Bounds(s: SparkSession, dir: String): Array[(Double, Double)] = {
-    SessionCleanup.arm(s)
-    sq8Memo.getOrElseUpdate((s, dir), {
+  private[graft] def sq8Bounds(s: SparkSession, dir: String): Array[(Double, Double)] =
+    SessionMemo(s, dir, "sq8_bounds") {
       val dim = pqM * pqSubDim
       val aggs = (1 to dim).flatMap(j => Seq(
         min(element_at(col("embedding"), j).cast("double")).as(s"lo$j"),
@@ -606,8 +584,7 @@ object Similarity {
           s"SQ8: degenerate embedding dimension ${i + 1} (lo == hi == $lo) in $dir")
         (lo, hi)
       }
-    })
-  }
+    }
 
   /** The SQ8 code of dimension `j` (1-based) under bounds (lo, hi):
     * clamp(floor((v − lo) · 256 / (hi − lo)), 0, 255). Written in

@@ -664,36 +664,21 @@ object TextAnalysis {
       .toDF("step", "l_sym", "r_sym", "pair_count").orderBy("step")
   }
 
-  /** Session-memoized learned merge list (OPTIMIZATION r20, the
-    * [[graft.operators.Clustering.clusterLabels]] construction-time
-    * discipline): the X41 merge-learn loop — N bounded argmax collects
-    * plus N per-step checkpoints of the vocab table — is identical
-    * for its three declared consumers (`q_bpe_merges`, `q_bpe_encode`,
+  /** Session-memoized learned merge list (OPTIMIZATION r20): the X41
+    * merge-learn loop — N bounded argmax collects plus N per-step
+    * checkpoints of the vocab table — is identical for its three
+    * declared consumers (`q_bpe_merges`, `q_bpe_encode`,
     * `q_tok_fertility`), and each used to re-run it at construction
     * (measured ~1.4 s × 3 per bench pass at sf0.1). The memo holds N
-    * driver tuples (plan constants), nothing cluster-side, so there is
-    * nothing to unpersist — release just forgets the entry;
-    * `graft.Bench` releases between passes so every pass re-pays the
-    * real learn cost exactly once, as its own `memo:bpe_merges` line.
+    * driver tuples (plan constants), nothing cluster-side.
     */
-  private val bpeMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[(Long, String, String, Long)]]
-
-  private[graft] def learnedMerges(s: SparkSession, dir: String): Seq[(Long, String, String, Long)] = {
-    SessionCleanup.arm(s)
-    bpeMemo.getOrElseUpdate((s, dir), {
+  private[graft] def learnedMerges(s: SparkSession, dir: String): Seq[(Long, String, String, Long)] =
+    SessionMemo(s, dir, "bpe_merges") {
       val wf = docs(s, dir)
         .select(explode(split(col("text"), " ")).as("word"))
         .groupBy(col("word")).agg(count(lit(1)).as("freq"))
       bpeMergesFrom(wf, bpeMergeSteps)
-    })
-  }
-
-  private[graft] def releaseBpe(cond: SparkSession => Boolean): Unit =
-    bpeMemo.keys.filter(k => cond(k._1)).foreach(bpeMemo.remove)
-
-  /** Release the memoized BPE merges of `s` (driver-side tuples only). */
-  def releaseBpe(s: SparkSession): Unit = releaseBpe(_ eq s)
+    }
 
   /** The merge loop itself, over any (word, freq) table — factored so
     * the spec can drive degenerate vocabularies. Stops early (fewer

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.{Dedup, Extensions, FrameCodec, Hashing, Shuffle}
+import graft.operators.{Curation, Dedup, Extensions, FrameCodec, Hashing, Shuffle}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
@@ -911,18 +911,12 @@ object Gateway {
       watermarkDelay: String = "30 seconds"): DataFrame = {
     val parsed = FeedLine.parse(lines, "doc_id:long text")
       .withWatermark("ts", watermarkDelay)
-    val scored = graft.operators.Curation.withRuleFlags(
-      graft.operators.Curation.withClfColumns(parsed))
-      .select(
-        col("ts"),
-        ((col("clf_logit6") + 100000L) * 5L).as("p6"),
-        col("keep").cast("long").as("y"))
-    scored
-      .groupBy(window(col("ts"), windowDuration),
-        expr("least(p6 DIV 100000, 9)").cast("long").as("bin"))
+    Curation.withRuleFlags(Curation.withClfColumns(parsed))
+      .select(col("ts"), Curation.calP6.as("p6"), col("keep").cast("long").as("y"))
+      .groupBy(window(col("ts"), windowDuration), Curation.calBin.as("bin"))
       .agg(count(lit(1)).as("n"), sum(col("p6")).as("sp6"), sum(col("y")).as("sy"))
-      .withColumn("mp4", expr("CAST((2 * sp6 + 100 * n) DIV (200 * n) AS BIGINT)"))
-      .withColumn("ob4", expr("CAST((20000 * sy + n) DIV (2 * n) AS BIGINT)"))
+      .withColumn("mp4", Curation.calMp4)
+      .withColumn("ob4", Curation.calOb4)
       .withColumn("agap", abs(col("mp4") - col("ob4")))
       .groupBy(window(window_time(col("window")), windowDuration))
       .agg(
@@ -934,8 +928,7 @@ object Gateway {
         col("window.start").as("window_start"),
         col("n_docs").cast("long").as("n_docs"),
         col("n_bins").cast("long").as("n_bins"),
-        (expr("CAST((2 * sgap + n_docs) DIV (2 * n_docs) AS BIGINT)")
-          / lit(10000.0)).as("ece"),
+        Curation.calEce("sgap", "n_docs").as("ece"),
         (col("mce4") / lit(10000.0)).as("mce"))
   }
 
@@ -963,13 +956,10 @@ object Gateway {
       .select(
         col("ts"),
         size(col("w")).cast("long").as("n"),
-        expr("size(filter(w, x -> CAST(conv(substring(md5(concat('wm ', x)), 1, 8), 16, 10) AS BIGINT) % 2 = 0))")
-          .cast("long").as("g"))
+        Curation.wmGreen(col("w")).as("g"))
       .select(
         col("ts"),
-        ((col("g") * 2 >= col("n")) &&
-          (col("g") * 2 - col("n")) * (col("g") * 2 - col("n")) >= col("n") * 4)
-          .cast("long").as("flagged"),
+        Curation.wmFlag(col("g"), col("n")).as("flagged"),
         // per-doc z snapped to integer millionths before the window sum
         round(lit(1000000.0) * (lit(2L) * col("g") - col("n")) / sqrt(col("n")), 0)
           .cast("long").as("z6"))

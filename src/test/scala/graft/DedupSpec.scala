@@ -830,7 +830,7 @@ class DedupSpec extends AnyFunSuite {
     // The un-re-armed-persist regression class (0.7s -> 7s, twice in
     // r16): a memo HIT skips the builder thunk, so an upstream index
     // persisted only inside a downstream thunk stayed unpersisted
-    // after clearCache(). The fix is structural — ANY cachedIndex
+    // after clearCache(). The fix is structural — ANY SessionMemo
     // access re-persists EVERY memo entry of the session — so the pin
     // is: populate several entries, clearCache, touch only ONE, and
     // the OTHERS must be re-armed too (whatever builder nesting a

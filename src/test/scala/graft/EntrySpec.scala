@@ -81,7 +81,7 @@ class EntrySpec extends AnyFunSuite {
     // building plans (k-means centroid reads, the CC fixpoint, BPE
     // merge loops) — but the front-end claim is the whole surface,
     // not 3 representatives. Registering all 205 is bounded by the
-    // shared memo caches (Dedup.cachedIndex and friends), so this
+    // shared memo caches (graft.operators.SessionMemo), so this
     // must complete and every declared name must resolve as a view;
     // a 5-query cross-family sample is then answered via spark.sql
     // and checked against the Scala API.

@@ -100,16 +100,32 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("query-vector memo has a release path: one call frees every session memo") {
-    // r8 ADVICE: qMemo strongly keyed sessions for the JVM lifetime
-    // with no release path. Dedup.releaseIndexes is the one-call
-    // lifecycle for ALL session-keyed memos now.
-    Similarity.queryVec(spark, sf)
-    assert(Similarity.hasMemoizedQueryVec(spark, sf))
-    graft.operators.Dedup.releaseIndexes(spark)
-    assert(!Similarity.hasMemoizedQueryVec(spark, sf))
-    // memoization itself still works after a release
-    Similarity.queryVec(spark, sf)
-    assert(Similarity.hasMemoizedQueryVec(spark, sf))
+    // r8 ADVICE: the query-vector memo strongly keyed sessions for the
+    // JVM lifetime with no release path. SessionMemo.release is the
+    // one-call lifecycle for EVERY memo kind: persisted tables,
+    // driver-side vectors, bounds and tuples alike.
+    import graft.operators.{Clustering, Dedup, SessionMemo, TextAnalysis}
+    val memos: Seq[(String, () => Any)] = Seq(
+      "shingles" -> (() => Dedup.shingleIndex(spark, sf)),
+      "cluster_labels" -> (() => Clustering.clusterLabels(spark, sf)),
+      "centroids" -> (() => Clustering.centroids(spark, sf)),
+      "query_vec" -> (() => Similarity.queryVec(spark, sf)),
+      "sq8_bounds" -> (() => Similarity.sq8Bounds(spark, sf)),
+      "bpe_merges" -> (() => TextAnalysis.learnedMerges(spark, sf)))
+    def held = memos.map(_._1).filter(SessionMemo.contains(spark, sf, _))
+    val before = memos.map(_._2())
+    assert(held === memos.map(_._1))
+    SessionMemo.release(spark)
+    assert(held.isEmpty, "one release must forget every memo kind")
+    val sh = before.head.asInstanceOf[org.apache.spark.sql.DataFrame]
+    assert(sh.storageLevel === org.apache.spark.storage.StorageLevel.NONE,
+      "release must unpersist the memoized tables")
+    // memoization itself still works after a release: a fresh access
+    // rebuilds every entry
+    val after = memos.map(_._2())
+    assert(held === memos.map(_._1))
+    assert(before.zip(after).forall { case (b, a) => !(b.asInstanceOf[AnyRef] eq a.asInstanceOf[AnyRef]) },
+      "a fresh access after release must rebuild, not return the released entry")
   }
 
   test("IVF probe scans one cell only and ranks it exactly") {

@@ -12,12 +12,7 @@ set -e
 cd "$(dirname "$0")/.."
 OUT=tools/bench_sf01.json
 TMP=$(mktemp /tmp/graft_bench_sf01.XXXX.json)
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic \
-         sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
+. tools/jvm_opens.sh
 # Per-query MIN over 3 back-to-back idle passes (VERDICT r19 #1: the
 # sf1 bank's own discipline, applied to the committed snapshot so
 # round-over-round comparisons stop reading ambient machine haze as

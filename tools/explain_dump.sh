@@ -4,12 +4,7 @@
 set -e
 cd "$(dirname "$0")/.."
 OUT=$1; SUF=$2; shift 2
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic \
-         sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
+. tools/jvm_opens.sh
 mkdir -p "$OUT"
 java $ADD_OPENS -Xmx8g -Dspark.sql.session.timeZone=UTC \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" graft.Explain \

@@ -3,12 +3,7 @@
 # held open) — see Inspect.scala. SPARK_GRAFT_QUERIES selects queries.
 set -e
 cd "$(dirname "$0")/.."
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic \
-         sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
+. tools/jvm_opens.sh
 SPARK_GRAFT_SF_DIR=${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1} \
 java $ADD_OPENS -Xmx24g -Dspark.sql.session.timeZone=UTC \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" graft.Inspect

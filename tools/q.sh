@@ -5,12 +5,7 @@
 #   tools/q.sh q_a,q_b [passes]
 set -e
 cd "$(dirname "$0")/.."
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic \
-         sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
+. tools/jvm_opens.sh
 PASSES=${2:-2}
 SPARK_GRAFT_SF_DIR=${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1} \
 SPARK_GRAFT_BENCH_PASSES=$PASSES \

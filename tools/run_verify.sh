@@ -6,13 +6,8 @@
 set -e
 SF_DIR=${1:-/root/testdata/sf0.01}
 OUT_DIR=${2:-/tmp/graft_verify}
-CLASSES=/root/repo/target/scala-2.13/classes
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic \
-         sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
+CLASSES="$(cd "$(dirname "$0")/.." && pwd)/target/scala-2.13/classes"
+. "$(dirname "$0")/jvm_opens.sh"
 rm -rf "$OUT_DIR"
 exec java $ADD_OPENS -Xmx8g \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \

@@ -29,12 +29,7 @@ if [ -z "$QUERIES" ] || [ "${QUERIES#,}" != "$QUERIES" ]; then
   echo "SF10 PROBE FAIL: query list empty or malformed: '$QUERIES'" >&2
   exit 1
 fi
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic \
-         sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
+. tools/jvm_opens.sh
 run_bench() {  # $1 = query list for this JVM, $2 = output json path
   SPARK_GRAFT_SF_DIR="$DIR" \
   SPARK_GRAFT_BENCH_PASSES=1 SPARK_GRAFT_QUERIES="$1" \

@@ -8,16 +8,11 @@
 set -e
 SF1_DIR=${1:-/tmp/graft_sf1full}
 OUT_JSON=${2:-/tmp/graft_sf1_bench.json}
-CLASSES=/root/repo/target/scala-2.13/classes
+CLASSES="$(cd "$(dirname "$0")/.." && pwd)/target/scala-2.13/classes"
 if [ ! -f "$SF1_DIR/documents.parquet" ]; then
   python3 "$(dirname "$0")/sf1_shape_build.py" /root/testdata/sf0.1 "$SF1_DIR"
 fi
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic \
-         sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
+. "$(dirname "$0")/jvm_opens.sh"
 SPARK_GRAFT_SF_DIR="$SF1_DIR" \
 SPARK_GRAFT_BENCH_PASSES=1 \
 SPARK_GRAFT_BENCH_OUT=/tmp/graft_sf1_bench_side.json \
