@@ -3026,6 +3026,25 @@ object Curation {
        |  END AS auc
        |FROM roc, tot t ORDER BY bin""".stripMargin
 
+  /** X149's predicted probability p6 = 5·(clf_logit6 + 10⁵) ∈ [0, 10⁶].
+    * [[calP6]] through [[calEce]] are shared by [[clfCalibration]] and
+    * `Gateway.calibrationFeed`.
+    */
+  private[graft] def calP6: Column = (col("clf_logit6") + 100000L) * 5L
+
+  /** The 0.1-wide predicted-probability bin of `p6`, 0..9. */
+  private[graft] def calBin: Column = expr("least(p6 DIV 100000, 9)").cast("long")
+
+  /** A bin's mean predicted probability Σp6/n at 4dp HALF_UP. */
+  private[graft] def calMp4: Column = expr("CAST((2 * sp6 + 100 * n) DIV (200 * n) AS BIGINT)")
+
+  /** A bin's observed keep rate Σy/n at 4dp HALF_UP. */
+  private[graft] def calOb4: Column = expr("CAST((20000 * sy + n) DIV (2 * n) AS BIGINT)")
+
+  /** ECE = Σ n_b·ǀgap4_bǀ / N at 4dp HALF_UP, off the named sum and count columns. */
+  private[graft] def calEce(sgap: String, n: String): Column =
+    expr(s"CAST((2 * $sgap + $n) DIV (2 * $n) AS BIGINT)") / lit(10000.0)
+
   /** X149 — classifier calibration audit (`q_clf_calibration`): the
     * reliability table + ECE that decides whether X67's score can be
     * READ AS a probability — X129 answers "does the score rank
@@ -3054,25 +3073,6 @@ object Curation {
     * corpus aggregate to ≤10 bins with map-side partials; ECE/MCE
     * are windows over those bins. One scan, one exchange, no join.
     */
-  /** X149's predicted probability p6 = 5·(clf_logit6 + 10⁵) ∈ [0, 10⁶].
-    * [[calP6]] through [[calOb4]] are shared by [[clfCalibration]] and
-    * `Gateway.calibrationFeed`.
-    */
-  private[graft] def calP6: Column = (col("clf_logit6") + 100000L) * 5L
-
-  /** The 0.1-wide predicted-probability bin of `p6`, 0..9. */
-  private[graft] def calBin: Column = expr("least(p6 DIV 100000, 9)").cast("long")
-
-  /** A bin's mean predicted probability Σp6/n at 4dp HALF_UP. */
-  private[graft] def calMp4: Column = expr("CAST((2 * sp6 + 100 * n) DIV (200 * n) AS BIGINT)")
-
-  /** A bin's observed keep rate Σy/n at 4dp HALF_UP. */
-  private[graft] def calOb4: Column = expr("CAST((20000 * sy + n) DIV (2 * n) AS BIGINT)")
-
-  /** ECE = Σ n_b·ǀgap4_bǀ / N at 4dp HALF_UP, off the named sum and count columns. */
-  private[graft] def calEce(sgap: String, n: String): Column =
-    expr(s"CAST((2 * $sgap + $n) DIV (2 * $n) AS BIGINT)") / lit(10000.0)
-
   private def clfCalibration(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val wAll = Window.partitionBy()
@@ -3125,6 +3125,21 @@ object Curation {
        |  CAST(max(abs(mp4 - ob4)) OVER () AS BIGINT) / 10000.0 AS mce
        |FROM g ORDER BY bin""".stripMargin
 
+  /** X154's green-token count of the token array `w`: tokens whose
+    * h32("wm " ∥ token) is even. Shared with `Gateway.watermarkFeed`,
+    * like [[wmFlag]].
+    */
+  private[graft] def wmGreen(w: Column): Column =
+    size(filter(w, x =>
+      conv(substring(md5(concat(lit("wm "), x)), 1, 8), 16, 10).cast("long") % 2 === 0))
+      .cast("long")
+
+  /** X154's integer-exact z ≥ 2 verdict for `g` green of `n` tokens:
+    * 2g − n ≥ 0 ∧ (2g − n)² ≥ 4n, as 0/1.
+    */
+  private[graft] def wmFlag(g: Column, n: Column): Column =
+    (g * 2 >= n && (g * 2 - n) * (g * 2 - n) >= n * 4).cast("long")
+
   /** X154 — synthetic-text watermark screen (`q_watermark`): the
     * Kirchenbauer et al. (ICML 2023) green-list detector as a corpus
     * gate — LLM generators that watermark bias token choice toward a
@@ -3151,21 +3166,6 @@ object Curation {
     * join, no shuffle except the final order. The screen composes
     * with X35's gates in the admission pipeline.
     */
-  /** X154's green-token count of the token array `w`: tokens whose
-    * h32("wm " ∥ token) is even. Shared with `Gateway.watermarkFeed`,
-    * like [[wmFlag]].
-    */
-  private[graft] def wmGreen(w: Column): Column =
-    size(filter(w, x =>
-      conv(substring(md5(concat(lit("wm "), x)), 1, 8), 16, 10).cast("long") % 2 === 0))
-      .cast("long")
-
-  /** X154's integer-exact z ≥ 2 verdict for `g` green of `n` tokens:
-    * 2g − n ≥ 0 ∧ (2g − n)² ≥ 4n, as 0/1.
-    */
-  private[graft] def wmFlag(g: Column, n: Column): Column =
-    (g * 2 >= n && (g * 2 - n) * (g * 2 - n) >= n * 4).cast("long")
-
   private def watermark(s: SparkSession, dir: String): DataFrame = {
     Tables(s, dir, "documents")
       .select(col("doc_id"), split(col("text"), " ").as("w"))

@@ -458,8 +458,9 @@ object Dedup {
     * collision join + correction once per consumer (r15 verdict: the
     * `q_lsh_recall` 2.5 s class; X117's sweep paid 8.3 s of it at
     * sf1-shape). Dup-volume-bounded, so the persist is tiny; this one
-    * repays a 13 s collision build across three consumers (its MinHash twin is
-    * [[minhashVerified]], which repays the iterative cluster family).
+    * repays a 13 s collision build across three consumers (its MinHash
+    * twin is [[minhashVerified]], which repays the iterative cluster
+    * family).
     */
   private[graft] def nearPairsIndexed(s: SparkSession, dir: String): DataFrame = {
     val sh = shingleIndex(s, dir) // hoisted: re-arms the upstream persist on memo hits
