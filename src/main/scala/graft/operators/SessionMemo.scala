@@ -33,12 +33,12 @@ import org.apache.spark.storage.StorageLevel
   * blocks are gone with the executors). Spark has no per-session close
   * event, so a live context's abandoned sessions still need [[release]].
   */
-private[graft] object SessionMemo {
+object SessionMemo {
 
   private val memo = TrieMap.empty[(SparkSession, String, String), Any]
   private val armed = TrieMap.empty[SparkContext, Unit]
 
-  def apply[T](s: SparkSession, dir: String, tag: String)(build: => T): T = {
+  private[graft] def apply[T](s: SparkSession, dir: String, tag: String)(build: => T): T = {
     arm(s)
     val v = memo.getOrElseUpdate((s, dir, tag), build)
     memo.foreach {
@@ -49,7 +49,7 @@ private[graft] object SessionMemo {
     v.asInstanceOf[T]
   }
 
-  def contains(s: SparkSession, dir: String, tag: String): Boolean = memo.contains((s, dir, tag))
+  private[graft] def contains(s: SparkSession, dir: String, tag: String): Boolean = memo.contains((s, dir, tag))
 
   /** Unpersist and forget every memo of `s`. */
   def release(s: SparkSession): Unit = drop(_ eq s)
@@ -57,7 +57,7 @@ private[graft] object SessionMemo {
   /** The memos a bench pass builds first, each timed as its own
     * `memo:<tag>` line, in this order; running one materializes it.
     */
-  val warmed: Seq[(String, (SparkSession, String) => Unit)] = Seq(
+  private[graft] val warmed: Seq[(String, (SparkSession, String) => Unit)] = Seq(
     "shingles" -> built(Dedup.shingleIndex),
     "shingle_df" -> built(Dedup.shingleDfDict),
     "substr_df" -> built(Dedup.substrDf),
