@@ -142,6 +142,31 @@ class GatewaySpec extends AnyFunSuite {
       (1010L, 11L, 0) -> (1L, 8.0)))
   }
 
+  test("one stateful execution per micro-batch: state metrics count each key once") {
+    val out = Files.createTempDirectory("gw-out").toString
+    val ckpt = Files.createTempDirectory("gw-ckpt").toString
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val ms = MemoryStream[String]
+    ms.addData(
+      "1000 10 1.5 2.5",
+      "1002 10 0.5 0.5",
+      "1011 11 2.0",
+      "1025 12 1.0 2.0 3.0",
+      "1027 12 4.0 5.0 6.0")
+    val c = conf(out, ckpt)
+    val Seq(q) = Gateway.start(Gateway.aggregate(Gateway.decode(ms.toDF(), listener), c), c)
+    try q.processAllAvailable()
+    finally q.stop()
+    val keys = finalState(s"$out/main").size
+    assert(keys === 6)
+    // the data batch's progress: every state-store partition ran once,
+    // so its summed metrics are the state itself, not a multiple of it
+    val Seq(p) = q.recentProgress.toSeq.filter(_.numInputRows > 0)
+    assert(p.stateOperators.map(_.numRowsTotal).sum === keys)
+    assert(p.stateOperators.map(_.numRowsUpdated).sum === keys)
+  }
+
   test("S2/P3 e2e: RFM2Pi dialect frames decode through the full gateway") {
     val out = Files.createTempDirectory("gw-out").toString
     val ckpt = Files.createTempDirectory("gw-ckpt").toString
