@@ -115,6 +115,12 @@ object GraftConf {
     // measured WORSE (44-46 s: it serializes the compute-heavy
     // index-build aggregates) and is deliberately left at default.
     spark.conf.set("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+    // Checkpoint and state-store files go through FileContext, which
+    // builds a fresh AbstractFileSystem per call from this key: the
+    // fork-free local filesystem (LocalFs) takes effect for every
+    // streaming query started after this line.
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.AbstractFileSystem.file.impl", classOf[LocalFs.Fs].getName)
   }
 }
 

@@ -4,6 +4,7 @@ import graft.operators.{Curation, Dedup, Extensions, FrameCodec, Hashing, Shuffl
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.storage.StorageLevel
 
 /** The reference gateway reassembled on Structured Streaming
   * (SURVEY.md §2.6; ※ oemgateway.py · OemGateway.run() — symbol-level
@@ -40,6 +41,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *    replays the batch and re-POSTs the same payload, the same
   *    send-then-clear race the reference has (GatewaySpec failed-POST
   *    test proves fail → no checkpoint advance → replay delivers).
+  *    Each micro-batch writes offset, commit and state-store files
+  *    through `FileContext` on `file:` checkpoints; [[graft.LocalFs]]
+  *    (registered by `GraftConf.ensure`) writes them without the
+  *    `chmod`/`readlink` processes Hadoop's local filesystem forks per
+  *    file when libhadoop is absent — thousands per minute of gateway
+  *    traffic, most of the batch's state-commit time.
   *  - B6 hot reload      → NOT plan mutation (impossible in Spark):
   *    stop the affected query and restart from its checkpoint with new
   *    settings — state survives; see [[Gateway.hotReloadNote]].
@@ -51,6 +58,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * sized to executor count are the knobs. Sinks are per-buffer
   * independent queries, so one slow emoncms target never backpressures
   * another (the reference shares one thread across all buffers).
+  * Each sink persists its micro-batch frame once, so the stateful
+  * stage runs once per batch however many actions the sink takes.
   *
   * (The scaladoc above documents [[Gateway]]; the record types below
   * are top-level because encoder codegen for case classes nested in
@@ -2761,14 +2770,20 @@ object Gateway {
         .option("checkpointLocation", s"${conf.checkpointRoot}/${b.name}")
         .trigger(Trigger.ProcessingTime(s"${b.periodSeconds} seconds"))
         .foreachBatch { (df: DataFrame, id: Long) =>
-          if (!df.isEmpty) b.postUrl match {
+          // The empty check, the encode's sentat broadcast and the sink
+          // are three actions; each would re-run the stateful stage
+          // (and re-add its state metrics) without this persist. A
+          // failed send still throws past the unpersist, so the batch
+          // fails and replays as before.
+          val batch = df.persist(StorageLevel.MEMORY_AND_DISK)
+          try if (!batch.isEmpty) b.postUrl match {
             case Some(url) if b.executorPost =>
               // executor-side sends (see BufferConf.executorPost): each
               // task POSTs the chunks it holds; any failure fails the
               // task → the batch → the checkpoint holds. postBulk is an
               // object method, so each executor JVM lazily builds its
               // own HttpClient — nothing driver-side is serialized.
-              emoncmsPayload(df).foreachPartition {
+              emoncmsPayload(batch).foreachPartition {
                 (it: Iterator[org.apache.spark.sql.Row]) =>
                   it.foreach(r => postBulk(url, r.getString(0)))
               }
@@ -2778,13 +2793,14 @@ object Gateway {
               // the reference's bounded POST-per-period — and the
               // sequential single-client loop is the ORDERED delivery
               // option executorPost gives up.
-              emoncmsPayload(df).collect().foreach(r => postBulk(url, r.getString(0)))
+              emoncmsPayload(batch).collect().foreach(r => postBulk(url, r.getString(0)))
             case None =>
-              bulkEncode(df)
+              bulkEncode(batch)
                 .withColumn("batch_id", lit(id))
                 .write.mode("overwrite")
                 .parquet(s"${b.outDir}/batch=$id")
           }
+          finally batch.unpersist()
         }
         .start()
       register(q)
