@@ -296,10 +296,13 @@ class ShuffleSpec extends AnyFunSuite {
     // The declared documents-self-source row now takes the one-
     // dictionary aggregate; pin it row-for-row against the generic
     // two-dictionary outer-join path on a zipf dictionary (non-trivial
-    // counts so exact_d = Σc² exercises the DECIMAL product).
+    // counts so exact_d = Σc² exercises the DECIMAL product). The NULL
+    // key is a group of its own in the dictionary: the outer join (and
+    // the oracle's JOIN … USING) never matches it, so it counts on both
+    // sides but not in shared_keys or exact_d.
     import spark.implicits._
     val zipf = Seq(64L, 32L, 16L, 8L, 4L, 2L, 1L, 1L).zipWithIndex
-      .map { case (c, i) => (s"k$i", c) }
+      .map { case (c, i) => (s"k$i", c) } :+ ((null: String) -> 3L)
     val self = graft.operators.Shuffle.joinCardRowSelf("z", zipf.toDF("k", "cl")).head()
     val generic = graft.operators.Shuffle.joinCardRow(
       "z", zipf.toDF("k", "cl"), zipf.toDF("k", "cr")).head()
