@@ -564,20 +564,24 @@ object Shuffle {
   /** [[joinCardRow]] for a table joined with itself on the same key:
     * the full-outer join of a unique-keyed dictionary with itself is
     * the dictionary (cl = cr on every row), so the statistics collapse
-    * to one aggregate over one dictionary build. ShuffleSpec pins this
-    * row-for-row against the generic two-dictionary path.
+    * to one aggregate over one dictionary build. A NULL key never
+    * matches itself, so it counts on both sides but not in
+    * shared_keys or exact_d. ShuffleSpec pins this row-for-row against
+    * the generic two-dictionary path.
     */
-  private[graft] def joinCardRowSelf(nm: String, D: DataFrame): DataFrame =
+  private[graft] def joinCardRowSelf(nm: String, D: DataFrame): DataFrame = {
+    val matched = when(col("k").isNotNull, col("cl"))
     joinCardFinish(
       D.agg(
         sum(col("cl")).as("l_rows"),
         count(col("cl")).as("l_keys"),
         sum(col("cl")).as("r_rows"),
         count(col("cl")).as("r_keys"),
-        count(col("cl")).as("shared_keys"),
-        coalesce(sum(expr("CAST(cl AS DECIMAL(38,0)) * cl")), lit(0))
+        count(matched).as("shared_keys"),
+        coalesce(sum(matched.cast("decimal(38,0)") * matched), lit(0))
           .cast("decimal(38,0)").as("exact_d")),
       nm)
+  }
 
   /** One audit row off (k, cl) / (k, cr) dictionaries — factored so
     * ShuffleSpec can drive the uniform-assumption ERROR branch with a
