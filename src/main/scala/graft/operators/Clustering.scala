@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.QueryDef
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import scala.collection.immutable.ListMap
@@ -1985,8 +1985,6 @@ object Clustering {
     import org.apache.spark.sql.expressions.Window
     val wAll = Window.partitionBy()
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val bucket = "CASE WHEN sz <= 4 THEN sz WHEN sz <= 8 THEN 5 " +
-      "WHEN sz <= 16 THEN 9 WHEN sz <= 32 THEN 17 ELSE 33 END"
     val dict = clusterLabels(s, dir)
       .select(col("cluster_id"), col("cluster_size")).distinct()
       .select(col("cluster_size").as("sz"))
@@ -1994,7 +1992,7 @@ object Clustering {
       .join(clusterLabels(s, dir).select(col("doc_id")), Seq("doc_id"), "left_anti")
       .select(lit(1L).as("sz"))
     dict.unionByName(singles)
-      .groupBy(expr(bucket).cast("long").as("bucket_lo"))
+      .groupBy(sizeBucket)
       .agg(
         count(lit(1)).as("n_clusters"),
         sum(col("sz")).as("n_docs"),
@@ -2006,13 +2004,23 @@ object Clustering {
         col("bucket_lo"),
         col("n_clusters").cast("long").as("n_clusters"),
         col("n_docs").cast("long").as("n_docs"),
-        (expr("CAST((20000 * n_docs + tot) DIV (2 * tot) AS BIGINT)")
-          / lit(10000.0)).as("doc_share"),
+        totShare("n_docs").as("doc_share"),
         max(col("mx")).over(wAll).cast("long").as("top_cluster"),
-        (expr("CAST((20000 * dup + tot) DIV (2 * tot) AS BIGINT)")
-          / lit(10000.0)).as("dup_doc_share"))
+        totShare("dup").as("dup_doc_share"))
       .orderBy("bucket_lo")
   }
+
+  /** X153's size bucket `bucket_lo` of a cluster of `sz` docs: exact
+    * 1–4, then 5–8, 9–16, 17–32 and 33+, named by the lower bound.
+    * Shared by [[clusterSizes]] and `Gateway.clusterSizesFeed`.
+    */
+  private[graft] def sizeBucket: Column =
+    expr("CASE WHEN sz <= 4 THEN sz WHEN sz <= 8 THEN 5 " +
+      "WHEN sz <= 16 THEN 9 WHEN sz <= 32 THEN 17 ELSE 33 END").cast("long").as("bucket_lo")
+
+  /** X153's share of the `tot` docs held by `num` docs, 4dp HALF_UP. */
+  private[graft] def totShare(num: String): Column =
+    expr(Extensions.sq4(num, "tot")) / lit(10000.0)
 
   private def clusterSizesSql: String =
     s"""$clusterChainSql,

@@ -1534,30 +1534,47 @@ object Curation {
         countDistinct(col("source")).as(s"${p}_src_d"),
         sum(col("n_chars")).as(s"${p}_nc_sum"),
         sum(length(col("text")).cast("long")).as(s"${p}_len_sum"))
-    def q4(num: String, den: String): String =
-      s"CAST((20000 * CAST($num AS DECIMAL(38,0)) + $den) DIV (2 * CAST($den AS DECIMAL(38,0))) AS BIGINT)"
     val both = wide(v1, "a").crossJoin(broadcast(wide(d, "b")))
-    val metricRows = Seq(
-      ("doc_id", "n_rows", "a_n * 10000", "b_n * 10000"),
-      ("lang", "null_share", q4("a_lang_nulls", "a_n"), q4("b_lang_nulls", "b_n")),
-      ("lang", "n_distinct", "a_lang_d * 10000", "b_lang_d * 10000"),
-      ("source", "n_distinct", "a_src_d * 10000", "b_src_d * 10000"),
-      ("n_chars", "mean", q4("a_nc_sum", "a_n"), q4("b_nc_sum", "b_n")),
-      ("text", "len_mean", q4("a_len_sum", "a_n"), q4("b_len_sum", "b_n")))
-    metricRows.map { case (c, m, e1, e2) =>
+    profileMetrics(f => s"a_$f", f => s"b_$f").map { case (c, m, e1, e2) =>
       both.select(
         lit(c).as("col_name"), lit(m).as("metric"),
         expr(e1).as("v1i"), expr(e2).as("v2i"))
     }.reduce(_ unionByName _)
-      .select(
-        col("col_name"), col("metric"),
-        (col("v1i") / lit(10000.0)).as("v1"),
-        (col("v2i") / lit(10000.0)).as("v2"),
-        (abs(col("v2i") - col("v1i")) / lit(10000.0)).as("drift"),
-        when(lit(20L) * abs(col("v2i") - col("v1i"))
-          > greatest(col("v1i"), col("v2i")), 1L).otherwise(0L).as("flagged"))
+      .select(col("col_name") +: col("metric") +: profileDriftCols: _*)
       .orderBy("col_name", "metric")
   }
+
+  /** X140's six (col_name, metric, v1i, v2i) rows as SQL over the
+    * profile fields `n`, `lang_nulls`, `lang_d`, `src_d`, `nc_sum` and
+    * `len_sum` of the two versions, named by `v1(field)` and
+    * `v2(field)`: counts and distincts scaled by 10⁴, shares and means
+    * HALF_UP to 4dp in DECIMAL(38,0). Shared by [[profileDrift]] and
+    * `Gateway.profileDriftFeed`.
+    */
+  private[graft] def profileMetrics(
+      v1: String => String, v2: String => String): Seq[(String, String, String, String)] = {
+    def perDoc(field: String)(v: String => String): String =
+      Extensions.sq4(s"CAST(${v(field)} AS DECIMAL(38,0))", s"CAST(${v("n")} AS DECIMAL(38,0))")
+    def scaled(field: String)(v: String => String): String = s"${v(field)} * 10000"
+    Seq(
+      ("doc_id", "n_rows", scaled("n") _),
+      ("lang", "null_share", perDoc("lang_nulls") _),
+      ("lang", "n_distinct", scaled("lang_d") _),
+      ("source", "n_distinct", scaled("src_d") _),
+      ("n_chars", "mean", perDoc("nc_sum") _),
+      ("text", "len_mean", perDoc("len_sum") _))
+      .map { case (c, m, e) => (c, m, e(v1), e(v2)) }
+  }
+
+  /** X140's v1, v2, drift and flag off the 4dp integers v1i/v2i; the
+    * >5% rule compares integers, 20·|v2i − v1i| > max(v1i, v2i).
+    */
+  private[graft] def profileDriftCols: Seq[Column] = Seq(
+    (col("v1i") / lit(10000.0)).as("v1"),
+    (col("v2i") / lit(10000.0)).as("v2"),
+    (abs(col("v2i") - col("v1i")) / lit(10000.0)).as("drift"),
+    when(lit(20L) * abs(col("v2i") - col("v1i"))
+      > greatest(col("v1i"), col("v2i")), 1L).otherwise(0L).as("flagged"))
 
   private def profileDriftSql: String = {
     def q4(num: String, den: String): String =
@@ -3140,6 +3157,13 @@ object Curation {
   private[graft] def wmFlag(g: Column, n: Column): Column =
     (g * 2 >= n && (g * 2 - n) * (g * 2 - n) >= n * 4).cast("long")
 
+  /** X154's z-score (2g − n)/√n times `scale`, as one fixed IEEE op
+    * sequence: scale·(2g − n), then ÷ √n. `scale` 1.0 is exact, so the
+    * batch z and the feed's millionths agree.
+    */
+  private[graft] def wmZ(g: Column, n: Column, scale: Double): Column =
+    lit(scale) * (lit(2L) * g - n) / sqrt(n)
+
   /** X154 — synthetic-text watermark screen (`q_watermark`): the
     * Kirchenbauer et al. (ICML 2023) green-list detector as a corpus
     * gate — LLM generators that watermark bias token choice toward a
@@ -3175,8 +3199,7 @@ object Curation {
         wmGreen(col("w")).as("n_green"))
       .select(
         col("doc_id"), col("n_tokens"), col("n_green"),
-        round((lit(2L) * col("n_green") - col("n_tokens")) / sqrt(col("n_tokens")), 4)
-          .as("z"),
+        round(wmZ(col("n_green"), col("n_tokens"), 1.0), 4).as("z"),
         wmFlag(col("n_green"), col("n_tokens")).as("watermarked"))
       .orderBy("doc_id")
   }
@@ -3227,7 +3250,6 @@ object Curation {
     */
   private def labelNoise(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     def scored = gateScored(s, dir)
       .select(calP6.as("p6"), col("keep").cast("long").as("y"))
     val thr = scored.agg(
@@ -3236,16 +3258,7 @@ object Curation {
       sum(when(col("y") === 0L, lit(1000000L) - col("p6"))).as("s0"),
       sum(when(col("y") === 0L, 1L).otherwise(0L)).as("n0"))
     val assigned = scored.crossJoin(broadcast(thr))
-      .withColumn("m1", dec(col("p6")) * col("n1") - col("s1"))
-      .withColumn("m0", dec(lit(1000000L) - col("p6")) * col("n0") - col("s0"))
-      .withColumn("conf1", col("n1") > 0L && col("m1") >= 0L)
-      .withColumn("conf0", col("n0") > 0L && col("m0") >= 0L)
-      .withColumn("pred",
-        when(col("conf1") && col("conf0"),
-          when(col("m1") * col("n0") >= col("m0") * col("n1"), 1L).otherwise(0L))
-          .when(col("conf1"), 1L)
-          .when(col("conf0"), 0L)
-          .otherwise(-1L))
+      .withColumn("pred", clPred(col("p6"), col("s1"), col("n1"), col("s0"), col("n0")))
       .groupBy(col("y").as("given_label"), col("pred").as("pred_label"))
       .agg(count(lit(1)).as("n"))
     val grid = Seq(0L, 1L).toDF("given_label")
@@ -3267,15 +3280,32 @@ object Curation {
         col("given_label"),
         col("pred_label"),
         col("n").cast("long").as("n_docs"),
-        when(col("n_label") === 0L, lit(0.0)).otherwise(
-          expr("CAST((20000 * n + n_label) DIV (2 * n_label) AS BIGINT)") / lit(10000.0))
-          .as("share"),
+        (expr(Extensions.sq4("n", "n_label")) / lit(10000.0)).as("share"),
         (col("pred_label") =!= -1L && col("pred_label") =!= col("given_label"))
           .cast("long").as("is_noise"),
-        when(col("conf_mass") === 0L, lit(0.0)).otherwise(
-          expr("CAST((20000 * noise_mass + conf_mass) DIV (2 * conf_mass) AS BIGINT)")
-            / lit(10000.0)).as("noise_rate"))
+        (expr(Extensions.sq4("noise_mass", "conf_mass")) / lit(10000.0)).as("noise_rate"))
       .orderBy("given_label", "pred_label")
+  }
+
+  /** X155's confident-learning class of a doc with probability `p6`
+    * (10⁶ scale), given the class thresholds as sums and counts:
+    * `s1`/`n1` = Σp6 and count over label-1 docs, `s0`/`n0` =
+    * Σ(10⁶ − p6) and count over label-0 docs. The margins m1 = p6·n1 −
+    * s1 and m0 = (10⁶ − p6)·n0 − s0 are DECIMAL(38,0); a doc clearing
+    * both thresholds takes the larger margin (ties to 1), one clearing
+    * neither is −1. Shared by [[labelNoise]] (columns) and
+    * `Gateway.labelNoiseFeed` (literals).
+    */
+  private[graft] def clPred(
+      p6: Column, s1: Column, n1: Column, s0: Column, n0: Column): Column = {
+    val m1 = p6.cast("decimal(38,0)") * n1 - s1
+    val m0 = (lit(1000000L) - p6).cast("decimal(38,0)") * n0 - s0
+    val conf1 = n1 > 0L && m1 >= 0L
+    val conf0 = n0 > 0L && m0 >= 0L
+    when(conf1 && conf0, when(m1 * n0 >= m0 * n1, 1L).otherwise(0L))
+      .when(conf1, 1L)
+      .when(conf0, 0L)
+      .otherwise(-1L)
   }
 
   private def labelNoiseSql: String =

@@ -129,16 +129,30 @@ object Dedup {
     c
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= 3)
-      .select(
-        col("doc_id"),
-        explode(expr(
-          "transform(sequence(1, size(w) - 2), " +
-            "i -> concat(element_at(w, i), ' ', element_at(w, i + 1), ' ', element_at(w, i + 2)))"))
-          .as("shingle"))
+      .select(col("doc_id"), explode(word3grams(col("w"))).as("shingle"))
       .groupBy(col("doc_id"))
       .agg(collect_set(col("shingle")).as("ss"))
       .select(col("doc_id"), explode(col("ss")).as("shingle"),
         size(col("ss")).cast("long").as("n"))
+
+  /** The word 3-grams of the token array `w`, in order, duplicates
+    * kept; empty when `w` has fewer than 3 tokens. The guard makes it
+    * total: below 3 tokens `sequence(1, size(w) - 2)` counts down and
+    * `element_at` reads past the end (an error under ANSI) or at index
+    * 0 (always an error), and a lambda next to a generator can run on
+    * rows an upstream size filter drops (InferFiltersFromGenerate).
+    */
+  private[graft] def word3grams(w: Column): Column =
+    when(size(w) >= 3, transform(sequence(lit(1), size(w) - 2), i =>
+      concat(element_at(w, i), lit(" "), element_at(w, i + 1), lit(" "), element_at(w, i + 2))))
+      .otherwise(typedLit(Seq.empty[String]))
+
+  /** The ≥0.6 exact-Jaccard test on integer counts: 10·|∩| ≥
+    * 6·|∪| with |∪| = n_a + n_b − |∩|. No float in the cut, so no
+    * rounding can flip a pair.
+    */
+  private[graft] def jaccard06(shared: Column, nA: Column, nB: Column): Column =
+    shared * 10 >= (nA + nB - shared) * 6
 
   /** Attach each doc's total shingle count to every (doc_id, shingle)
     * row — one window count, no skew (per-doc group size is bounded by
@@ -158,10 +172,8 @@ object Dedup {
   private[graft] def shingleIndex(s: SparkSession, dir: String): DataFrame =
     SessionMemo(s, dir, "shingles")(shingles(s, dir))
 
-  /** Apply the ≥0.6 integer-arithmetic Jaccard threshold (10·|∩| ≥
-    * 6·|∪| — no float in the cut, so no rounding divergence can flip a
-    * pair) to (id_a, id_b, shared, n_a, n_b) rows. Both cardinalities
-    * arrive ON the pair row — carried through the upstream join by
+  /** Apply [[jaccard06]] to (id_a, id_b, shared, n_a, n_b) rows.
+    * Both cardinalities arrive ON the pair row — carried through the upstream join by
     * whoever built it (the shingle index rows carry `n`, see
     * [[shingles]]) — so the cut is a pure filter: no per-doc table, no
     * join, and in particular no broadcast whose size is
@@ -171,7 +183,7 @@ object Dedup {
   private def jaccardCut(pairs: DataFrame): DataFrame =
     pairs
       .withColumn("n_union", col("n_a") + col("n_b") - col("shared"))
-      .filter(col("shared") * 10 >= col("n_union") * 6)
+      .filter(jaccard06(col("shared"), col("n_a"), col("n_b")))
       .select(
         col("id_a"), col("id_b"),
         col("shared").cast("long").as("shared"),
@@ -2219,10 +2231,7 @@ object Dedup {
       Tables.fanOutForCompute(Tables(s, dir, "documents"))
         .select(col("source"), split(col("text"), " ").as("w"))
         .filter(size(col("w")) >= 3)
-        .select(col("source"), explode(expr(
-          "transform(sequence(1, size(w) - 2), " +
-            "i -> concat(element_at(w, i), ' ', element_at(w, i + 1), ' ', element_at(w, i + 2)))"))
-          .as("shingle"))
+        .select(col("source"), explode(word3grams(col("w"))).as("shingle"))
         .groupBy(col("source"))
         .agg(array((0 until 64).map(i =>
           min((base * soA(i) + soB(i)) % lit(2147483647L))): _*).as("sig"))

@@ -1402,12 +1402,26 @@ object Extensions {
       col("event_type"),
       expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
     val cuts = winsorizeCuts(s, dir)
-    ev.join(broadcast(cuts), "event_type")
-      .select(col("event_type"), col("cents"), col("lo_cut"), col("hi_cut"),
+    winsorizeStats(ev.join(broadcast(cuts), "event_type"),
+      Seq(col("event_type")), Seq(col("event_type")))
+      .orderBy("event_type")
+  }
+
+  /** X163's statistics over (…, cents, lo_cut, hi_cut) rows grouped by
+    * `keys`: the count, the cuts, the clip counts and the raw and
+    * clamped means, HALF_UP to 4dp on the integer cents sums. The
+    * output is `keyOut` (expressions over the grouped keys) and the
+    * seven statistics. Shared by [[winsorize]] and
+    * `Gateway.winsorizeFeed`.
+    */
+  private[graft] def winsorizeStats(
+      cut: DataFrame, keys: Seq[Column], keyOut: Seq[Column]): DataFrame =
+    cut
+      .select(col("*"),
         greatest(col("lo_cut"), least(col("hi_cut"), col("cents"))).as("wcents"),
         (col("cents") < col("lo_cut")).cast("long").as("is_lo"),
         (col("cents") > col("hi_cut")).cast("long").as("is_hi"))
-      .groupBy(col("event_type"))
+      .groupBy(keys: _*)
       .agg(
         count(lit(1)).as("nn"),
         min(col("lo_cut")).as("lo_cut"),
@@ -1416,8 +1430,7 @@ object Extensions {
         sum(col("is_hi")).as("clipped_hi"),
         sum(col("cents")).as("sc"),
         sum(col("wcents")).as("sw"))
-      .select(
-        col("event_type"),
+      .select(keyOut ++ Seq(
         col("nn").cast("long").as("n"),
         col("lo_cut").cast("long").as("lo_cut"),
         col("hi_cut").cast("long").as("hi_cut"),
@@ -1426,9 +1439,7 @@ object Extensions {
         (expr("CAST((200 * sc + nn) DIV (2 * nn) AS BIGINT)") / lit(10000.0))
           .as("mean_raw"),
         (expr("CAST((200 * sw + nn) DIV (2 * nn) AS BIGINT)") / lit(10000.0))
-          .as("mean_wins"))
-      .orderBy("event_type")
-  }
+          .as("mean_wins")): _*)
 
   private val winsorizeSql =
     """WITH ev AS (

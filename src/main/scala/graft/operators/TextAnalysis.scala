@@ -1113,10 +1113,7 @@ object TextAnalysis {
     val tokMin = docs(s, dir)
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= 3)
-      .select(uOf.as("u"), explode(expr(
-        "transform(sequence(1, size(w) - 2), " +
-          "i -> concat(element_at(w, i), ' ', element_at(w, i + 1), ' ', element_at(w, i + 2)))"))
-        .as("g"))
+      .select(uOf.as("u"), explode(Dedup.word3grams(col("w"))).as("g"))
       .groupBy(col("g")).agg(min(col("u")).as("tu"))
     val vc = tokMin
       .select(col("tu"), explode(thrArr).as("chk"))
@@ -1709,6 +1706,23 @@ object TextAnalysis {
 
   private[graft] val topicMinHits = 2
 
+  /** X131's in-row topic flags: `__h_<topic>` is 1 when the doc's
+    * distinct words hit ≥ [[topicMinHits]] words of the topic's
+    * lexicon. With [[topicHitSums]], shared by [[topicMixOf]] and
+    * `Gateway.topicFeed`.
+    */
+  private[graft] def withTopicHits(docs: DataFrame): DataFrame =
+    topicLexicons.foldLeft(docs.withColumn("__tw", array_distinct(split(col("text"), " ")))) {
+      case (df, (t, words)) =>
+        df.withColumn(s"__h_$t",
+          (size(array_intersect(col("__tw"), array(words.map(lit): _*)))
+            >= topicMinHits).cast("long"))
+    }
+
+  /** The per-topic hit counts `h_<topic>` over [[withTopicHits]] rows. */
+  private[graft] def topicHitSums: Seq[Column] =
+    topicLexicons.keys.toSeq.map(t => sum(col(s"__h_$t")).as(s"h_$t"))
+
   /** X131 core — the (source × topic) composition grid off a
     * (source, text) frame. Factored so TextAnalysisSpec can drive the
     * membership threshold's both branches (1 lexicon word → no hit,
@@ -1729,19 +1743,10 @@ object TextAnalysis {
     */
   private[graft] def topicMixOf(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val topics = topicLexicons.keys.toSeq
-    val flagged = docs
-      .withColumn("__tw", array_distinct(split(col("text"), " ")))
-    val withHits = topicLexicons.foldLeft(flagged) { case (df, (t, words)) =>
-      df.withColumn(s"__h_$t",
-        (size(array_intersect(col("__tw"), array(words.map(lit): _*)))
-          >= topicMinHits).cast("long"))
-    }
-    val wide = withHits.groupBy(col("source"))
-      .agg(count(lit(1)).as("n_s"),
-        topics.map(t => sum(col(s"__h_$t")).as(s"h_$t")): _*)
+    val wide = withTopicHits(docs).groupBy(col("source"))
+      .agg(count(lit(1)).as("n_s"), topicHitSums: _*)
       .localCheckpoint(true)
-    val grid = topics.map { t =>
+    val grid = topicLexicons.keys.toSeq.map { t =>
       wide.select(col("source"), col("n_s"), lit(t).as("topic"),
         col(s"h_$t").as("hits"))
     }.reduce(_ unionByName _)
@@ -1751,8 +1756,7 @@ object TextAnalysis {
       .withColumn("nc", sum(col("n_s")).over(byTopic))
       .select(
         col("source"), col("topic"), col("hits").cast("long").as("n_docs"),
-        expr("CAST((20000 * hits + n_s) DIV (2 * n_s) AS BIGINT)")
-          ./(lit(10000.0)).as("share"),
+        (expr(Extensions.sq4("hits", "n_s")) / lit(10000.0)).as("share"),
         when(col("hc") === 0, lit(0.0)).otherwise(
           expr("""CAST((20000 * CAST(hits AS DECIMAL(38,0)) * nc
                  |      + CAST(n_s AS DECIMAL(38,0)) * hc)
@@ -2317,14 +2321,20 @@ object TextAnalysis {
     * with RE2 — the hash compare certifies the two regex engines agree
     * on the grammar subset (see [[entityPatterns]]).
     */
-  private def entityStats(s: SparkSession, dir: String): DataFrame = {
-    val counted = entityPatterns.foldLeft(entityDocs(s, dir)) {
-      case (df, (name, pat)) =>
-        df.withColumn(name,
-          size(regexp_extract_all(col("text"), lit(pat), lit(0))).cast("long"))
+  private def entityStats(s: SparkSession, dir: String): DataFrame =
+    entityStatsBy(entityDocs(s, dir), col("source")).orderBy("source")
+
+  /** X162's counters over a (…, text) frame grouped by `keys`: docs,
+    * the per-kind mention totals of [[entityPatterns]] and the docs
+    * with any mention. Shared by [[entityStats]] and
+    * `Gateway.entityFeed`.
+    */
+  private[graft] def entityStatsBy(docs: DataFrame, keys: Column*): DataFrame =
+    entityPatterns.foldLeft(docs) { case (df, (name, pat)) =>
+      df.withColumn(name,
+        size(regexp_extract_all(col("text"), lit(pat), lit(0))).cast("long"))
     }
-    counted
-      .groupBy(col("source"))
+      .groupBy(keys: _*)
       .agg(
         count(lit(1)).cast("long").as("n_docs"),
         sum(col("emails")).cast("long").as("emails"),
@@ -2333,8 +2343,6 @@ object TextAnalysis {
         sum(col("years")).cast("long").as("years"),
         sum(when(col("emails") + col("urls") + col("ipv4s") + col("years") > 0, 1L)
           .otherwise(0L)).cast("long").as("docs_with_entities"))
-      .orderBy("source")
-  }
 
   private def entityStatsSql: String = {
     val kinds = entityPatterns

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.{Curation, Dedup, Extensions, FrameCodec, Hashing, Shuffle}
+import graft.operators.{Clustering, Curation, Dedup, Extensions, FrameCodec, Hashing, Shuffle}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
@@ -970,8 +970,7 @@ object Gateway {
         col("ts"),
         Curation.wmFlag(col("g"), col("n")).as("flagged"),
         // per-doc z snapped to integer millionths before the window sum
-        round(lit(1000000.0) * (lit(2L) * col("g") - col("n")) / sqrt(col("n")), 0)
-          .cast("long").as("z6"))
+        round(Curation.wmZ(col("g"), col("n"), 1000000.0), 0).cast("long").as("z6"))
       .withWatermark("ts", watermarkDelay)
     parsed
       .groupBy(window(col("ts"), windowDuration))
@@ -983,8 +982,7 @@ object Gateway {
         col("window.start").as("window_start"),
         col("n_docs").cast("long").as("n_docs"),
         col("n_flagged").cast("long").as("n_flagged"),
-        (expr("CAST((20000 * n_flagged + n_docs) DIV (2 * n_docs) AS BIGINT)")
-          / lit(10000.0)).as("flag_share"),
+        (expr(Extensions.sq4("n_flagged", "n_docs")) / lit(10000.0)).as("flag_share"),
         // signed 4dp HALF_UP mean off the exact integer z6 sum
         (expr(
           """CAST(CASE WHEN sz6 >= 0
@@ -1538,18 +1536,8 @@ object Gateway {
       .withWatermark("ts", watermarkDelay)
     val assigned = graft.operators.Curation.withRuleFlags(
       graft.operators.Curation.withClfColumns(parsed))
-      .select(
-        col("ts"),
-        ((col("clf_logit6") + 100000L) * 5L).as("p6"),
-        col("keep").cast("long").as("y"))
-      .withColumn("m1", expr(s"CAST(p6 AS DECIMAL(38,0)) * ${n1}L - ${s1}L"))
-      .withColumn("m0", expr(s"CAST(1000000 - p6 AS DECIMAL(38,0)) * ${n0}L - ${s0}L"))
-      .withColumn("pred",
-        when(lit(n1) > 0L && col("m1") >= 0L && lit(n0) > 0L && col("m0") >= 0L,
-          when(col("m1") * lit(n0) >= col("m0") * lit(n1), 1L).otherwise(0L))
-          .when(lit(n1) > 0L && col("m1") >= 0L, 1L)
-          .when(lit(n0) > 0L && col("m0") >= 0L, 0L)
-          .otherwise(-1L))
+      .select(col("ts"), Curation.calP6.as("p6"), col("keep").cast("long").as("y"))
+      .withColumn("pred", Curation.clPred(col("p6"), lit(s1), lit(n1), lit(s0), lit(n0)))
     def cell(y: Long, p: Long): org.apache.spark.sql.Column =
       sum(when(col("y") === y && col("pred") === p, 1L).otherwise(0L))
     assigned
@@ -1566,9 +1554,7 @@ object Gateway {
         col("n_00").cast("long").as("n_00"), col("n_01").cast("long").as("n_01"),
         col("n_0x").cast("long").as("n_0x"), col("n_10").cast("long").as("n_10"),
         col("n_11").cast("long").as("n_11"), col("n_1x").cast("long").as("n_1x"),
-        when(col("conf_mass") === 0L, lit(0.0)).otherwise(
-          expr("CAST((20000 * noise_mass + conf_mass) DIV (2 * conf_mass) AS BIGINT)")
-            / lit(10000.0)).as("noise_rate"))
+        (expr(Extensions.sq4("noise_mass", "conf_mass")) / lit(10000.0)).as("noise_rate"))
   }
 
   /** Streaming X153 — windowed duplicate-cluster size histogram
@@ -1608,8 +1594,6 @@ object Gateway {
       lines: DataFrame,
       windowDuration: String = "10 seconds",
       watermarkDelay: String = "30 seconds"): DataFrame = {
-    val bucket = "CASE WHEN sz <= 4 THEN sz WHEN sz <= 8 THEN 5 " +
-      "WHEN sz <= 16 THEN 9 WHEN sz <= 32 THEN 17 ELSE 33 END"
     val parsed = FeedLine.parse(lines, "doc_id:long cluster_id:long [rest]")
       .withWatermark("ts", watermarkDelay)
     val perDoc = parsed
@@ -1619,9 +1603,7 @@ object Gateway {
       .groupBy(window(window_time(col("window")), windowDuration), col("cluster_id"))
       .agg(count(lit(1)).as("sz"))
     val hist = sizes
-      .groupBy(
-        window(window_time(col("window")), windowDuration),
-        expr(bucket).cast("long").as("bucket_lo"))
+      .groupBy(window(window_time(col("window")), windowDuration), Clustering.sizeBucket)
       .agg(count(lit(1)).as("n_clusters"), sum(col("sz")).as("n_docs"), max(col("sz")).as("mx"))
     hist
       .groupBy(window(window_time(col("window")), windowDuration))
@@ -1641,11 +1623,9 @@ object Gateway {
         col("e.bucket_lo").as("bucket_lo"),
         col("e.n_clusters").cast("long").as("n_clusters"),
         col("e.n_docs").cast("long").as("n_docs"),
-        (expr("CAST((20000 * e.n_docs + tot) DIV (2 * tot) AS BIGINT)")
-          / lit(10000.0)).as("doc_share"),
+        Clustering.totShare("e.n_docs").as("doc_share"),
         col("top").cast("long").as("top_cluster"),
-        (expr("CAST((20000 * dup + tot) DIV (2 * tot) AS BIGINT)")
-          / lit(10000.0)).as("dup_doc_share"))
+        Clustering.totShare("dup").as("dup_doc_share"))
   }
 
   /** Streaming X140 — windowed profile-drift gate
@@ -1720,21 +1700,10 @@ object Gateway {
         "size(array_distinct(transform(d, e -> e.source)))").cast("long"))
       .withColumn("b_nc_sum", expr("aggregate(d, CAST(0 AS BIGINT), (a, e) -> a + e.nc_sum)"))
       .withColumn("b_len_sum", expr("aggregate(d, CAST(0 AS BIGINT), (a, e) -> a + e.len_sum)"))
-    def q4(num: String, den: String): String =
-      s"CAST((20000 * CAST($num AS DECIMAL(38,0)) + $den) DIV (2 * CAST($den AS DECIMAL(38,0))) AS BIGINT)"
-    val metricRows = Seq(
-      ("doc_id", "n_rows", s"${baseline.n}L * 10000", "b_n * 10000"),
-      ("lang", "null_share",
-        s"${q4(baseline.langNulls.toString, baseline.n.toString)}",
-        q4("b_lang_nulls", "b_n")),
-      ("lang", "n_distinct", s"${baseline.langDistinct}L * 10000", "b_lang_d * 10000"),
-      ("source", "n_distinct", s"${baseline.srcDistinct}L * 10000", "b_src_d * 10000"),
-      ("n_chars", "mean",
-        s"${q4(baseline.nCharsSum.toString, baseline.n.toString)}",
-        q4("b_nc_sum", "b_n")),
-      ("text", "len_mean",
-        s"${q4(baseline.textLenSum.toString, baseline.n.toString)}",
-        q4("b_len_sum", "b_n")))
+    val base = Map("n" -> baseline.n, "lang_nulls" -> baseline.langNulls,
+      "lang_d" -> baseline.langDistinct, "src_d" -> baseline.srcDistinct,
+      "nc_sum" -> baseline.nCharsSum, "len_sum" -> baseline.textLenSum)
+    val metricRows = Curation.profileMetrics(f => s"${base(f)}L", f => s"b_$f")
     val stacked = metricRows.map { case (c, m, e1, e2) =>
       s"'$c', '$m', CAST($e1 AS BIGINT), CAST($e2 AS BIGINT)"
     }.mkString(s"stack(${metricRows.size}, ", ", ", ")")
@@ -1743,12 +1712,7 @@ object Gateway {
         col("window.start").as("window_start"),
         expr(s"$stacked AS (col_name, metric, v1i, v2i)"))
       .select(
-        col("window_start"), col("col_name"), col("metric"),
-        (col("v1i") / lit(10000.0)).as("v1"),
-        (col("v2i") / lit(10000.0)).as("v2"),
-        (abs(col("v2i") - col("v1i")) / lit(10000.0)).as("drift"),
-        when(lit(20L) * abs(col("v2i") - col("v1i"))
-          > greatest(col("v1i"), col("v2i")), 1L).otherwise(0L).as("flagged"))
+        col("window_start") +: col("col_name") +: col("metric") +: Curation.profileDriftCols: _*)
   }
 
   /** Streaming X131 — windowed topic-composition monitor
@@ -1768,20 +1732,11 @@ object Gateway {
       windowDuration: String = "10 seconds",
       watermarkDelay: String = "30 seconds"): DataFrame = {
     val lex = graft.operators.TextAnalysis.topicLexicons
-    val minHits = graft.operators.TextAnalysis.topicMinHits
     val parsed = FeedLine.parse(lines, "doc_id:long text")
       .withWatermark("ts", watermarkDelay)
-    val flagged = lex.foldLeft(
-      parsed.withColumn("__tw", array_distinct(split(col("text"), " ")))) {
-      case (df, (t, words)) =>
-        df.withColumn(s"__h_$t",
-          (size(array_intersect(col("__tw"), array(words.map(lit(_)): _*)))
-            >= minHits).cast("long"))
-    }
-    val agg = flagged
+    val agg = graft.operators.TextAnalysis.withTopicHits(parsed)
       .groupBy(window(col("ts"), windowDuration))
-      .agg(count(lit(1)).as("n_docs"),
-        lex.keys.toSeq.map(t => sum(col(s"__h_$t")).as(s"h_$t")): _*)
+      .agg(count(lit(1)).as("n_docs"), graft.operators.TextAnalysis.topicHitSums: _*)
     val stacked = lex.keys.map(t =>
       s"'$t', h_$t").mkString(s"stack(${lex.size}, ", ", ", ")")
     agg
@@ -1791,8 +1746,7 @@ object Gateway {
         col("window_start"), col("topic"),
         col("n_docs").cast("long").as("n_docs"),
         col("hits").cast("long").as("hits"),
-        (expr("CAST((20000 * hits + n_docs) DIV (2 * n_docs) AS BIGINT)")
-          / lit(10000.0)).as("share"))
+        (expr(Extensions.sq4("hits", "n_docs")) / lit(10000.0)).as("share"))
   }
 
   /** Streaming X162 — windowed entity-mention audit (`entityFeed`):
@@ -1814,23 +1768,10 @@ object Gateway {
       lines: DataFrame,
       windowDuration: String = "10 seconds",
       watermarkDelay: String = "30 seconds"): DataFrame = {
-    val pats = graft.operators.TextAnalysis.entityPatterns
     val parsed = FeedLine.parse(lines, "source text")
       .withWatermark("ts", watermarkDelay)
-    val counted = pats.foldLeft(parsed) { case (df, (name, pat)) =>
-      df.withColumn(name,
-        size(regexp_extract_all(col("text"), lit(pat), lit(0))).cast("long"))
-    }
-    counted
-      .groupBy(window(col("ts"), windowDuration), col("source"))
-      .agg(
-        count(lit(1)).cast("long").as("n_docs"),
-        sum(col("emails")).cast("long").as("emails"),
-        sum(col("urls")).cast("long").as("urls"),
-        sum(col("ipv4s")).cast("long").as("ipv4s"),
-        sum(col("years")).cast("long").as("years"),
-        sum(when(col("emails") + col("urls") + col("ipv4s") + col("years") > 0, 1L)
-          .otherwise(0L)).cast("long").as("docs_with_entities"))
+    graft.operators.TextAnalysis
+      .entityStatsBy(parsed, window(col("ts"), windowDuration), col("source"))
       .select(col("window.start").as("window_start"), col("source"),
         col("n_docs"), col("emails"), col("urls"), col("ipv4s"), col("years"),
         col("docs_with_entities"))
@@ -1868,32 +1809,9 @@ object Gateway {
       .withColumn("lo_cut", element_at(loMap, col("event_type")))
       .withColumn("hi_cut", element_at(hiMap, col("event_type")))
       .filter(col("lo_cut").isNotNull)
-    parsed
-      .select(col("ts"), col("event_type"), col("cents"), col("lo_cut"), col("hi_cut"),
-        greatest(col("lo_cut"), least(col("hi_cut"), col("cents"))).as("wcents"),
-        (col("cents") < col("lo_cut")).cast("long").as("is_lo"),
-        (col("cents") > col("hi_cut")).cast("long").as("is_hi"))
-      .groupBy(window(col("ts"), windowDuration), col("event_type"))
-      .agg(
-        count(lit(1)).as("nn"),
-        min(col("lo_cut")).as("lo_cut"),
-        min(col("hi_cut")).as("hi_cut"),
-        sum(col("is_lo")).as("clipped_lo"),
-        sum(col("is_hi")).as("clipped_hi"),
-        sum(col("cents")).as("sc"),
-        sum(col("wcents")).as("sw"))
-      .select(
-        col("window.start").as("window_start"),
-        col("event_type"),
-        col("nn").cast("long").as("n"),
-        col("lo_cut").cast("long").as("lo_cut"),
-        col("hi_cut").cast("long").as("hi_cut"),
-        col("clipped_lo").cast("long").as("clipped_lo"),
-        col("clipped_hi").cast("long").as("clipped_hi"),
-        (expr("CAST((200 * sc + nn) DIV (2 * nn) AS BIGINT)") / lit(10000.0))
-          .as("mean_raw"),
-        (expr("CAST((200 * sw + nn) DIV (2 * nn) AS BIGINT)") / lit(10000.0))
-          .as("mean_wins"))
+    Extensions.winsorizeStats(parsed,
+      Seq(window(col("ts"), windowDuration), col("event_type")),
+      Seq(col("window.start").as("window_start"), col("event_type")))
   }
 
   /** Streaming X171 — JSON schema-drift monitor (`schemaDriftFeed`):
@@ -2066,16 +1984,11 @@ object Gateway {
       .withColumn("gate", (col("is_kept") === 1).cast("long"))
       .withColumn("clf", when(col("clf_keep"), 1L).otherwise(0L))
       .withColumn("strp", when(col("bp_dropped") > 0, 1L).otherwise(0L))
-    // the dedupFeed signature machinery inlined, TOTAL-guarded for
-    // short docs (the winnow lesson: generator-adjacent lambdas must
-    // be total or InferFiltersFromGenerate evaluates them on the rows
-    // the guard exists to drop)
+    // the dedupFeed signature machinery without its short-doc filter:
+    // word3grams is total, so a doc under 3 tokens gets no shingles
     val shingled = gated
       .withColumn("w", split(col("text"), " "))
-      .withColumn("shingles", expr(
-        "CASE WHEN size(w) >= 3 THEN array_distinct(transform(sequence(1, size(w) - 2), " +
-          "i -> concat(element_at(w, i), ' ', element_at(w, i + 1), ' ', element_at(w, i + 2)))) " +
-          "ELSE CAST(array() AS ARRAY<STRING>) END"))
+      .withColumn("shingles", array_distinct(Dedup.word3grams(col("w"))))
       .withColumn("n_a", size(col("shingles")))
     shingled
       .select(col("ts"), col("doc_id"), col("source"), col("strp"), col("gate"),
@@ -2086,10 +1999,8 @@ object Gateway {
         col("bk.band").as("band"), col("bk.k1").as("k1"), col("bk.k2").as("k2"))
       .join(indexBands, Seq("band", "k1", "k2"), "left")
       .join(indexSets, Seq("idx_id"), "left")
-      .withColumn("hit", when(
-        size(array_intersect(col("shingles"), col("idx_shingles"))) * 10 >=
-          (col("n_a") + col("n_b")
-            - size(array_intersect(col("shingles"), col("idx_shingles")))) * 6, 1L)
+      .withColumn("hit", when(Dedup.jaccard06(
+        size(array_intersect(col("shingles"), col("idx_shingles"))), col("n_a"), col("n_b")), 1L)
         .otherwise(0L))
       .groupBy(window(col("ts"), windowDuration), col("source"), col("doc_id"))
       .agg(
@@ -2112,8 +2023,7 @@ object Gateway {
         col("n_clf_reject").cast("long").as("n_clf_reject"),
         col("n_dup").cast("long").as("n_dup"),
         col("n_admitted").cast("long").as("n_admitted"),
-        (expr("CAST((20000 * n_admitted + n_seen) DIV (2 * n_seen) AS BIGINT)")
-          / lit(10000.0)).as("admit_rate"),
+        (expr(Extensions.sq4("n_admitted", "n_seen")) / lit(10000.0)).as("admit_rate"),
         when(col("n_admitted") > capPerWindow, 1L).otherwise(0L).as("cap_fired"))
   }
 
@@ -2183,12 +2093,7 @@ object Gateway {
     val shingled = parsed
       .select(col("ts"), col("doc_id"), split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= 3)
-      .select(col("ts"), col("doc_id"),
-        array_distinct(transform(sequence(lit(1), size(col("w")) - 2), i =>
-          concat(
-            element_at(col("w"), i), lit(" "),
-            element_at(col("w"), i + 1), lit(" "),
-            element_at(col("w"), i + 2)))).as("shingles"))
+      .select(col("ts"), col("doc_id"), array_distinct(Dedup.word3grams(col("w"))).as("shingles"))
     shingled
       .select(col("ts"), col("doc_id"), col("shingles"), size(col("shingles")).as("n_a"),
         explode(Dedup.minhashBandKeys(col("shingles"))).as("bk"))
@@ -2197,7 +2102,7 @@ object Gateway {
       .join(indexBands, Seq("band", "k1", "k2"))
       .join(indexSets, Seq("idx_id"))
       .withColumn("shared", size(array_intersect(col("shingles"), col("idx_shingles"))))
-      .filter(col("shared") * 10 >= (col("n_a") + col("n_b") - col("shared")) * 6)
+      .filter(Dedup.jaccard06(col("shared"), col("n_a"), col("n_b")))
       .select(col("ts"), col("doc_id"))
       .dropDuplicatesWithinWatermark("doc_id")
   }

@@ -1082,4 +1082,28 @@ class DedupSpec extends AnyFunSuite {
         s"vacuous: every truth pair lands in one match bucket at $dir")
     }
   }
+
+  test("word3grams is total: [] below 3 tokens, the exact 3-grams from 3 up, ANSI on") {
+    // Below 3 tokens sequence(1, size(w) - 2) counts down, so the
+    // unguarded lambda reads past the end (an error under ANSI) or at
+    // index 0 (INVALID_INDEX_OF_ZERO); a caller without a size filter,
+    // or one whose filter the optimizer runs after the lambda, needs
+    // the guard inside the builder.
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val w3 = graft.operators.Dedup.word3grams _
+    val ansiBefore = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try {
+      val toks = (0 to 4).map(k => (k, (1 to k).map(i => s"t$i"))).toDF("k", "w")
+      val got = toks.select(col("k"), w3(col("w")))
+        .collect().map(r => r.getInt(0) -> r.getSeq[String](1)).toMap
+      assert(got === Map(0 -> Nil, 1 -> Nil, 2 -> Nil,
+        3 -> Seq("t1 t2 t3"), 4 -> Seq("t1 t2 t3", "t2 t3 t4")))
+      // beside a generator, with no size filter upstream
+      val exploded = toks.select(col("k"), explode(w3(col("w"))).as("g"))
+        .collect().map(r => (r.getInt(0), r.getString(1))).sorted
+      assert(exploded.toSeq === Seq((3, "t1 t2 t3"), (4, "t1 t2 t3"), (4, "t2 t3 t4")))
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansiBefore)
+  }
 }
