@@ -173,10 +173,10 @@ object Dedup {
     SessionMemo(s, dir, "shingles")(shingles(s, dir))
 
   /** Apply [[jaccard06]] to (id_a, id_b, shared, n_a, n_b) rows.
-    * Both cardinalities arrive ON the pair row — carried through the upstream join by
-    * whoever built it (the shingle index rows carry `n`, see
-    * [[shingles]]) — so the cut is a pure filter: no per-doc table, no
-    * join, and in particular no broadcast whose size is
+    * Both cardinalities arrive ON the pair row — carried through the
+    * upstream join by whoever built it (the shingle index rows carry
+    * `n`, see [[shingles]]) — so the cut is a pure filter: no per-doc
+    * table, no join, and in particular no broadcast whose size is
     * corpus-proportional (the r8 design's scale killer, now pinned
     * un-regressable by PlanAuditSpec).
     */
