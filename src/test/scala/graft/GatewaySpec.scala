@@ -546,6 +546,66 @@ class GatewaySpec extends AnyFunSuite {
     } finally watcher.close()
   }
 
+  test("B6 hot reload: the conf-file gateway restarts a dead run from its checkpoint") {
+    // the reference daemon's one main loop both re-reads its conf and
+    // keeps its listeners alive, so a conf-file gateway whose queries
+    // die must come back like a supervised one: same checkpoints, no
+    // frame lost across the outage, none counted twice
+    val out = Files.createTempDirectory("gw-out").toString
+    val ckpt = Files.createTempDirectory("gw-ckpt").toString
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val ini =
+      s"""[buffers]
+         |    [[a]]
+         |        type = OemGatewayEmoncmsBuffer
+         |        [[[runtime_settings]]]
+         |            active = True
+         |            period = 0
+         |    [[b]]
+         |        type = OemGatewayEmoncmsBuffer
+         |        [[[runtime_settings]]]
+         |            active = True
+         |            period = 0
+         |""".stripMargin
+    val confPath = Files.createTempFile("gw", ".conf")
+    Files.write(confPath, ini.getBytes("UTF-8"))
+
+    val ms = MultiQueryMemoryStream[String]()
+    val watcher = new graft.streaming.HotReload(
+      confPath,
+      pollMillis = 50L,
+      parse = text => {
+        val c = graft.streaming.GatewayConfig.parse(text, out, ckpt)
+        c.copy(listeners = Seq(listener))
+      },
+      startQueries = (c, reg) =>
+        Gateway.start(Gateway.aggregate(Gateway.decode(ms.toDF(), listener), c), c, reg))
+    try {
+      ms.addData("1000 10 1.0", "1004 10 2.0")
+      watcher.queries.foreach(_.processAllAvailable())
+      assert(finalState(s"$out/a") === Map((1000L, 10L, 0) -> (2L, 3.0)))
+
+      // kill the run from outside; a frame arrives during the outage
+      val dead = watcher.queries.map(_.runId).toSet
+      watcher.queries.foreach(_.stop())
+      ms.addData("1005 10 4.0")
+      def restarted = {
+        val qs = watcher.queries
+        qs.size == 2 && qs.forall(q => q.isActive && !dead(q.runId))
+      }
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!restarted && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(restarted, "the conf-file gateway never restarted its stopped queries")
+
+      ms.addData("1008 10 8.0")
+      watcher.queries.foreach(_.processAllAvailable())
+      // window state resumed from the checkpoint: both frames counted once
+      assert(finalState(s"$out/a") === Map((1000L, 10L, 0) -> (4L, 15.0)))
+      assert(finalState(s"$out/b") === Map((1000L, 10L, 0) -> (4L, 15.0)))
+    } finally watcher.close()
+  }
+
   test("B2 streaming: capped FIFO state evicts oldest, bounded per node") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
@@ -900,6 +960,52 @@ class GatewaySpec extends AnyFunSuite {
       assert(state().get((1100L, 9L, 0)) === Some((1L, 2.5)),
         s"post-idle-restart frame lost: ${state()}")
     } finally sup.stop()
+  }
+
+  test("a partly started supervised run leaves no query running outside the supervisor") {
+    // buffer b's checkpoint path is a regular file, so b's start
+    // throws after a's query is already running: every round is a
+    // partial start, and each must stop what it started before the
+    // next round tries the same query names and checkpoints
+    val out = Files.createTempDirectory("gw-out").toString
+    val ckpt = Files.createTempDirectory("gw-ckpt")
+    val spool = Files.createTempDirectory("gw-spool")
+    Files.write(ckpt.resolve("b"), Array.emptyByteArray)
+    val c = GatewayConf(
+      listeners = Seq(ListenerConf("spool", dialect = "socket",
+        embeddedTimestamp = true, spoolDir = Some(spool.toString))),
+      buffers = Seq(
+        BufferConf("a", s"$out/a", periodSeconds = 0),
+        BufferConf("b", s"$out/b", periodSeconds = 0)),
+      checkpointRoot = ckpt.toString)
+    def gatewayQueries = spark.streams.active.filter(q => Option(q.name).exists(_.startsWith("gateway-")))
+    val sup = Gateway.supervise(spark, c, backoffMs = 200, maxRestarts = 5)
+    try {
+      // a query outside sup.queries is in flight while a round starts
+      // it; one still running after the round counter moved on is leaked
+      val strayRounds = scala.collection.mutable.Map.empty[java.util.UUID, Set[Int]]
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (sup.restartCount < 5 && System.nanoTime() < deadline) {
+        val round = sup.restartCount
+        val own = sup.queries.map(_.runId).toSet
+        gatewayQueries.filterNot(q => own(q.runId)).foreach { q =>
+          strayRounds(q.runId) = strayRounds.getOrElse(q.runId, Set.empty) + round
+        }
+        Thread.sleep(10)
+      }
+      assert(sup.restartCount === 5, "the restart budget was not spent")
+      val leaked = strayRounds.filter(_._2.size > 1)
+      assert(leaked.isEmpty, s"queries outlived the round that started them: $leaked")
+      val own = sup.queries.map(_.runId).toSet
+      assert(gatewayQueries.forall(q => own(q.runId)),
+        s"queries outside sup.queries: ${gatewayQueries.map(_.name).mkString(", ")}")
+      sup.stop()
+      assert(gatewayQueries.isEmpty,
+        s"queries still active after stop(): ${gatewayQueries.map(_.name).mkString(", ")}")
+    } finally {
+      sup.stop()
+      gatewayQueries.foreach(_.stop()) // keep a leak from colliding with later tests
+    }
   }
 
   test("windowed state runs on the RocksDB state store (the 100 TB knob)") {
@@ -3417,6 +3523,39 @@ class GatewaySpec extends AnyFunSuite {
       assert(out.head.isNullAt(0),
         "var_reduction must be NULL on the overflowed row, not a silent 0.0")
     } finally spark.conf.set("spark.sql.ansi.enabled", ansiBefore)
+  }
+
+  test("cupedFeed raw means round negative outcome sums HALF_UP, like an exact recount") {
+    // `y:long` admits negative outcomes; the raw mean must round away
+    // from zero at the half like every other 4dp statistic here, not
+    // truncate toward zero. Day A's covariate is constant (var_n = 0),
+    // so its adjusted means are the raw means too; day B's varies.
+    import spark.implicits._
+    val base = 1700000000L
+    val rnd = new scala.util.Random(7)
+    // (epoch, variant, user, x, y)
+    val dayA = (0 until 23).map(u => (base + u, u % 2, 100L + u, 2, -rnd.nextInt(9)))
+    val dayB = (0 until 31).map(u =>
+      (base + 86400 + u, u % 2, 200L + u, rnd.nextInt(5), rnd.nextInt(11) - 8))
+    val lines = (dayA ++ dayB).map { case (e, v, u, x, y) => s"$e $v $u $x $y" }
+    val out = Gateway.cupedFeed(lines.toDF("value"), "1 day", "1 hour")
+      .select(unix_seconds(col("window_start")), col("mean_0"), col("mean_1"),
+        col("mean_adj_0"), col("mean_adj_1"))
+      .as[(Long, Double, Double, Double, Double)].collect()
+      .map(r => r._1 -> r).toMap
+    def halfUp(rows: Seq[(Long, Int, Long, Int, Int)], v: Int): Double = {
+      val ys = rows.filter(_._2 == v).map(_._5)
+      java.math.BigDecimal.valueOf(ys.sum.toLong)
+        .divide(java.math.BigDecimal.valueOf(ys.size.toLong), 4, java.math.RoundingMode.HALF_UP)
+        .doubleValue
+    }
+    for ((rows, name) <- Seq(dayA -> "A", dayB -> "B")) {
+      val got = out((rows.head._1 / 86400) * 86400)
+      assert((got._2, got._3) === (halfUp(rows, 0), halfUp(rows, 1)),
+        s"day $name raw means are not the HALF_UP recount")
+    }
+    val a = out((base / 86400) * 86400)
+    assert((a._4, a._5) === (a._2, a._3), "degenerate day A: adjusted means must equal raw")
   }
 
   test("upsertFeed watermark sizing: a trailing CDC op is dropped (and counted) at 0s delay, " +
