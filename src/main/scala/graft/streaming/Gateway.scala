@@ -6,6 +6,14 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.storage.StorageLevel
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.collection.mutable
+import scala.util.control.NonFatal
+
 /** The reference gateway reassembled on Structured Streaming
   * (SURVEY.md §2.6; ※ oemgateway.py · OemGateway.run() — symbol-level
   * citations, `/root/reference/` is empty): listeners feed decoded
@@ -14,9 +22,13 @@ import org.apache.spark.storage.StorageLevel
   *
   * Spark mapping, stage by stage:
   *  - S3 listener        → `readStream.format("socket")` (or an
-  *    injected test stream; S1/S2 serial listeners are represented by
-  *    the same line protocol via a serial→TCP bridge, see
-  *    [[Gateway.serialBridgeNote]]).
+  *    injected test stream). S1/S2 serial listeners: Spark has no
+  *    serial source, so the reference's own line protocol comes over
+  *    a ~20-line bridge (`socat /dev/ttyAMA0,b9600 TCP-LISTEN:50011,
+  *    fork` or equivalent) into this listener unchanged; the RFM2Pi
+  *    radio settings writeback (※ OemGatewayRFM2PiListener) stays in
+  *    the bridge, where the reference keeps its serial side effects
+  *    (GatewaySpec "S1 rehearsal").
   *  - P1/P2/P3 decode    → the exact [[FrameCodec]] column expressions
   *    the batch analogs use — narrow, codegen'd, no shuffle.
   *  - P4 timestamping    → `current_timestamp()` at receipt (reference
@@ -47,9 +59,10 @@ import org.apache.spark.storage.StorageLevel
   *    `chmod`/`readlink` processes Hadoop's local filesystem forks per
   *    file when libhadoop is absent — thousands per minute of gateway
   *    traffic, most of the batch's state-commit time.
-  *  - B6 hot reload      → NOT plan mutation (impossible in Spark):
-  *    stop the affected query and restart from its checkpoint with new
-  *    settings — state survives; see [[Gateway.hotReloadNote]].
+  *  - B6 hot reload and the daemon's run-forever loop → one
+  *    [[Gateway.Supervisor]] loop: a conf change, a dead run or an
+  *    idle one is stop + restart from the checkpoints (a running plan
+  *    cannot be mutated) — state survives.
   *
   * Scale notes (100 TB / 1000 executors): decode is per-row narrow;
   * the only shuffle is the windowed aggregate keyed (window, node,
@@ -262,7 +275,7 @@ object Gateway {
   }
 
   /** Duplicate-frame suppression for at-least-once upstreams: the
-    * serial→TCP bridge ([[hotReloadNote]]'s production shape) and any
+    * serial→TCP bridge (the S1/S2 production shape) and any
     * retrying relay can redeliver a frame after a reconnect; the
     * reference never sees this (a serial port delivers bytes once),
     * so exactly-once frame semantics are OUR obligation. Keyed on the
@@ -2660,8 +2673,8 @@ object Gateway {
     *
     * `register` is called with each query the moment it starts, BEFORE
     * the next buffer's start is attempted: a caller that must clean up
-    * after a partial start (buffer 3 of 3 throws — [[HotReload]]'s
-    * revert path) sees exactly the queries that exist, which the
+    * after a partial start (buffer 3 of 3 throws — [[Supervisor]]'s
+    * start routine) sees exactly the queries that exist, which the
     * returned Seq cannot provide (a mid-map throw discards it).
     */
   def start(
@@ -2730,54 +2743,190 @@ object Gateway {
     start(aggregate(deduped, conf), conf, register)
   }
 
-  /** Handle over a supervised gateway: the restart loop plus the
-    * currently-live queries ([[supervise]]).
+  /** The gateway's one lifecycle loop, the reference daemon's main
+    * loop (※ oemgateway.py · OemGateway.run(): `check_settings()`,
+    * then keep the listeners alive, forever). One daemon thread owns
+    * the current query set and, every tick (`backoffMs`, at most
+    * 200 ms):
+    *
+    *  1. re-reads the conf file, when there is one ([[watch]]). On a
+    *     content change (content, not mtime: mtime granularity is
+    *     filesystem-dependent) it parses the text and restarts on it.
+    *     A conf that fails to parse is logged and counted in
+    *     [[failures]]; the running queries never notice. A conf that
+    *     parses but fails to start is counted too, and the last good
+    *     conf is restarted instead: the reference keeps running on a
+    *     bad reload.
+    *  2. checks liveness. A query that TERMINATED (failed sink batch,
+    *     a source that refuses at start while the bridge is down) is
+    *     dead; with `idleTimeoutMs > 0`, so is a run where no query has
+    *     processed a new data batch for that long. Spark's socket
+    *     source treats a dropped peer's EOF as idle, not failure, and
+    *     silence and death look the same from this side of the wire,
+    *     so set it well above the reporting period. A dead or stale
+    *     run is stopped and, after `backoffMs`, the last good conf is
+    *     restarted. A restart that fails again is another dead round,
+    *     retried like the reference's reconnect-forever serial loop;
+    *     `maxRestarts` bounds these rounds (tests), production leaves
+    *     it unbounded.
+    *
+    * A running Spark plan cannot be mutated (the reference hot-applies
+    * `runtime_settings` by mutating live objects), so every restart
+    * (reload, revert or liveness) is stop + start from the SAME
+    * checkpoints: windowed state resumes from the state store, the new
+    * settings take effect, and the idempotent or replayed sinks absorb
+    * the reprocessed tail, the B5 kill-restart contract (GatewaySpec
+    * pins no loss and no duplication for each kind). Every start goes
+    * through [[launch]], which stops what a failed start had already
+    * started, so no round leaves a query behind to collide with the
+    * next one on its checkpoint or query name.
+    *
+    * `start(conf, register)` must call `register` with each query AS
+    * IT STARTS, as [[Gateway.start]] does: when buffer 3 of 3 throws,
+    * the callback is the only record of buffers 1–2.
+    *
+    * Source caveat: Spark's socket source does NOT support recovery
+    * (its own production warning); a restarted run fails committing
+    * offsets its fresh connection never served. Restarts therefore pair
+    * with a RECOVERABLE listener: the `spoolDir` file listener here, or
+    * Kafka in a real deployment.
     */
-  final class Supervisor private[streaming] (
-      getQueries: () => Seq[StreamingQuery],
-      shutdown: () => Unit) {
-    def queries: Seq[StreamingQuery] = getQueries()
+  final class Supervisor private[graft] (
+      start: (GatewayConf, StreamingQuery => Unit) => Unit,
+      confFile: Option[Path],
+      parse: String => GatewayConf,
+      backoffMs: Long = 1000,
+      maxRestarts: Int = Int.MaxValue,
+      idleTimeoutMs: Long = 0) extends AutoCloseable {
+
+    @volatile private var current: Seq[StreamingQuery] = Nil
+    @volatile private var restarts = 0
+    private val reloadCount = new AtomicLong(0)
+    private val failCount = new AtomicLong(0)
+    private val stopping = new CountDownLatch(1)
+    private var lastText = confFile.fold("")(read)
+    private var lastGood = parse(lastText)
+    private var startFailed = false
+    // runId → batchId of each query's last data-bearing progress: a
+    // NEW data batch anywhere counts as activity
+    private val seen = mutable.Map.empty[java.util.UUID, Long]
+    private var lastActivity = 0L
+
+    private def read(p: Path): String = new String(Files.readAllBytes(p), UTF_8)
+
+    /** Sleep `ms`; true when [[stop]] was called. */
+    private def pause(ms: Long): Boolean = stopping.await(ms, TimeUnit.MILLISECONDS)
+
+    private def halt(qs: Seq[StreamingQuery]): Unit = qs.foreach { q =>
+      try q.stop()
+      catch { case NonFatal(e) => System.err.println(s"gateway: stopping ${q.name} failed: $e") }
+    }
+
+    /** The one start routine. A start that throws stops the queries it
+      * had already started and logs its cause; `queries` is then empty
+      * and the next liveness check restarts the last good conf.
+      */
+    private def launch(conf: GatewayConf): Boolean = {
+      val started = mutable.ArrayBuffer.empty[StreamingQuery]
+      startFailed =
+        try { start(conf, started += _); false }
+        catch {
+          case NonFatal(e) =>
+            System.err.println(s"gateway: start failed after ${started.size} queries, stopping them: $e")
+            halt(started.toSeq)
+            started.clear()
+            true
+        }
+      current = started.toSeq
+      seen.clear()
+      lastActivity = System.nanoTime()
+      !startFailed
+    }
+
+    private def checkConf(path: Path): Unit = {
+      val text = try read(path) catch { case _: java.io.IOException => lastText }
+      if (text != lastText) {
+        lastText = text
+        val parsed =
+          try Some(parse(text))
+          catch {
+            case NonFatal(e) =>
+              failCount.incrementAndGet()
+              System.err.println(s"gateway: ignoring invalid conf: ${e.getMessage}")
+              None
+          }
+        parsed.foreach { conf =>
+          halt(current)
+          if (launch(conf)) {
+            lastGood = conf
+            reloadCount.incrementAndGet()
+          } else {
+            System.err.println("gateway: reverting to the last good conf")
+            if (!launch(lastGood)) failCount.incrementAndGet()
+            // incremented last, so failures ≥ 1 implies the revert has
+            // finished and `queries` reflects its outcome
+            failCount.incrementAndGet()
+          }
+        }
+      }
+    }
+
+    private def checkLiveness(): Unit = if (restarts < maxRestarts) {
+      current.foreach { q =>
+        val p = try q.lastProgress catch { case NonFatal(_) => null }
+        if (p != null && p.numInputRows > 0 && !seen.get(q.runId).contains(p.batchId)) {
+          seen(q.runId) = p.batchId
+          lastActivity = System.nanoTime()
+        }
+      }
+      val dead = startFailed || current.exists(!_.isActive)
+      val stale = idleTimeoutMs > 0 && System.nanoTime() - lastActivity > idleTimeoutMs * 1000000L
+      if (dead || stale) {
+        halt(current)
+        if (!pause(backoffMs)) {
+          launch(lastGood)
+          restarts += 1
+        }
+      }
+    }
+
+    launch(lastGood)
+    private val loop = new Thread(() => {
+      try {
+        while (!pause(math.min(backoffMs, 200L)))
+          try {
+            confFile.foreach(checkConf)
+            checkLiveness()
+          } catch { case NonFatal(e) => System.err.println(s"gateway: supervisor tick failed: $e") }
+      } finally halt(current)
+    }, "gateway-supervisor")
+    loop.setDaemon(true)
+    loop.start()
+
+    /** The queries currently running (new identities after each restart). */
+    def queries: Seq[StreamingQuery] = current
+
+    /** Liveness restarts so far (dead or stale runs). */
     def restartCount: Int = restarts
-    @volatile private[streaming] var restarts = 0
-    def stop(): Unit = shutdown()
+
+    /** Successful conf reloads so far. */
+    def reloads: Long = reloadCount.get()
+
+    /** Failed conf reloads so far: parse, start or revert. */
+    def failures: Long = failCount.get()
+
+    /** Ends the loop and stops its queries; returns once they are stopped. */
+    def stop(): Unit = {
+      stopping.countDown()
+      loop.join()
+    }
+
+    override def close(): Unit = stop()
   }
 
-  /** Run-forever semantics — the reference daemon's actual contract
-    * (its main loop never exits; a dropped serial/socket peer is
-    * retried forever). Two distinct failure modes need covering:
-    *
-    *  - a query that TERMINATES (failed sink batch, source that
-    *    refuses at start while the bridge is down): detected via
-    *    `isActive`;
-    *  - a peer that dies SILENTLY: Spark's socket source treats EOF
-    *    as idle, not failure — the query stays active forever reading
-    *    nothing, which is how a bare [[run]] outlives its bridge in
-    *    the worst way. `idleTimeoutMs > 0` restarts when no query has
-    *    processed a row for that long. Silence and death are
-    *    indistinguishable from this side of the wire (the reference
-    *    has the same blind spot), so set it well above the expected
-    *    reporting period; a false-positive restart is harmless —
-    *    which is the point of the design:
-    *
-    * every restart stops the remainder, waits `backoffMs`, and
-    * relaunches the WHOLE pipeline against the SAME checkpoints —
-    * windowed state resumes from the state store and the idempotent/
-    * replayed sinks absorb the reprocessed tail, the B5 kill-restart
-    * contract applied automatically (GatewaySpec pins no loss and no
-    * duplication across a peer-drop restart). A relaunch that itself
-    * fails (bridge still down) counts as another dead round and is
-    * retried, like the reference's reconnect-forever serial loop.
-    * `maxRestarts` bounds crash loops in tests; production leaves it
-    * unbounded.
-    *
-    * Source caveat, learned the hard way: Spark's socket source does
-    * NOT support recovery (its own production warning) — a restarted
-    * run fails committing offsets its fresh connection never served.
-    * Supervised restarts therefore pair with a RECOVERABLE listener:
-    * the `spoolDir` file listener here (the bridge appends line
-    * files; processed files are never re-read), or Kafka in a real
-    * deployment. The TCP socket path remains the live/low-latency
-    * listener for runs that are not expected to restart.
+  /** Supervise a fixed conf: [[run]] under the [[Supervisor]] loop,
+    * calling `register` with each query as it starts. Returns with the
+    * first run started (or its failure logged and queued for restart).
     */
   def supervise(
       spark: SparkSession,
@@ -2785,76 +2934,18 @@ object Gateway {
       backoffMs: Long = 1000,
       maxRestarts: Int = Int.MaxValue,
       idleTimeoutMs: Long = 0,
-      register: StreamingQuery => Unit = _ => ()): Supervisor = {
-    @volatile var stopped = false
-    @volatile var current: Seq[StreamingQuery] =
-      try run(spark, conf, register) catch { case _: Exception => Seq.empty }
-    lazy val sup: Supervisor = new Supervisor(
-      () => current,
-      () => {
-        stopped = true
-        current.foreach(q => try q.stop() catch { case _: Exception => () })
-      })
-    val loop = new Thread(() => {
-      // (runId, batchId) of the last data-bearing progress per query:
-      // a NEW data batch anywhere counts as liveness
-      val seen = scala.collection.mutable.Map.empty[java.util.UUID, Long]
-      var lastActivity = System.nanoTime()
-      while (!stopped && sup.restarts < maxRestarts) {
-        var fresh = false
-        current.foreach { q =>
-          val p = try q.lastProgress catch { case _: Exception => null }
-          if (p != null && p.numInputRows > 0 && !seen.get(q.runId).contains(p.batchId)) {
-            seen(q.runId) = p.batchId
-            fresh = true
-          }
-        }
-        if (fresh) lastActivity = System.nanoTime()
-        val dead = current.isEmpty || current.exists(q => !q.isActive)
-        val stale = idleTimeoutMs > 0 &&
-          (System.nanoTime() - lastActivity) > idleTimeoutMs * 1000000L
-        if (dead || stale) {
-          current.foreach(q => try q.stop() catch { case _: Exception => () })
-          Thread.sleep(backoffMs)
-          if (!stopped) {
-            current = try run(spark, conf, register) catch { case _: Exception => Seq.empty }
-            sup.restarts += 1
-            seen.clear()
-            lastActivity = System.nanoTime()
-          }
-        } else Thread.sleep(math.min(backoffMs, 200L))
-      }
-      // a stop() racing an in-flight relaunch could otherwise leave
-      // the fresh queries running: the loop owns the final cleanup
-      if (stopped) current.foreach(q => try q.stop() catch { case _: Exception => () })
-    }, "gateway-supervisor")
-    loop.setDaemon(true)
-    loop.start()
-    sup
-  }
+      register: StreamingQuery => Unit = _ => ()): Supervisor =
+    new Supervisor(
+      (c, track) => run(spark, c, q => { track(q); register(q) }),
+      None, _ => conf, backoffMs, maxRestarts, idleTimeoutMs)
 
-  /** S1/S2 — there is no serial source in Spark (nor serial hardware
-    * here). The production design is the reference's own line protocol
-    * over a ~20-line bridge: `socat /dev/ttyAMA0,b9600 TCP-LISTEN:
-    * 50011,fork` (or equivalent), then the S3 socket listener consumes
-    * it unchanged — the RFM2Pi radio settings writeback (frequency/
-    * group/baseid ※ OemGatewayRFM2PiListener) stays in the bridge,
-    * outside the query engine, exactly where the reference keeps its
-    * serial-port side effects.
+  /** Production shape of B6 hot reload: watch an oemgateway.conf and
+    * run the full gateway from it under the [[Supervisor]] loop. The
+    * checkpoint root is stable across reloads, so state survives each
+    * restart.
     */
-  val serialBridgeNote: String =
-    "serial→TCP bridge (e.g. socat) feeds the socket listener; radio config writeback lives in the bridge" +
-      " — rehearsed end-to-end in GatewaySpec (\"S1 rehearsal\"): a byte pipe plays the UART with" +
-      " mid-line write fragmentation, a line-unaware pump plays socat, init writeback runs first"
-
-  /** B6 — the reference hot-applies `runtime_settings` by mutating
-    * live objects (※ oemgateway.py · check_settings). A running Spark
-    * plan cannot be mutated; the honest equivalent is stop + restart
-    * from checkpoint: windowed state survives in the state store, the
-    * new settings (period, active flags, sink target) take effect on
-    * restart, and the idempotent sink absorbs the replayed tail.
-    * GatewaySpec's kill-restart test demonstrates exactly this cycle.
-    */
-  val hotReloadNote: String =
-    "hot reload = stop query + restart from checkpoint with new conf; state survives, sink idempotency absorbs replay"
+  def watch(spark: SparkSession, confPath: Path, sinkRoot: String, checkpointRoot: String): Supervisor =
+    new Supervisor(
+      (c, track) => run(spark, c, track),
+      Some(confPath), GatewayConfig.parse(_, sinkRoot, checkpointRoot))
 }

@@ -14,7 +14,7 @@ import graft.streaming.Gateway.{BufferConf, GatewayConf, ListenerConf}
   *  - OemGatewaySocketListener            → socket dialect, `port_nb`
   *  - OemGatewayRFM2PiListener / Serial…  → rfm2pi dialect over the
   *    serial→TCP bridge port (`bridge_port`, default 50011) — see
-  *    [[Gateway.serialBridgeNote]]
+  *    the S1/S2 note on [[Gateway]]
   *  - OemGatewayEmoncmsBuffer             → BufferConf; `domain`+`path`
   *    become the sink identity (out dir under `sinkRoot`), `active` and
   *    `period` map 1:1.

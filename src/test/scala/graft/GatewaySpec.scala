@@ -37,7 +37,7 @@ class GatewaySpec extends AnyFunSuite {
     * emoncms-style endpoint would hold after at-least-once delivery.
     */
   /** Rewrite a watched conf atomically (temp file + rename): the
-    * HotReload poller must never observe a half-written conf, which
+    * supervisor's conf poll must never observe a half-written conf, which
     * can parse successfully with buffers missing.
     */
   private def atomicWrite(path: java.nio.file.Path, text: String): Unit = {
@@ -374,14 +374,13 @@ class GatewaySpec extends AnyFunSuite {
     Files.write(confPath, ini("True").getBytes("UTF-8"))
 
     val ms = MultiQueryMemoryStream[String]()
-    val watcher = new graft.streaming.HotReload(
-      confPath,
-      pollMillis = 50L,
+    val watcher = new Gateway.Supervisor(
+      confFile = Some(confPath),
       parse = text => {
         val c = graft.streaming.GatewayConfig.parse(text, out, ckpt)
         c.copy(listeners = Seq(listener)) // stream comes from the MemoryStream
       },
-      startQueries = (c, reg) =>
+      start = (c, reg) =>
         Gateway.start(Gateway.aggregate(Gateway.decode(ms.toDF(), listener), c), c, reg))
     try {
       ms.addData("1000 10 1.0", "1004 10 2.0")
@@ -427,14 +426,13 @@ class GatewaySpec extends AnyFunSuite {
     Files.write(confPath, ini("True").getBytes("UTF-8"))
 
     val ms = MultiQueryMemoryStream[String]()
-    val watcher = new graft.streaming.HotReload(
-      confPath,
-      pollMillis = 50L,
+    val watcher = new Gateway.Supervisor(
+      confFile = Some(confPath),
       parse = text => {
         val c = graft.streaming.GatewayConfig.parse(text, out, ckpt)
         c.copy(listeners = Seq(listener))
       },
-      startQueries = (c, reg) => {
+      start = (c, reg) => {
         // an inactive buffer stands in for any start-time failure
         // (bad sink dir, checkpoint, Spark state): it throws AFTER the
         // old queries were stopped, exercising the revert path
@@ -495,16 +493,15 @@ class GatewaySpec extends AnyFunSuite {
 
     val ms = MultiQueryMemoryStream[String]()
     // runIds of queries started by the FAILED start attempt: the fix
-    // under test is that HotReload stops exactly these before reverting
+    // under test is that the supervisor stops exactly these before reverting
     val partialRuns = new java.util.concurrent.CopyOnWriteArrayList[java.util.UUID]()
-    val watcher = new graft.streaming.HotReload(
-      confPath,
-      pollMillis = 50L,
+    val watcher = new Gateway.Supervisor(
+      confFile = Some(confPath),
       parse = text => {
         val c = graft.streaming.GatewayConfig.parse(text, out, ckpt)
         c.copy(listeners = Seq(listener))
       },
-      startQueries = (c, reg) => {
+      start = (c, reg) => {
         if (c.buffers.exists(!_.active)) {
           // simulate "query 2 of 2 fails to start": buffer a's query
           // starts FOR REAL (and is registered), then the start throws
@@ -572,15 +569,15 @@ class GatewaySpec extends AnyFunSuite {
     Files.write(confPath, ini.getBytes("UTF-8"))
 
     val ms = MultiQueryMemoryStream[String]()
-    val watcher = new graft.streaming.HotReload(
-      confPath,
-      pollMillis = 50L,
+    val watcher = new Gateway.Supervisor(
+      confFile = Some(confPath),
       parse = text => {
         val c = graft.streaming.GatewayConfig.parse(text, out, ckpt)
         c.copy(listeners = Seq(listener))
       },
-      startQueries = (c, reg) =>
-        Gateway.start(Gateway.aggregate(Gateway.decode(ms.toDF(), listener), c), c, reg))
+      start = (c, reg) =>
+        Gateway.start(Gateway.aggregate(Gateway.decode(ms.toDF(), listener), c), c, reg),
+      backoffMs = 200)
     try {
       ms.addData("1000 10 1.0", "1004 10 2.0")
       watcher.queries.foreach(_.processAllAvailable())
@@ -988,7 +985,8 @@ class GatewaySpec extends AnyFunSuite {
       while (sup.restartCount < 5 && System.nanoTime() < deadline) {
         val round = sup.restartCount
         val own = sup.queries.map(_.runId).toSet
-        gatewayQueries.filterNot(q => own(q.runId)).foreach { q =>
+        val strays = gatewayQueries.filterNot(q => own(q.runId))
+        if (sup.restartCount == round) strays.foreach { q =>
           strayRounds(q.runId) = strayRounds.getOrElse(q.runId, Set.empty) + round
         }
         Thread.sleep(10)
