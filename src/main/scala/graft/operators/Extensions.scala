@@ -806,13 +806,11 @@ object Extensions {
   private[graft] def cupedVaryN: Column =
     expr("CAST(n AS DECIMAL(38,0)) * syy - CAST(sy AS DECIMAL(38,0)) * sy")
 
-  private def cupedMeanSql(v: String): String =
-    s"CASE WHEN n_$v = 0 THEN 0 ELSE CAST((20000 * sy_$v + n_$v) DIV (2 * n_$v) AS BIGINT) END"
-
   /** Variant `v`'s raw outcome mean ×10⁴ off its (n_v, sy_v) columns
-    * (suffix `v`); 0 for a variant absent from the table.
+    * (suffix `v`), signed HALF_UP; 0 for a variant absent from the
+    * table.
     */
-  private[graft] def cupedMean(v: String): Column = expr(cupedMeanSql(v))
+  private[graft] def cupedMean(v: String): Column = expr(sq4(s"sy_$v", s"n_$v"))
 
   /** Variant `v`'s adjusted mean ×10⁴, ȳ_v − θ(x̄_v − x̄) =
     * (Sy_v·var_n·n − cov_n·(Sx_v·n − Sx·n_v)) / (n_v·var_n·n), off the
@@ -821,7 +819,7 @@ object Extensions {
     */
   private[graft] def cupedMeanAdj(v: String): Column = expr(
     s"""CASE WHEN n_$v = 0 THEN 0
-       |WHEN var_n = 0 THEN ${cupedMeanSql(v)}
+       |WHEN var_n = 0 THEN ${sq4(s"sy_$v", s"n_$v")}
        |ELSE ${sq4(
         s"CAST(sy_$v AS DECIMAL(38,0)) * var_n * n" +
           s" - cov_n * (CAST(sx_$v AS DECIMAL(38,0)) * n - CAST(sx AS DECIMAL(38,0)) * n_$v)",
@@ -903,9 +901,9 @@ object Extensions {
        |  FROM pu GROUP BY 1)
        |SELECT CAST(variant AS BIGINT) AS variant,
        |  CAST(n_v AS BIGINT) AS n_users,
-       |  CAST((20000 * sy_v + n_v) // (2 * n_v) AS BIGINT) / 10000.0 AS mean_y,
+       |  ${sq4("sy_v", "n_v", "//")} / 10000.0 AS mean_y,
        |  CASE WHEN mo.var_n = 0
-       |       THEN CAST((20000 * sy_v + n_v) // (2 * n_v) AS BIGINT) / 10000.0
+       |       THEN ${sq4("sy_v", "n_v", "//")} / 10000.0
        |       ELSE ${sq4(
       "CAST(sy_v AS HUGEINT) * mo.var_n * mo.n - mo.cov_n * (CAST(sx_v AS HUGEINT) * mo.n - CAST(mo.sx AS HUGEINT) * n_v)",
       "CAST(n_v AS HUGEINT) * mo.var_n * mo.n", "//")} / 10000.0
