@@ -9,7 +9,6 @@ import org.apache.spark.storage.StorageLevel
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path}
 import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicLong
 
 import scala.collection.mutable
 import scala.util.control.NonFatal
@@ -2800,9 +2799,10 @@ object Gateway {
       idleTimeoutMs: Long = 0) extends AutoCloseable {
 
     @volatile private var current: Seq[StreamingQuery] = Nil
+    // written by the loop thread only
     @volatile private var restarts = 0
-    private val reloadCount = new AtomicLong(0)
-    private val failCount = new AtomicLong(0)
+    @volatile private var reloadCount = 0L
+    @volatile private var failCount = 0L
     private val stopping = new CountDownLatch(1)
     private var lastText = confFile.fold("")(read)
     private var lastGood = parse(lastText)
@@ -2851,7 +2851,7 @@ object Gateway {
           try Some(parse(text))
           catch {
             case NonFatal(e) =>
-              failCount.incrementAndGet()
+              failCount += 1
               System.err.println(s"gateway: ignoring invalid conf: ${e.getMessage}")
               None
           }
@@ -2859,13 +2859,13 @@ object Gateway {
           halt(current)
           if (launch(conf)) {
             lastGood = conf
-            reloadCount.incrementAndGet()
+            reloadCount += 1
           } else {
             System.err.println("gateway: reverting to the last good conf")
-            if (!launch(lastGood)) failCount.incrementAndGet()
+            if (!launch(lastGood)) failCount += 1
             // incremented last, so failures ≥ 1 implies the revert has
             // finished and `queries` reflects its outcome
-            failCount.incrementAndGet()
+            failCount += 1
           }
         }
       }
@@ -2910,10 +2910,10 @@ object Gateway {
     def restartCount: Int = restarts
 
     /** Successful conf reloads so far. */
-    def reloads: Long = reloadCount.get()
+    def reloads: Long = reloadCount
 
     /** Failed conf reloads so far: parse, start or revert. */
-    def failures: Long = failCount.get()
+    def failures: Long = failCount
 
     /** Ends the loop and stops its queries; returns once they are stopped. */
     def stop(): Unit = {
