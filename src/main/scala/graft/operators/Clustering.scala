@@ -834,8 +834,7 @@ object Clustering {
       .select(col("label"), col("n").cast("long").as("n_vecs"),
         col("n_cells").cast("long").as("n_cells"),
         (floor((abs(col("h6")) + 50) / 100).cast("long") / lit(10000.0)).as("entropy"),
-        (expr("CAST((20000 * maxc + n) DIV (2 * n) AS BIGINT)") / lit(10000.0))
-          .as("top_share"))
+        Extensions.share4("maxc", "n").as("top_share"))
       .orderBy("label")
   }
 
@@ -921,8 +920,7 @@ object Clustering {
       .crossJoin(broadcast(verdict))
       .select(col("cid"), col("n_c").cast("long").as("n_c"),
         (-col("top.nl")).cast("long").as("top_label"),
-        (expr("CAST((20000 * top.c + n_c) DIV (2 * n_c) AS BIGINT)") / lit(10000.0))
-          .as("purity"),
+        Extensions.share4("top.c", "n_c").as("purity"),
         col("nmi"))
       .orderBy("cid")
   }
@@ -1016,10 +1014,8 @@ object Clustering {
       .join(broadcast(perCell), "cid")
       .join(perTok, "tok")
       .crossJoin(broadcast(total))
-      .withColumn("lift4", expr(
-        """CAST((20000 * CAST(c_ct AS DECIMAL(38,0)) * n
-          |       + CAST(n_c AS DECIMAL(38,0)) * c_t)
-          |  DIV (2 * CAST(n_c AS DECIMAL(38,0)) * c_t) AS BIGINT)""".stripMargin))
+      .withColumn("lift4", expr(Extensions.sq4(
+        "CAST(c_ct AS DECIMAL(38,0)) * n", "CAST(n_c AS DECIMAL(38,0)) * c_t")))
       .withColumn("rank", row_number().over(Window.partitionBy(col("cid"))
         .orderBy(col("lift4").desc, col("c_ct").desc, col("tok").asc)))
       .filter(col("rank") <= 3)
@@ -1365,10 +1361,8 @@ object Clustering {
         dec(col("n_docs")) * (dec(col("n_docs")) - lit(1)) * lit(1000000000000L))
       .withColumn("dnn", dec(col("n_docs")) * lit(1000000000000L))
       .select(col("source"), col("n_docs"),
-        (expr("CAST((num * 20000 + den) DIV (2 * den) AS BIGINT)") / lit(10000.0))
-          .as("mean_pair_d2"),
-        (expr("CAST((s2 * 20000 + dnn) DIV (2 * dnn) AS BIGINT)") / lit(10000.0))
-          .as("mean_norm2"))
+        Extensions.share4("num", "den").as("mean_pair_d2"),
+        Extensions.share4("s2", "dnn").as("mean_norm2"))
       .orderBy("source")
   }
 
@@ -1578,11 +1572,6 @@ object Clustering {
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     val g = perRow.groupBy(col("cid"))
       .agg(count(lit(1)).as("n"), sum(col("s6")).as("num"))
-    def mean4(num: String, den: String): org.apache.spark.sql.Column =
-      expr(s"""CAST((CAST($num AS DECIMAL(38,0)) * 20000
-              |       + CAST($den AS DECIMAL(38,0)) * 1000000)
-              |  DIV (CAST($den AS DECIMAL(38,0)) * 2000000) AS BIGINT)"""
-        .stripMargin) / lit(10000.0)
     // corpus totals via a window OVER THE ≤K-ROW AGGREGATE (the
     // token-budget discipline: single-partition windows only over
     // dictionary-sized inputs) — one scan, no second derivation of g
@@ -1591,8 +1580,10 @@ object Clustering {
       .select(
         col("cid").cast("long").as("cid"),
         col("n").cast("long").as("n"),
-        mean4("num", "n").as("mean_sil"),
-        mean4("tnum", "tn").as("overall_sil"))
+        Extensions.share4("CAST(num AS DECIMAL(38,0))", "CAST(n AS DECIMAL(38,0)) * 1000000")
+          .as("mean_sil"),
+        Extensions.share4("CAST(tnum AS DECIMAL(38,0))", "CAST(tn AS DECIMAL(38,0)) * 1000000")
+          .as("overall_sil"))
       .orderBy("cid")
   }
 
@@ -1662,7 +1653,7 @@ object Clustering {
       .withColumn("src_id",
         when(col("doc_id") >= 200000, col("doc_id") - 200000).otherwise(col("doc_id")))
       .join(meta, "src_id")
-      .withColumn("ppm", expr("(tok * 2000000 + m) DIV (2 * m)"))
+      .withColumn("ppm", expr(Extensions.sq4("100 * tok", "m")))
       .groupBy(col("source"))
       .agg(
         count(lit(1)).cast("long").as("n_members"),
@@ -1670,11 +1661,9 @@ object Clustering {
         sum(col("tok")).cast("long").as("n_tokens"),
         sum(col("ppm").cast("decimal(38,0)")).as("eff_ppm"))
       .select(col("source"), col("n_members"), col("n_dup_members"), col("n_tokens"),
-        (expr("""CAST((eff_ppm * 20000 + 1000000) DIV 2000000 AS BIGINT)""")
-          / lit(10000.0)).as("eff_tokens"),
-        (expr("""CAST((eff_ppm * 20000 + CAST(n_tokens AS DECIMAL(38,0)) * 1000000)
-                |  DIV (2 * CAST(n_tokens AS DECIMAL(38,0)) * 1000000) AS BIGINT)"""
-          .stripMargin) / lit(10000.0)).as("eff_ratio"))
+        Extensions.share4("eff_ppm", "1000000").as("eff_tokens"),
+        Extensions.share4("eff_ppm", "CAST(n_tokens AS DECIMAL(38,0)) * 1000000")
+          .as("eff_ratio"))
       .orderBy("source")
   }
 
@@ -2020,7 +2009,7 @@ object Clustering {
 
   /** X153's share of the `tot` docs held by `num` docs, 4dp HALF_UP. */
   private[graft] def totShare(num: String): Column =
-    expr(Extensions.sq4(num, "tot")) / lit(10000.0)
+    Extensions.share4(num, "tot")
 
   private def clusterSizesSql: String =
     s"""$clusterChainSql,

@@ -336,11 +336,8 @@ object Curation {
       .select(
         col("source"),
         col("n").cast("long").as("n_docs"),
-        (expr("CAST((20000 * sx + n) DIV (2 * n) AS BIGINT)") / lit(10000.0))
-          .as("mean_tok"),
-        expr("""CAST(CASE WHEN sx = 0 THEN 0 ELSE
-                |  (2 * 1000000 * (n * qx - sx * sx) + sx * sx) DIV (2 * sx * sx)
-                |END AS BIGINT)""".stripMargin).as("cv2_ppm"))
+        Extensions.share4("sx", "n").as("mean_tok"),
+        expr(Extensions.sq4("100 * (n * qx - sx * sx)", "sx * sx")).as("cv2_ppm"))
       .select(
         col("source"), col("n_docs"), col("mean_tok"),
         (col("cv2_ppm") / lit(1000000.0)).as("cv2"),
@@ -491,8 +488,7 @@ object Curation {
       .select(
         col("bench_id"), col("n_grams"), col("n_contaminated"),
         col("max_shared"), col("burned"),
-        (expr("CAST((20000 * nb + ni) DIV (2 * ni) AS BIGINT)")
-          / lit(10000.0)).as("suite_burned_share"))
+        Extensions.share4("nb", "ni").as("suite_burned_share"))
       .orderBy("bench_id")
   }
 
@@ -873,7 +869,7 @@ object Curation {
       .withColumn("d", dec(col("kept")) * lit(1000000L) - dec(col("n_l")) * col("thr"))
       .select(col("lang"), col("n_l").cast("long").as("n_l"),
         col("thr").cast("long").as("thr_ppm"), col("kept").cast("long").as("kept"),
-        expr("CAST((2 * 1000000 * kept + n_l) DIV (2 * n_l) AS BIGINT)").as("achieved_ppm"),
+        expr(Extensions.sq4("100 * kept", "n_l")).as("achieved_ppm"),
         (dec(col("d")) * col("d") <=
           dec(lit(9L)) * col("n_l") * col("thr") * (lit(1000000L) - col("thr")))
           .cast("long").as("ok3sig"))
@@ -1826,9 +1822,7 @@ object Curation {
       .select(
         col("r").cast("long").as("rep"),
         col("n_eff").cast("long").as("n_eff"),
-        when(col("n_eff") > 0,
-          expr("CAST((20000 * num + n_eff) DIV (2 * n_eff) AS BIGINT)")
-            .cast("double") / 10000.0).as("mean_tok"))
+        when(col("n_eff") > 0, Extensions.share4("num", "n_eff")).as("mean_tok"))
       .orderBy(col("rep"))
   }
 
@@ -2022,9 +2016,7 @@ object Curation {
         col("c.no").cast("long").as("n_fail_only"),
         (expr("CAST((20000 * c.nf + n_docs) DIV (2 * n_docs) AS BIGINT)")
           / lit(10000.0)).as("fail_share"),
-        (expr("""CASE WHEN n_dropped = 0 THEN CAST(0 AS BIGINT)
-                |  ELSE CAST((20000 * c.no + n_dropped) DIV (2 * n_dropped) AS BIGINT)
-                |END""".stripMargin) / lit(10000.0)).as("recoverable_share"))
+        Extensions.share4("c.no", "n_dropped").as("recoverable_share"))
       .orderBy("rule")
   }
 
@@ -2125,8 +2117,7 @@ object Curation {
         col("full_epochs").cast("long").as("full_epochs"),
         col("extra_tokens").cast("long").as("extra_tokens"),
         col("total_alloc").cast("long").as("total_alloc"),
-        (expr("(20000 * total_alloc + n_tokens) div (2 * n_tokens)").cast("double") / 10000.0)
-          .as("epochs"))
+        Extensions.share4("total_alloc", "n_tokens").as("epochs"))
       .orderBy("source")
   }
 
@@ -2211,7 +2202,7 @@ object Curation {
     val wAll = Window.partitionBy()
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     val asc = Window.partitionBy().orderBy(col("capacity"), col("lang"))
-    perLang
+    val ranked = perLang
       .withColumn("capacity", col("n_tokens") * lit(epochsCap))
       .withColumn("total", sum(col("n_tokens")).over(wAll))
       .withColumn("budget", expr("(3 * total) div 2"))
@@ -2227,24 +2218,31 @@ object Curation {
         sum(when(col("i") <= col("kk"), col("capacity"))).over(wAll), lit(0L)))
       .withColumn("r", col("budget") - col("pk"))
       .withColumn("u", col("nl") - col("kk"))
+    unimaxAllocation(ranked, col("lang")).orderBy("lang")
+  }
+
+  /** The allocator's tail over ranked dictionary rows (n_tokens,
+    * capacity, rank i of nl, capped prefix kk, remainder r over the u
+    * uncapped, budget): uniform base, the remainder to the largest
+    * capacities, epochs at 4dp — shared by [[unimaxOf]] and
+    * `Gateway.unimaxFeed`, output keyed by `keys`.
+    */
+  private[graft] def unimaxAllocation(ranked: DataFrame, keys: Column*): DataFrame =
+    ranked
       .withColumn("base", when(col("u") === 0, lit(0L)).otherwise(expr("r div u")))
       .withColumn("remx", when(col("u") === 0, lit(0L)).otherwise(expr("r % u")))
       .withColumn("allocation",
         when(col("i") <= col("kk"), col("capacity"))
           .otherwise(col("base") +
             when(col("i") >= col("nl") - col("remx") + 1, 1L).otherwise(0L)))
-      .select(
-        col("lang"),
+      .select(keys ++ Seq(
         col("n_tokens").cast("long").as("n_tokens"),
         col("capacity").cast("long").as("capacity"),
         col("allocation").cast("long").as("allocation"),
-        (expr("(20000 * allocation + n_tokens) div (2 * n_tokens)").cast("double") / 10000.0)
-          .as("epochs"),
+        Extensions.share4("allocation", "n_tokens").as("epochs"),
         when(col("i") <= col("kk"), 1L).otherwise(0L).as("capped"),
         col("budget").cast("long").as("budget"),
-        when(col("u") === 0, col("r")).otherwise(lit(0L)).cast("long").as("unallocated"))
-      .orderBy("lang")
-  }
+        when(col("u") === 0, col("r")).otherwise(lit(0L)).cast("long").as("unallocated")): _*)
 
   private def unimaxSql: String =
     s"""WITH per AS (
@@ -2851,8 +2849,6 @@ object Curation {
         expr("(clf_logit6 + 100000) DIV 20000").cast("long").as("bin"),
         col("clf_keep").cast("long").as("ck"),
         col("keep").cast("long").as("rk"))
-    def rate4(num: String, den: String): org.apache.spark.sql.Column =
-      expr(s"CAST((20000 * $num + $den) DIV (2 * $den) AS BIGINT)") / lit(10000.0)
     val bins = flagged.groupBy(col("bin"))
       .agg(count(lit(1)).as("n"),
         sum(col("ck")).as("nck"), sum(col("rk")).as("nrk"),
@@ -2876,13 +2872,10 @@ object Curation {
       .withColumn("kden", expr(
         "CAST(tn AS DECIMAL(38,0)) * tn - pe_num"))
       .select(col("bin").cast("long").as("bin"), col("n").cast("long").as("n"),
-        rate4("nck", "n").as("clf_keep_rate"),
-        rate4("nrk", "n").as("rule_keep_rate"),
-        rate4("nag", "n").as("agree_rate"),
-        when(col("kden") === 0, lit(0.0)).otherwise(
-          expr("""CAST((abs(knum) * 20000 + kden) DIV (2 * kden) AS BIGINT)
-                 |  * (CASE WHEN knum < 0 THEN -1 ELSE 1 END)""".stripMargin)
-            / lit(10000.0)).as("kappa"))
+        Extensions.share4("nck", "n").as("clf_keep_rate"),
+        Extensions.share4("nrk", "n").as("rule_keep_rate"),
+        Extensions.share4("nag", "n").as("agree_rate"),
+        Extensions.share4("knum", "kden").as("kappa"))
       .orderBy("bin")
   }
 
@@ -2969,16 +2962,10 @@ object Curation {
       .crossJoin(broadcast(tot))
       .select(
         col("bin"), col("n").cast("long").as("n"),
-        when(col("p") === 0, lit(0.0)).otherwise(
-          expr("CAST((20000 * tp + p) DIV (2 * p) AS BIGINT)") / lit(10000.0))
-          .as("tpr"),
-        when(col("nneg") === 0, lit(0.0)).otherwise(
-          expr("CAST((20000 * fp + nneg) DIV (2 * nneg) AS BIGINT)") / lit(10000.0))
-          .as("fpr"),
+        Extensions.share4("tp", "p").as("tpr"),
+        Extensions.share4("fp", "nneg").as("fpr"),
         when(col("p") === 0 || col("nneg") === 0, lit(0.5)).otherwise(
-          expr("""CAST((num2 * 20000 + 2 * CAST(p AS DECIMAL(38,0)) * nneg)
-                 |  DIV (4 * CAST(p AS DECIMAL(38,0)) * nneg) AS BIGINT)"""
-            .stripMargin) / lit(10000.0)).as("auc"))
+          Extensions.share4("num2", "2 * CAST(p AS DECIMAL(38,0)) * nneg")).as("auc"))
       .orderBy("bin")
   }
 
@@ -3053,10 +3040,8 @@ object Curation {
   private[graft] def calBin: Column = expr("least(p6 DIV 100000, 9)").cast("long")
 
   /** A bin's mean predicted probability Σp6/n at 4dp HALF_UP. */
-  private[graft] def calMp4: Column = expr("CAST((2 * sp6 + 100 * n) DIV (200 * n) AS BIGINT)")
-
-  /** A bin's observed keep rate Σy/n at 4dp HALF_UP. */
-  private[graft] def calOb4: Column = expr("CAST((20000 * sy + n) DIV (2 * n) AS BIGINT)")
+  private[graft] def calMp4: Column =
+    expr(Extensions.sq4("CAST(sp6 AS DECIMAL(38,0))", "1000000 * CAST(n AS DECIMAL(38,0))"))
 
   /** ECE = Σ n_b·ǀgap4_bǀ / N at 4dp HALF_UP, off the named sum and count columns. */
   private[graft] def calEce(sgap: String, n: String): Column =
@@ -3102,7 +3087,7 @@ object Curation {
         sum(col("p6")).as("sp6"),
         sum(col("y")).as("sy"))
       .withColumn("mp4", calMp4)
-      .withColumn("ob4", calOb4)
+      .withColumn("ob4", expr(Extensions.sq4("sy", "n")))
       .withColumn("gap4", col("mp4") - col("ob4"))
       .withColumn("tn", sum(col("n")).over(wAll))
       .withColumn("sgap", sum(col("n") * abs(col("gap4"))).over(wAll))
@@ -3280,10 +3265,10 @@ object Curation {
         col("given_label"),
         col("pred_label"),
         col("n").cast("long").as("n_docs"),
-        (expr(Extensions.sq4("n", "n_label")) / lit(10000.0)).as("share"),
+        Extensions.share4("n", "n_label").as("share"),
         (col("pred_label") =!= -1L && col("pred_label") =!= col("given_label"))
           .cast("long").as("is_noise"),
-        (expr(Extensions.sq4("noise_mass", "conf_mass")) / lit(10000.0)).as("noise_rate"))
+        Extensions.share4("noise_mass", "conf_mass").as("noise_rate"))
       .orderBy("given_label", "pred_label")
   }
 
@@ -3404,8 +3389,7 @@ object Curation {
         col("k_anon").cast("long").as("k_anon"),
         col("n_classes_below").cast("long").as("n_classes_below"),
         col("rows_at_risk").cast("long").as("rows_at_risk"),
-        expr("CAST((20000 * rows_at_risk + n) DIV (2 * n) AS BIGINT)")
-          ./(lit(10000.0)).as("risk_share"))
+        Extensions.share4("rows_at_risk", "n").as("risk_share"))
       .orderBy("k")
   }
 
@@ -3443,8 +3427,7 @@ object Curation {
         col("l_div").cast("long").as("l_div"),
         col("n_classes_below").cast("long").as("n_classes_below"),
         col("rows_at_risk").cast("long").as("rows_at_risk"),
-        expr("CAST((20000 * rows_at_risk + n) DIV (2 * n) AS BIGINT)")
-          ./(lit(10000.0)).as("risk_share"))
+        Extensions.share4("rows_at_risk", "n").as("risk_share"))
       .orderBy("lvl")
   }
 
@@ -3541,10 +3524,7 @@ object Curation {
       .groupBy(col("cls"), col("n"), col("nn"), col("m"))
       .agg(sum(col("term")).as("emd_num"))
       .withColumn("den", expr("CAST(n AS DECIMAL(38,0)) * nn * (m - 1)"))
-      .withColumn("emd4", expr(
-        """CASE WHEN m <= 1 THEN CAST(0 AS BIGINT)
-          |ELSE CAST((20000 * emd_num + den) DIV (2 * den) AS BIGINT) END"""
-          .stripMargin))
+      .withColumn("emd4", expr(Extensions.sq4("emd_num", "den")))
       .localCheckpoint(true)
     emd.crossJoin(broadcast(ladder.map(_.toLong).toDF("lvl")))
       .withColumn("viol", expr(
@@ -3562,8 +3542,7 @@ object Curation {
         (col("tmax4") / lit(10000.0)).as("t_max"),
         col("n_violating").cast("long").as("n_violating"),
         col("rows_at_risk").cast("long").as("rows_at_risk"),
-        expr("CAST((20000 * rows_at_risk + ntot) DIV (2 * ntot) AS BIGINT)")
-          ./(lit(10000.0)).as("risk_share"))
+        Extensions.share4("rows_at_risk", "ntot").as("risk_share"))
       .orderBy("lvl")
   }
 
@@ -3679,8 +3658,9 @@ object Curation {
       .withColumn("noise6", round(lap * lit(1000000.0), 0).cast("long"))
       .withColumn("m", col("n_true") * lit(1000000L) + col("noise6"))
       .withColumn("an4", expr("(abs(noise6) + 50) DIV 100"))
-      .withColumn("man4", expr(
-        "CAST((20000 * sum(an4) OVER (PARTITION BY eps) + 10000 * count(1) OVER (PARTITION BY eps)) DIV (2 * 10000 * count(1) OVER (PARTITION BY eps)) AS BIGINT)"))
+      .withColumn("san4", sum(col("an4")).over(byEps))
+      .withColumn("n_eps", count(lit(1)).over(byEps))
+      .withColumn("man4", expr(Extensions.sq4("san4", "10000 * n_eps")))
       .select(
         col("source"), col("eps"),
         col("n_true").cast("long").as("n_true"),

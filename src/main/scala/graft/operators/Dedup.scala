@@ -541,8 +541,7 @@ object Dedup {
       .select(col("n_pairs").as("np_base"))
     agg.crossJoin(broadcast(base))
       .select(col("t_pct"), col("n_pairs"), col("n_docs").cast("long").as("n_docs"),
-        (expr("CAST((20000 * n_pairs + np_base) DIV (2 * np_base) AS BIGINT)")
-          / lit(10000.0)).as("pair_retention"))
+        Extensions.share4("n_pairs", "np_base").as("pair_retention"))
       .orderBy("t_pct")
   }
 
@@ -625,8 +624,7 @@ object Dedup {
     */
   private def lshTune(s: SparkSession, dir: String): DataFrame = {
     val s4 = nearPairsIndexed(s, dir)
-      .select(expr("CAST((20000 * shared + n_union) DIV (2 * n_union) AS BIGINT)")
-        .as("s4"))
+      .select(expr(Extensions.sq4("shared", "n_union")).as("s4"))
     val aggCols = lshTuneConfigs.flatMap { case (b, r) =>
       val p = lshCatch4(b, r, "DIV")
       Seq(
@@ -704,7 +702,7 @@ object Dedup {
     val sig = minhashSig(shingleIndex(s, dir))
     val pairs = nearPairsIndexed(s, dir)
       .select(col("id_a"), col("id_b"),
-        expr("CAST((20000 * shared + n_union) DIV (2 * n_union) AS BIGINT)").as("s4"))
+        expr(Extensions.sq4("shared", "n_union")).as("s4"))
     val est = pairs
       .join(sig.select(col("doc_id").as("id_a"), col("sig").as("sa")), "id_a")
       .join(sig.select(col("doc_id").as("id_b"), col("sig").as("sb")), "id_b")
@@ -2031,8 +2029,7 @@ object Dedup {
       .groupBy(col("doc_id"), col("n_tokens"))
       .agg(sum(col("cov")).cast("long").as("dup_tokens"))
       .select(col("doc_id"), col("n_tokens"), col("dup_tokens"),
-        (expr("(20000 * dup_tokens + n_tokens) div (2 * n_tokens)").cast("double") / 10000.0)
-          .as("dup_frac"))
+        Extensions.share4("dup_tokens", "n_tokens").as("dup_frac"))
       .orderBy("doc_id")
   }
 
@@ -2243,8 +2240,7 @@ object Dedup {
       .select(col("a.source").as("source_a"), col("b.source").as("source_b"),
         expr("CAST(size(filter(zip_with(a.sig, b.sig, (x, y) -> x = y), v -> v)) AS BIGINT)")
           .as("n_match"))
-      .withColumn("est_jaccard",
-        expr("CAST((20000 * n_match + 64) DIV 128 AS BIGINT)") / lit(10000.0))
+      .withColumn("est_jaccard", Extensions.share4("n_match", "64"))
       .orderBy("source_a", "source_b")
   }
 
@@ -2386,11 +2382,8 @@ object Dedup {
         col("n_docs").cast("long").as("n_docs"),
         col("max_bucket").cast("long").as("max_bucket"),
         col("pairs").cast("long").as("pairs"),
-        (expr(
-          """CAST((CAST(max_bucket AS DECIMAL(38,0)) * n_buckets * 20000
-            |       + CAST(n_docs AS DECIMAL(38,0)))
-            |  DIV (2 * CAST(n_docs AS DECIMAL(38,0))) AS BIGINT)""".stripMargin)
-          / lit(10000.0)).as("skew_ratio"),
+        Extensions.share4("CAST(max_bucket AS DECIMAL(38,0)) * n_buckets",
+          "CAST(n_docs AS DECIMAL(38,0))").as("skew_ratio"),
         sum(col("pairs")).over(wAll).cast("long").as("total_pairs"))
       .orderBy("band")
   }
@@ -2468,7 +2461,7 @@ object Dedup {
       .withColumn("u2", col("n_union") * col("n_union"))
       .withColumn("dd", col("u2") - col("shared") * col("shared"))
       .withColumn("p6", expr(
-        s"CAST((2000000 * ($u8 - $d4) + $u8) DIV (2 * ($u8)) AS BIGINT)"))
+        Extensions.sq4(s"100 * ($u8 - $d4)", u8)))
       .groupBy(expr("least((10 * shared) DIV n_union, 9)").cast("long").as("j_bucket"))
       .agg(
         count(lit(1)).as("n_true"),
@@ -2480,12 +2473,10 @@ object Dedup {
         col("j_bucket"),
         col("n_true").cast("long").as("n_true"),
         col("n_caught").cast("long").as("n_caught"),
-        (expr("CAST((20000 * n_caught + n_true) DIV (2 * n_true) AS BIGINT)")
-          / lit(10000.0)).as("recall"),
-        (expr("CAST((2 * sp6 + 100 * n_true) DIV (200 * n_true) AS BIGINT)")
-          / lit(10000.0)).as("expected_recall"),
-        (expr("CAST((20000 * tc + tt) DIV (2 * tt) AS BIGINT)")
-          / lit(10000.0)).as("overall_recall"))
+        Extensions.share4("n_caught", "n_true").as("recall"),
+        Extensions.share4("CAST(sp6 AS DECIMAL(38,0))", "1000000 * CAST(n_true AS DECIMAL(38,0))")
+          .as("expected_recall"),
+        Extensions.share4("tc", "tt").as("overall_recall"))
       .orderBy("j_bucket")
   }
 
@@ -2636,13 +2627,8 @@ object Dedup {
         least(coalesce(col("pair_volume"), lit(0L)).cast("decimal(38,0)"),
             lit(Long.MaxValue).cast("decimal(38,0)")).cast("long")
           .as("pair_volume"),
-        (expr("""CAST((20000 * COALESCE(postings, 0) + tot_post)
-                |  DIV (2 * tot_post) AS BIGINT)""".stripMargin)
-          / lit(10000.0)).as("postings_share"),
-        (when(col("tot_pairs") === 0, lit(0L)).otherwise(
-          expr("""CAST((20000 * COALESCE(pair_volume, 0) + tot_pairs)
-                 |  DIV (2 * tot_pairs) AS BIGINT)""".stripMargin))
-          / lit(10000.0)).as("pair_share"))
+        Extensions.share4("COALESCE(postings, 0)", "tot_post").as("postings_share"),
+        Extensions.share4("COALESCE(pair_volume, 0)", "tot_pairs").as("pair_share"))
       .orderBy("df_lo")
   }
 

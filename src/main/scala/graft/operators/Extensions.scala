@@ -350,10 +350,8 @@ object Extensions {
       .groupBy(col("event_type"), col("n0"), col("n1"))
       .agg(max(abs(col("cum0") * col("n1") - col("cum1") * col("n0"))).as("ks_num"))
       .filter(col("n0") > 0 && col("n1") > 0)
-      .withColumn("q4", expr(
-        """CAST((CAST(ks_num AS DECIMAL(38,0)) * 20000
-          |       + CAST(n0 AS DECIMAL(38,0)) * n1)
-          |  DIV (2 * CAST(n0 AS DECIMAL(38,0)) * n1) AS BIGINT)""".stripMargin))
+      .withColumn("q4", expr(sq4(
+        "CAST(ks_num AS DECIMAL(38,0))", "CAST(n0 AS DECIMAL(38,0)) * n1")))
       .select(col("event_type"),
         col("n0").cast("long").as("n_early"),
         col("n1").cast("long").as("n_late"),
@@ -523,7 +521,7 @@ object Extensions {
         col("cnt").cast("long").as("cnt"),
         col("lag1").cast("long").as("lag1"),
         col("lag7").cast("long").as("lag7"),
-        (expr("CAST((20000 * s7 + 7) DIV 14 AS BIGINT)") / lit(10000.0)).as("trail7_mean"))
+        share4("s7", "7").as("trail7_mean"))
       .orderBy("event_type", "day")
   }
 
@@ -658,15 +656,21 @@ object Extensions {
 
   /** Signed 4dp HALF_UP of num/den in integer space, as a BIGINT SQL
     * expression: sign(num)·((|num|·20000 + den) div (2·den)), 0 when
-    * den = 0 (den ≥ 0). The one rounding helper behind the experiment
-    * statistics below, their streaming dials and the oracle strings,
-    * which pass DuckDB's `//` as `div`.
+    * den = 0 (den ≥ 0). The one definition of the 4-dp HALF_UP share
+    * or mean behind every operator and streaming dial; the experiment
+    * oracle strings below pass DuckDB's `//` as `div`. A scaled form
+    * maps on through ⌊am/bm⌋ = ⌊a/b⌋: a percent is `sq4(100·x, n)`, a
+    * mean of 6-dp values `sq4(Σ, 10⁶·n)`.
     */
   private[graft] def sq4(num: String, den: String, div: String = "DIV"): String =
     s"""CAST(CASE WHEN ($den) = 0 THEN 0
        |ELSE (CASE WHEN ($num) < 0 THEN -1 ELSE 1 END)
        |     * ((abs($num) * 20000 + ($den)) $div (2 * ($den))) END AS BIGINT)"""
       .stripMargin
+
+  /** [[sq4]] as a DOUBLE share: round(num/den, 4), 0.0 when den = 0. */
+  private[graft] def share4(num: String, den: String): Column =
+    expr(sq4(num, den)) / lit(10000.0)
 
   /** X141's 2×2 table folded from a (variant, n_users, n_conv)
     * dictionary: a = conv_0, b = non-conv_0, c = conv_1, d = non-conv_1.
@@ -829,16 +833,12 @@ object Extensions {
   private[graft] def cupedTheta: Column = expr(sq4("cov_n", "var_n"))
 
   /** ρ² = cov_n²/(var_n·vary_n) ×10⁴, 0 when either variance is 0.
-    * NULL short-circuits BEFORE the 0-arm: NULL OR TRUE is TRUE, so an
-    * overflowed var_n paired with vary_n = 0 would otherwise read 0 —
-    * a silent zero where the streaming overflow guard must see NULL.
+    * An overflowed (NULL) var_n paired with vary_n = 0 reads NULL, not
+    * 0: the product is NULL before [[sq4]]'s zero test, so the
+    * streaming overflow guard still sees it.
     */
   private[graft] def cupedVarReduction: Column =
-    when(col("var_n").isNull || col("vary_n").isNull, lit(null).cast("long"))
-      .when(col("var_n") === 0 || col("vary_n") === 0, lit(0L))
-      .otherwise(expr(
-        """CAST((20000 * cov_n * cov_n + var_n * vary_n)
-          |  DIV (2 * var_n * vary_n) AS BIGINT)""".stripMargin))
+    expr(sq4("cov_n * cov_n", "var_n * vary_n"))
 
   /** X142 — CUPED variance-reduced readout (`q_cuped`): the
     * production upgrade to X141 — experiments on heavy-tailed
@@ -981,8 +981,7 @@ object Extensions {
         col("last_day").cast("long").as("last_day"),
         col("active_days").cast("long").as("active_days"),
         col("n_rows").cast("long").as("n_rows"),
-        expr("CAST((20000 * active_days + span) DIV (2 * span) AS BIGINT)")
-          ./(lit(10000.0)).as("coverage"),
+        share4("active_days", "span").as("coverage"),
         greatest(col("max_gap_days"), lit(0L)).cast("long").as("max_gap_days"))
       .orderBy("key_name")
   }
@@ -1054,8 +1053,7 @@ object Extensions {
       .select(
         col("variant").cast("long").as("variant"),
         col("n_users").cast("long").as("n_users"),
-        expr("CAST((20000 * n_users + n) DIV (2 * n) AS BIGINT)")
-          ./(lit(10000.0)).as("obs_share"),
+        share4("n_users", "n").as("obs_share"),
         (lit(10000L) / col("k") / lit(10000.0)).as("exp_share"),
         srmChi2.as("chi2"),
         srmAlarm.as("srm_alarm"))
@@ -1071,7 +1069,7 @@ object Extensions {
 
   /** χ² = num/n at 4 dp (num ≥ 0 by Cauchy–Schwarz), 0.0 for n = 0. */
   private[graft] def srmChi2: Column =
-    expr(sq4("num", "CAST(n AS DECIMAL(38,0))")) / lit(10000.0)
+    share4("num", "CAST(n AS DECIMAL(38,0))")
 
   /** The 0.001-level alarm 10⁴·num > 108280·n (χ² > 10.828, df = 1). */
   private[graft] def srmAlarm: Column =
@@ -1292,8 +1290,7 @@ object Extensions {
         col("day"),
         col("exact_users").cast("long").as("exact_users"),
         col("hll_users"),
-        (expr("CAST((20000 * hll_users + exact_users) DIV (2 * exact_users) AS BIGINT)")
-          / lit(10000.0)).as("est_ratio"),
+        share4("hll_users", "exact_users").as("est_ratio"),
         col("branch"))
       .orderBy("event_type", "day")
   }

@@ -484,8 +484,7 @@ object Multimodal {
       .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n", "nb"), "doc_b")
       .withColumn("mn", least(col("na"), col("nb")))
       .select(col("doc_a"), col("doc_b"), col("shared"),
-        (expr("CAST((20000 * shared + mn) DIV (2 * mn) AS BIGINT)") / lit(10000.0))
-          .as("containment"),
+        Extensions.share4("shared", "mn").as("containment"),
         (col("shared") >= mediaDupMinShared).cast("long").as("is_dup"))
       .orderBy("doc_a", "doc_b")
   }

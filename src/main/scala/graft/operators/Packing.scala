@@ -170,8 +170,7 @@ object Packing {
       .select(col("bin"), col("n_docs").cast("long").as("n_docs"),
         col("n_splits").cast("long").as("n_splits"), col("straddle"),
         col("n_bins").cast("long").as("n_bins"),
-        (expr("CAST((20000 * n_straddle + n_bins) DIV (2 * n_bins) AS BIGINT)")
-          / lit(10000.0)).as("straddle_share"))
+        Extensions.share4("n_straddle", "n_bins").as("straddle_share"))
       .orderBy("bin")
   }
 
@@ -274,11 +273,8 @@ object Packing {
       .groupBy(col("split"), col("n_s"))
       .agg(max(greatest(atV, atVMinus)).as("ks_num"),
         max(col("n_total")).as("n_total"))
-      .withColumn("ks4", expr(
-        """CAST((CAST(ks_num AS DECIMAL(38,0)) * 20000
-          |       + CAST(n_s AS DECIMAL(38,0)) * n_total)
-          |  DIV (2 * CAST(n_s AS DECIMAL(38,0)) * n_total) AS BIGINT)"""
-          .stripMargin))
+      .withColumn("ks4", expr(Extensions.sq4(
+        "CAST(ks_num AS DECIMAL(38,0))", "CAST(n_s AS DECIMAL(38,0)) * n_total")))
       .select(col("split"), col("n_s").cast("long").as("n_docs"),
         (col("ks4") / lit(10000.0)).as("ks"))
     // composition half: worst per-source share deviation over the
@@ -297,11 +293,8 @@ object Packing {
       .withColumn("c", coalesce(col("c"), lit(0L)))
       .withColumn("num", abs(col("c") * col("n") - col("ck") * col("ns")))
       .groupBy(col("split"))
-      .agg(max(expr(
-        """CAST((CAST(num AS DECIMAL(38,0)) * 20000
-          |       + CAST(ns AS DECIMAL(38,0)) * n)
-          |  DIV (2 * CAST(ns AS DECIMAL(38,0)) * n) AS BIGINT)""".stripMargin))
-        .as("dev4"))
+      .agg(max(expr(Extensions.sq4(
+        "CAST(num AS DECIMAL(38,0))", "CAST(ns AS DECIMAL(38,0)) * n"))).as("dev4"))
       .select(col("split"), (col("dev4") / lit(10000.0)).as("max_src_dev"))
     ks.join(dev, "split").orderBy("split")
   }
@@ -424,8 +417,7 @@ object Packing {
         (expr("(total_tokens + ctx - 1) div ctx") * col("ctx") - col("total_tokens"))
           .cast("long").as("tail_waste"),
         col("n_crossing"),
-        (expr("(20000 * n_crossing + n_docs) div (2 * n_docs)").cast("double") / 10000.0)
-          .as("crossing_frac"))
+        Extensions.share4("n_crossing", "n_docs").as("crossing_frac"))
       .orderBy("ctx")
   }
 
@@ -716,8 +708,7 @@ object Packing {
     audited.join(broadcast(matching), Seq("pred"))
       .select(col("layout"), col("pred"), col("n_files"), col("files_skipped"),
         col("rows_total"), col("rows_skipped"), col("rows_matching"),
-        (expr("CAST((20000 * rows_skipped + rows_total) DIV (2 * rows_total) AS BIGINT)")
-          / lit(10000.0)).as("skip_share"))
+        Extensions.share4("rows_skipped", "rows_total").as("skip_share"))
       .orderBy("layout", "pred")
   }
 
@@ -805,7 +796,7 @@ object Packing {
         max(struct(col("c"), col("source"))).as("m"))
       .select(col("bin"), col("n_docs"), col("n_sources"),
         col("m.source").as("top_source"),
-        expr("CAST((20000 * m.c + n_docs) DIV (2 * n_docs) AS BIGINT)").as("ts4"))
+        expr(Extensions.sq4("m.c", "n_docs")).as("ts4"))
     val worst = perBin.agg(max(col("ts4")).as("wt4"))
     perBin.crossJoin(broadcast(worst))
       .select(

@@ -344,8 +344,7 @@ object Relational {
         col("day_offset").cast("long").as("day_offset"),
         col("n_active").cast("long").as("n_active"),
         col("n_cohort").cast("long").as("n_cohort"),
-        (expr("(2000000 * n_active + n_cohort) div (2 * n_cohort)").cast("double") / 10000.0)
-          .as("retention_pct"))
+        Extensions.share4("100 * n_active", "n_cohort").as("retention_pct"))
       .orderBy("cohort_day", "day_offset")
   }
 
@@ -582,11 +581,8 @@ object Relational {
       .select(
         col("c_nationkey"), col("c_custkey"),
         round(col("c_acctbal"), 4).as("c_acctbal"),
-        when(col("n") === 1, lit(0.0)).otherwise(
-          expr("CAST((20000 * (rnk - 1) + (n - 1)) DIV (2 * (n - 1)) AS BIGINT)")
-            / lit(10000.0)).as("pct_rank"),
-        (expr("CAST((20000 * cd_num + n) DIV (2 * n) AS BIGINT)") / lit(10000.0))
-          .as("cume"),
+        Extensions.share4("rnk - 1", "n - 1").as("pct_rank"),
+        Extensions.share4("cd_num", "n").as("cume"),
         col("quartile"))
       .orderBy("c_nationkey", "c_custkey")
   }

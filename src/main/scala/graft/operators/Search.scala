@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -342,6 +342,24 @@ object Search {
       .select(col("rk"), col("rel"))
   }
 
+  /** The 6-dp DCG gain term round(10⁶·(2^rel − 1)/log2(rk + 1)) as a
+    * BIGINT SQL expression — the one form [[rankEval]] and
+    * `Gateway.rankEvalFeed` sum.
+    */
+  private[graft] def gain6(rk: String, rel: String): String =
+    s"CAST(round(1000000.0 * CAST(shiftleft(1, CAST($rel AS INT)) - 1 AS DOUBLE)" +
+      s" / log2($rk + 1), 0) AS BIGINT)"
+
+  /** p_at_k = hits/hitsDen, ndcg = dcg6/idcg6 (0 when idcg6 = 0) and
+    * mrr = 1/r1 (0 when no rank is fully relevant), each 4dp HALF_UP
+    * off the `dcg6`, `idcg6` and `r1` columns — shared by [[rankEval]]
+    * and `Gateway.rankEvalFeed`.
+    */
+  private[graft] def rankMetrics(hits: String, hitsDen: String): Seq[Column] = Seq(
+    Extensions.share4(hits, hitsDen).as("p_at_k"),
+    Extensions.share4("dcg6", "idcg6").as("ndcg"),
+    (coalesce(expr(Extensions.sq4("1", "r1")), lit(0L)) / lit(10000.0)).as("mrr"))
+
   private def rankEval(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val relDf = relGraded(s, dir)
@@ -351,9 +369,7 @@ object Search {
       .withColumn("rk", row_number()
         .over(Window.orderBy(col("score").desc, col("doc_id").asc)).cast("long"))
       .select(col("doc_id"), col("rk"))
-    val term6 = round(lit(1000000.0) *
-      expr("CAST(shiftleft(1, CAST(rel AS INT)) - 1 AS DOUBLE)") /
-      log2(col("rk") + lit(1L)), 0).cast("long")
+    val term6 = expr(gain6("rk", "rel"))
     val rankedRel = relDf.join(broadcast(ranked), "doc_id")
       .select(col("rk"), col("rel"), term6.as("t6"))
     val wRelDesc = Window.orderBy(col("rel").desc)
@@ -365,9 +381,6 @@ object Search {
       .groupBy(col("rk")).agg(max(col("rel")).as("rel"))
       .select(col("rk"), term6.as("t6"))
     val mrr = rankedRel.agg(min(when(col("rel") === 3, col("rk"))).as("r1"))
-      .select(
-        coalesce(
-          expr("CAST((20000 + r1) DIV (2 * r1) AS BIGINT)"), lit(0L)).as("mrr4"))
     val ks = rankEvalKs.map(_.toLong).toDF("k")
     val dcg = ks.crossJoin(broadcast(rankedRel))
       .groupBy(col("k"))
@@ -379,14 +392,7 @@ object Search {
       .groupBy(col("k"))
       .agg(sum(when(col("rk") <= col("k"), col("t6")).otherwise(0L)).as("idcg6"))
     dcg.join(idcg, "k").crossJoin(broadcast(mrr))
-      .select(
-        col("k").cast("long").as("k"),
-        expr("CAST((20000 * hits + k) DIV (2 * k) AS BIGINT)")
-          ./(lit(10000.0)).as("p_at_k"),
-        when(col("idcg6") === 0, lit(0.0)).otherwise(
-          expr("CAST((20000 * dcg6 + idcg6) DIV (2 * idcg6) AS BIGINT)")
-            / lit(10000.0)).as("ndcg"),
-        (col("mrr4") / lit(10000.0)).as("mrr"))
+      .select(col("k").cast("long").as("k") +: rankMetrics("hits", "k"): _*)
       .orderBy("k")
   }
 

@@ -99,10 +99,8 @@ object Shuffle {
     * shared with the streaming `Gateway.skewFeed`: the exact max/avg
     * ratio max_cnt·n_keys/n_rows at 4 dp, in DECIMAL(38,0).
     */
-  private[graft] def skewRatio: Column = expr(
-    """CAST((CAST(max_cnt AS DECIMAL(38,0)) * n_keys * 20000
-      |       + CAST(n_rows AS DECIMAL(38,0)))
-      |  DIV (2 * CAST(n_rows AS DECIMAL(38,0))) AS BIGINT)""".stripMargin) / lit(10000.0)
+  private[graft] def skewRatio: Column =
+    Extensions.share4("CAST(max_cnt AS DECIMAL(38,0)) * n_keys", "CAST(n_rows AS DECIMAL(38,0))")
 
   private def skewed(threshold: Long): String =
     s"CAST(max_cnt AS DECIMAL(38,0)) * n_keys > $threshold * CAST(n_rows AS DECIMAL(38,0))"

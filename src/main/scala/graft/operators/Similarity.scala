@@ -785,10 +785,8 @@ object Similarity {
       .select(
         col("cid"),
         coalesce(col("n"), lit(0L)).cast("long").as("n_vecs"),
-        (expr("CAST((20000 * coalesce(n, 0) + nt) DIV (2 * nt) AS BIGINT)")
-          .cast("double") / 10000.0).as("share"),
-        (expr(s"CAST((20000 * nmax * ${Clustering.centroidK} + nt) DIV (2 * nt) AS BIGINT)")
-          .cast("double") / 10000.0).as("imbalance"))
+        Extensions.share4("coalesce(n, 0)", "nt").as("share"),
+        Extensions.share4(s"nmax * ${Clustering.centroidK}", "nt").as("imbalance"))
       .orderBy(col("cid"))
   }
 
@@ -1138,8 +1136,7 @@ object Similarity {
     h.crossJoin(broadcast(tot))
       .select(col("bucket"), col("n_vecs").cast("long").as("n_vecs"),
         col("n_oob").cast("long").as("n_oob"),
-        (expr("CAST((20000 * n_oob + n) DIV (2 * n) AS BIGINT)") / lit(10000.0))
-          .as("oob_share"))
+        Extensions.share4("n_oob", "n").as("oob_share"))
       .orderBy("bucket")
   }
 

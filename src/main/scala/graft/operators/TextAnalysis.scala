@@ -104,7 +104,7 @@ object TextAnalysis {
     grid.crossJoin(broadcast(m))
       .select(Seq(col("truth"), col("pred"), col("c").cast("long").as("n")) ++
         metrics.map { case (name, (num, den)) =>
-          (expr(Extensions.sq4(num, den)) / lit(10000.0)).as(name)
+          Extensions.share4(num, den).as(name)
         }: _*)
       .orderBy("truth", "pred")
   }
@@ -883,8 +883,8 @@ object TextAnalysis {
         sum(col("n_chars")).as("sc"))
       .select(col("lang"), col("n_docs"),
         col("sb").cast("long").as("n_bpe_tokens"),
-        (expr("(20000 * sb + sw) div (2 * sw)").cast("double") / 10000.0).as("fertility"),
-        (expr("(20000 * sc + sb) div (2 * sb)").cast("double") / 10000.0).as("chars_per_token"))
+        Extensions.share4("sb", "sw").as("fertility"),
+        Extensions.share4("sc", "sb").as("chars_per_token"))
       .orderBy("lang")
   }
 
@@ -1239,11 +1239,8 @@ object TextAnalysis {
       .groupBy(col("source"), col("n_s"))
       .agg(max(greatest(atV, atVMinus)).as("ks_num"),
         max(col("n_total")).as("n_total"))
-      .withColumn("q4", expr(
-        """CAST((CAST(ks_num AS DECIMAL(38,0)) * 20000
-          |       + CAST(n_s AS DECIMAL(38,0)) * n_total)
-          |  DIV (2 * CAST(n_s AS DECIMAL(38,0)) * n_total) AS BIGINT)"""
-          .stripMargin))
+      .withColumn("q4", expr(Extensions.sq4(
+        "CAST(ks_num AS DECIMAL(38,0))", "CAST(n_s AS DECIMAL(38,0)) * n_total")))
       .select(col("source"), col("n_s").cast("long").as("n_docs"),
         (col("q4") / lit(10000.0)).as("ks"))
       .orderBy("source")
@@ -1291,12 +1288,11 @@ object TextAnalysis {
         count(lit(1)).cast("long").as("vocab"),
         sum(when(col("c") === 1, 1L).otherwise(0L)).as("n_hapax"),
         sum(when(col("c") === 2, 1L).otherwise(0L)).as("n_doubleton"))
-      .withColumn("q4u", expr(
-        "CAST((20000 * CAST(n_hapax AS DECIMAL(38,0)) + n_tokens) DIV (2 * CAST(n_tokens AS DECIMAL(38,0))) AS BIGINT)"))
-      .withColumn("q4c", expr(
-        """CAST((20000 * CAST(n_hapax AS DECIMAL(38,0)) * (n_hapax - 1)
-          |       + 2 * (CAST(n_doubleton AS DECIMAL(38,0)) + 1))
-          |  DIV (4 * (CAST(n_doubleton AS DECIMAL(38,0)) + 1)) AS BIGINT)""".stripMargin))
+      .withColumn("q4u", expr(Extensions.sq4(
+        "CAST(n_hapax AS DECIMAL(38,0))", "CAST(n_tokens AS DECIMAL(38,0))")))
+      .withColumn("q4c", expr(Extensions.sq4(
+        "CAST(n_hapax AS DECIMAL(38,0)) * (n_hapax - 1)",
+        "2 * (CAST(n_doubleton AS DECIMAL(38,0)) + 1)")))
       .select(col("source"), col("n_tokens"), col("vocab"),
         col("n_hapax"), col("n_doubleton"),
         (col("q4u") / lit(10000.0)).as("unseen_mass"),
@@ -1553,10 +1549,8 @@ object TextAnalysis {
       .agg(sum(col("term")).as("num"))
       .select(col("tok"), col("c_w").cast("long").as("c_w"),
         col("n_src").cast("long").as("n_src"),
-        (expr("""CAST((CAST(num AS DECIMAL(38,0)) * 20000
-                |       + 2 * CAST(c_w AS DECIMAL(38,0)) * t_all)
-                |  DIV (4 * CAST(c_w AS DECIMAL(38,0)) * t_all) AS BIGINT)"""
-          .stripMargin) / lit(10000.0)).as("dp"))
+        Extensions.share4("CAST(num AS DECIMAL(38,0))", "2 * CAST(c_w AS DECIMAL(38,0)) * t_all")
+          .as("dp"))
       .orderBy("tok")
   }
 
@@ -1756,12 +1750,9 @@ object TextAnalysis {
       .withColumn("nc", sum(col("n_s")).over(byTopic))
       .select(
         col("source"), col("topic"), col("hits").cast("long").as("n_docs"),
-        (expr(Extensions.sq4("hits", "n_s")) / lit(10000.0)).as("share"),
-        when(col("hc") === 0, lit(0.0)).otherwise(
-          expr("""CAST((20000 * CAST(hits AS DECIMAL(38,0)) * nc
-                 |      + CAST(n_s AS DECIMAL(38,0)) * hc)
-                 |  DIV (2 * CAST(n_s AS DECIMAL(38,0)) * hc) AS BIGINT)"""
-            .stripMargin) / lit(10000.0)).as("lift"))
+        Extensions.share4("hits", "n_s").as("share"),
+        Extensions.share4("CAST(hits AS DECIMAL(38,0)) * nc", "CAST(n_s AS DECIMAL(38,0)) * hc")
+          .as("lift"))
       .orderBy("source", "topic")
   }
 
@@ -1846,8 +1837,7 @@ object TextAnalysis {
         col("n_mixed").cast("long").as("n_mixed"),
         col("n_en_front").cast("long").as("n_en_front"),
         col("n_en_back").cast("long").as("n_en_back"),
-        expr("CAST((20000 * n_mixed + n_docs) DIV (2 * n_docs) AS BIGINT)")
-          ./(lit(10000.0)).as("mixed_share"))
+        Extensions.share4("n_mixed", "n_docs").as("mixed_share"))
       .orderBy("source")
   }
 
@@ -1919,8 +1909,7 @@ object TextAnalysis {
         col("n_docs").cast("long").as("n_docs"),
         col("n_sources").cast("long").as("n_sources"),
         col("exemplar").cast("long").as("exemplar"),
-        expr("CAST((20000 * COALESCE(in_tpl, 0) + n_all) DIV (2 * n_all) AS BIGINT)")
-          ./(lit(10000.0)).as("templated_share"))
+        Extensions.share4("COALESCE(in_tpl, 0)", "n_all").as("templated_share"))
       .orderBy("prefix")
   }
 
@@ -2077,8 +2066,7 @@ object TextAnalysis {
         col("source"),
         col("exact_distinct").cast("long").as("exact_distinct"),
         col("hll_est"),
-        (expr("CAST((20000 * hll_est + exact_distinct) DIV (2 * exact_distinct) AS BIGINT)")
-          / lit(10000.0)).as("est_ratio"),
+        Extensions.share4("hll_est", "exact_distinct").as("est_ratio"),
         col("v_empty").cast("long").as("v_empty"),
         col("branch"))
       .orderBy("source")
@@ -2224,8 +2212,7 @@ object TextAnalysis {
         col("lo").cast("long").as("lo"),
         col("hi").cast("long").as("hi"),
         col("exact").cast("long").as("exact"),
-        (expr("CAST((20000 * ((lo + hi) DIV 2) + exact) DIV (2 * exact) AS BIGINT)")
-          / lit(10000.0)).as("est_ratio"))
+        Extensions.share4("(lo + hi) DIV 2", "exact").as("est_ratio"))
       .orderBy("source", "q_pct")
   }
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.{Clustering, Curation, Dedup, Extensions, FrameCodec, Hashing, Shuffle}
+import graft.operators.{Clustering, Curation, Dedup, Extensions, FrameCodec, Hashing, Search, Shuffle}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
@@ -192,32 +192,13 @@ object Gateway {
     * a real emoncms bulk endpoint (`postUrl`, production path — S5) or
     * a parquet directory (`outDir`, the no-network stand-in used by
     * the sandbox tests; same encoding, same batching).
-    *
-    * `executorPost` (r16 VERDICT #6) moves the POST loop from the
-    * driver (`collect` + sequential sends — the reference-faithful
-    * default: ordered, one endpoint, one connection) to the executors
-    * (`foreachPartition` — each partition's payload chunks POST from
-    * the task that holds them). At 1000-executor fanout the driver
-    * path serializes every chunk through one JVM; the executor path
-    * scales sends with the cluster. The trade, stated because it is
-    * real: cross-chunk SEND ORDER is no longer the sorted payload
-    * order (emoncms bulk rows carry their own timestamps, so ordering
-    * is cosmetic for the reference API, but a strictly-ordered
-    * endpoint should keep the default), and a retried TASK re-POSTs
-    * its partition's chunks even when another task of the same batch
-    * succeeded — at-least-once at chunk grain rather than batch
-    * grain. Any failed send still fails the micro-batch, so the
-    * checkpoint holds and the replay loop is unchanged (GatewaySpec
-    * pins payload-set equality + the failed-POST replay on both
-    * paths).
     */
   final case class BufferConf(
       name: String,
       outDir: String,
       active: Boolean = true,
       periodSeconds: Long = 10,
-      postUrl: Option[String] = None,
-      executorPost: Boolean = false)
+      postUrl: Option[String] = None)
 
   final case class GatewayConf(
       listeners: Seq[ListenerConf],
@@ -477,10 +458,8 @@ object Gateway {
                 abs(cum * lit(nRef) - x.getField("rc") * col("n"))).as("mx"))
           },
           acc => acc.getField("mx")))
-      .withColumn("q4", expr(
-        s"""CAST((CAST(ks_num AS DECIMAL(38,0)) * 20000
-           |       + CAST(n AS DECIMAL(38,0)) * ${nRef}L)
-           |  DIV (2 * CAST(n AS DECIMAL(38,0)) * ${nRef}L) AS BIGINT)""".stripMargin))
+      .withColumn("q4", expr(Extensions.sq4(
+        "CAST(ks_num AS DECIMAL(38,0))", s"CAST(n AS DECIMAL(38,0)) * ${nRef}L")))
       .select(
         col("window.start").as("window_start"),
         col("event_type"), col("n"),
@@ -937,7 +916,7 @@ object Gateway {
       .groupBy(window(col("ts"), windowDuration), Curation.calBin.as("bin"))
       .agg(count(lit(1)).as("n"), sum(col("p6")).as("sp6"), sum(col("y")).as("sy"))
       .withColumn("mp4", Curation.calMp4)
-      .withColumn("ob4", Curation.calOb4)
+      .withColumn("ob4", expr(Extensions.sq4("sy", "n")))
       .withColumn("agap", abs(col("mp4") - col("ob4")))
       .groupBy(window(window_time(col("window")), windowDuration))
       .agg(
@@ -994,7 +973,7 @@ object Gateway {
         col("window.start").as("window_start"),
         col("n_docs").cast("long").as("n_docs"),
         col("n_flagged").cast("long").as("n_flagged"),
-        (expr(Extensions.sq4("n_flagged", "n_docs")) / lit(10000.0)).as("flag_share"),
+        Extensions.share4("n_flagged", "n_docs").as("flag_share"),
         // signed 4dp HALF_UP mean off the exact integer z6 sum
         (expr(
           """CAST(CASE WHEN sz6 >= 0
@@ -1063,7 +1042,7 @@ object Gateway {
       windowDuration: String = "10 seconds",
       watermarkDelay: String = "30 seconds"): DataFrame = {
     require(relHist.nonEmpty, "corpus relevance histogram artifact must be non-empty")
-    val ks = graft.operators.Search.rankEvalKs
+    val ks = Search.rankEvalKs
     // ideal (rank, rel) grid from the histogram artifact: rank r's
     // ideal grade is the largest rel whose >=-cumulative count covers
     // r — integer logic, safe to fold at plan build
@@ -1077,12 +1056,9 @@ object Gateway {
         s"named_struct('rk', CAST($rk AS BIGINT), 'rel', CAST($rel AS BIGINT))"
       }
       .mkString("array(", ", ", ")")
-    def t6(rkE: String, relE: String): String =
-      s"CAST(round(1000000.0 * CAST(shiftleft(1, CAST($relE AS INT)) - 1 AS DOUBLE)" +
-        s" / log2($rkE + 1), 0) AS BIGINT)"
     def dcg6(arr: String): String =
       s"aggregate(filter($arr, e -> e.rk <= k), CAST(0 AS BIGINT)," +
-        s" (a, e) -> a + ${t6("e.rk", "e.rel")})"
+        s" (a, e) -> a + ${Search.gain6("e.rk", "e.rel")})"
     val parsed = FeedLine.parse(lines, "rk:long rel:long [doc]")
       // optional doc id: id-less logs collapse each rank slot to
       // ONE state key ("") — the pre-r18 max(rel) semantics exactly
@@ -1099,7 +1075,7 @@ object Gateway {
       .agg(
         count(lit(1)).as("c"),
         sum(when(col("rel") >= 2, 1L).otherwise(0L)).as("hit_c"),
-        sum(expr(t6("rk", "rel"))).as("sum_t6"),
+        sum(expr(Search.gain6("rk", "rel"))).as("sum_t6"),
         max(col("rel")).as("max_rel"))
       .groupBy(window(window_time(col("window")), windowDuration))
       .agg(collect_list(struct(col("rk"), col("c"), col("hit_c"),
@@ -1109,11 +1085,10 @@ object Gateway {
         expr("sort_array(a0)").as("arr"),
         explode(array(ks.map(k => lit(k.toLong)): _*)).as("k"))
       // Σ over ranks ≤ k of the per-rank relevant-impression SHARE,
-      // 6dp HALF_UP ((2e6·hit_c + c) div 2c == 1e6·hit when c = 1)
+      // 6dp HALF_UP (== 1e6·hit when c = 1)
       .withColumn("hits6", expr(
-        """aggregate(filter(arr, e -> e.rk <= k), CAST(0 AS BIGINT),
-          |  (a, e) -> a + ((2000000 * e.hit_c + e.c) DIV (2 * e.c)))"""
-          .stripMargin))
+        s"""aggregate(filter(arr, e -> e.rk <= k), CAST(0 AS BIGINT),
+           |  (a, e) -> a + ${Extensions.sq4("100 * e.hit_c", "e.c")})""".stripMargin))
       // Σ over ranks ≤ k of the per-rank AVERAGE gain term, same
       // exact-rational form ((2·Σt6 + c) div 2c == the term at c = 1)
       .withColumn("dcg6", expr(
@@ -1123,18 +1098,10 @@ object Gateway {
       .withColumn("idcg6", expr(dcg6(idealLit)))
       .withColumn("r1",
         expr("array_min(transform(filter(arr, e -> e.max_rel = 3), e -> e.rk))"))
-      .select(
-        col("window_start"),
-        col("k"),
-        // (2·hits6 + 100k) div 200k == the old (20000·hits + k) div 2k
-        // when every rank served one impression — digit-exact parity
-        (expr("CAST((2 * hits6 + 100 * k) DIV (200 * k) AS BIGINT)")
-          / lit(10000.0)).as("p_at_k"),
-        when(col("idcg6") === 0, lit(0.0)).otherwise(
-          expr("CAST((20000 * dcg6 + idcg6) DIV (2 * idcg6) AS BIGINT)")
-            / lit(10000.0)).as("ndcg"),
-        (coalesce(expr("CAST((20000 + r1) DIV (2 * r1) AS BIGINT)"), lit(0L))
-          / lit(10000.0)).as("mrr"))
+      // hits6/(10⁶·k) == the batch hits/k when every rank served one
+      // impression — digit-exact parity
+      .select(Seq(col("window_start"), col("k")) ++
+        Search.rankMetrics("hits6", "1000000 * k"): _*)
   }
 
   /** Streaming X151 — windowed mixture-temperature sweep
@@ -1239,7 +1206,7 @@ object Gateway {
     // (capacity, lang); pprev(r) folds the prefix before r
     def pprev(r: String): String =
       s"aggregate(slice(arr, 1, $r - 1), CAST(0 AS BIGINT), (a, e) -> a + e.c)"
-    perLang
+    val ranked = perLang
       .groupBy(window(window_time(col("window")), windowDuration))
       .agg(collect_list(struct(
         (col("n_tokens") * lit(epochsCap)).as("c"),
@@ -1262,32 +1229,16 @@ object Gateway {
       .withColumn("pk", expr(pprev("CAST(kk AS INT) + 1")))
       .withColumn("r", col("budget") - col("pk"))
       .withColumn("u", col("nl") - col("kk"))
-      .withColumn("base", when(col("u") === 0, lit(0L)).otherwise(expr("r div u")))
-      .withColumn("remx", when(col("u") === 0, lit(0L)).otherwise(expr("r % u")))
       .select(
         col("window_start"),
         posexplode(col("arr")).as(Seq("p0", "e")),
-        col("nl"), col("budget"), col("kk"),
-        col("base"), col("remx"), col("u"), col("r"))
-      .withColumn("i", (col("p0") + 1).cast("long"))
+        col("nl"), col("budget"), col("kk"), col("u"), col("r"))
       .select(
-        col("window_start"),
-        col("e.lang").as("lang"),
-        col("e.n_tokens").cast("long").as("n_tokens"),
-        col("e.c").cast("long").as("capacity"),
-        when(col("i") <= col("kk"), col("e.c"))
-          .otherwise(col("base") +
-            when(col("i") >= col("nl") - col("remx") + 1, 1L).otherwise(0L))
-          .cast("long").as("allocation"),
-        col("i"), col("kk"), col("budget"), col("u"), col("r"))
-      .withColumn("epochs",
-        expr("(20000 * allocation + n_tokens) div (2 * n_tokens)").cast("double") / 10000.0)
-      .select(
-        col("window_start"), col("lang"), col("n_tokens"), col("capacity"),
-        col("allocation"), col("epochs"),
-        when(col("i") <= col("kk"), 1L).otherwise(0L).as("capped"),
-        col("budget").cast("long").as("budget"),
-        when(col("u") === 0, col("r")).otherwise(lit(0L)).cast("long").as("unallocated"))
+        col("window_start"), col("e.lang").as("lang"),
+        col("e.n_tokens").as("n_tokens"), col("e.c").as("capacity"),
+        (col("p0") + 1).cast("long").as("i"),
+        col("nl"), col("budget"), col("kk"), col("u"), col("r"))
+    Curation.unimaxAllocation(ranked, col("window_start"), col("lang"))
   }
 
   /** Streaming X157 — windowed distinct-shingle cardinality dial
@@ -1566,7 +1517,7 @@ object Gateway {
         col("n_00").cast("long").as("n_00"), col("n_01").cast("long").as("n_01"),
         col("n_0x").cast("long").as("n_0x"), col("n_10").cast("long").as("n_10"),
         col("n_11").cast("long").as("n_11"), col("n_1x").cast("long").as("n_1x"),
-        (expr(Extensions.sq4("noise_mass", "conf_mass")) / lit(10000.0)).as("noise_rate"))
+        Extensions.share4("noise_mass", "conf_mass").as("noise_rate"))
   }
 
   /** Streaming X153 — windowed duplicate-cluster size histogram
@@ -1758,7 +1709,7 @@ object Gateway {
         col("window_start"), col("topic"),
         col("n_docs").cast("long").as("n_docs"),
         col("hits").cast("long").as("hits"),
-        (expr(Extensions.sq4("hits", "n_docs")) / lit(10000.0)).as("share"))
+        Extensions.share4("hits", "n_docs").as("share"))
   }
 
   /** Streaming X162 — windowed entity-mention audit (`entityFeed`):
@@ -1907,8 +1858,7 @@ object Gateway {
       .select(
         col("window.start").as("window_start"),
         col("n_tokens"), col("n_oov"),
-        (expr("(2000000 * n_oov + n_tokens) div (2 * n_tokens)").cast("double") / lit(10000.0))
-          .as("oov_pct"))
+        Extensions.share4("100 * n_oov", "n_tokens").as("oov_pct"))
   }
 
   /** Streaming X52+X35+X58 — the full ingest-time admission path the
@@ -2035,7 +1985,7 @@ object Gateway {
         col("n_clf_reject").cast("long").as("n_clf_reject"),
         col("n_dup").cast("long").as("n_dup"),
         col("n_admitted").cast("long").as("n_admitted"),
-        (expr(Extensions.sq4("n_admitted", "n_seen")) / lit(10000.0)).as("admit_rate"),
+        Extensions.share4("n_admitted", "n_seen").as("admit_rate"),
         when(col("n_admitted") > capPerWindow, 1L).otherwise(0L).as("cap_fired"))
   }
 
@@ -2694,22 +2644,14 @@ object Gateway {
           // fails and replays as before.
           val batch = df.persist(StorageLevel.MEMORY_AND_DISK)
           try if (!batch.isEmpty) b.postUrl match {
-            case Some(url) if b.executorPost =>
-              // executor-side sends (see BufferConf.executorPost): each
-              // task POSTs the chunks it holds; any failure fails the
-              // task → the batch → the checkpoint holds. postBulk is an
-              // object method, so each executor JVM lazily builds its
-              // own HttpClient — nothing driver-side is serialized.
-              emoncmsPayload(batch).foreachPartition {
-                (it: Iterator[org.apache.spark.sql.Row]) =>
-                  it.foreach(r => postBulk(url, r.getString(0)))
-              }
             case Some(url) =>
               // one payload row per 1000-record chunk (usually one per
               // micro-batch); collecting them is the sink edge, same as
-              // the reference's bounded POST-per-period — and the
-              // sequential single-client loop is the ORDERED delivery
-              // option executorPost gives up.
+              // the reference's bounded POST-per-period, and the
+              // sequential single-client loop keeps the sorted chunk
+              // order. All chunks explode from the batch's one `sentat`
+              // row, so they sit in one partition: sending them from an
+              // executor would be this loop run in one task elsewhere.
               emoncmsPayload(batch).collect().foreach(r => postBulk(url, r.getString(0)))
             case None =>
               bulkEncode(batch)

@@ -109,11 +109,7 @@ object GatewayConfig {
         outDir = s"$sinkRoot/$name",
         active = boolSetting(p, "active", default = true),
         periodSeconds = numSetting(p, "period", 10L),
-        postUrl = postUrl,
-        // executor_post = True opts a buffer into executor-side sends
-        // (no reference counterpart — a 1000-executor deployment knob;
-        // see BufferConf.executorPost for the ordering/replay trade)
-        executorPost = boolSetting(p, "executor_post", default = false))
+        postUrl = postUrl)
     }
 
     // top-level [settings]: gateway-wide knobs with no reference

@@ -9,6 +9,43 @@ import org.scalatest.funsuite.AnyFunSuite
 class ExtensionsSpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.spark
 
+  test("sq4 equals BigDecimal HALF_UP at 4 dp: signs, ties, zero den, DECIMAL(38,0), ANSI on and off") {
+    import org.apache.spark.sql.functions.{col, expr}
+    import spark.implicits._
+    val e33 = BigInt(10).pow(33)
+    val tie28 = 5 * BigInt(10).pow(28)
+    val cases = Seq[(BigInt, BigInt)](
+      (0, 1), (1, 3), (2, 3), (-1, 3), (-2, 3), (1, 8), (7, 7),
+      (1, 20000), (-1, 20000), (3, 60000), (-3, 60000), (-7, 14), (49999, 1000000000),
+      (5, 0), (-5, 0), (0, 0),
+      (e33 - 1, 3 * e33 + 7), (e33 + tie28, e33), (-(e33 + tie28), e33),
+      (4 * e33, 4 * e33 - 1), (-(4 * e33), 3 * e33))
+    def halfUp4(n: BigInt, d: BigInt): Long =
+      if (d == 0) 0L
+      else new java.math.BigDecimal(n.bigInteger)
+        .divide(new java.math.BigDecimal(d.bigInteger), 4, java.math.RoundingMode.HALF_UP)
+        .movePointRight(4).longValueExact
+    val want = cases.map { case (n, d) => halfUp4(n, d) }
+    def run(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      df.repartition(2)
+        .select(col("i"), expr(graft.operators.Extensions.sq4("num", "den")).as("q"))
+        .orderBy("i").select("q").as[Long].collect().toSeq
+    val dec = cases.zipWithIndex.map { case ((n, d), i) => (i, n.toString, d.toString) }
+      .toDF("i", "n", "d")
+      .select(col("i"), col("n").cast("decimal(38,0)").as("num"),
+        col("d").cast("decimal(38,0)").as("den"))
+    val longIdx = cases.indices.filter { i =>
+      cases(i)._1.isValidLong && cases(i)._2.isValidLong && (cases(i)._1 * 20000).isValidLong
+    }
+    val big = longIdx.map(i => (i, cases(i)._1.toLong, cases(i)._2.toLong)).toDF("i", "num", "den")
+    val ansiBefore = spark.conf.get("spark.sql.ansi.enabled")
+    try for (ansi <- Seq("true", "false")) {
+      spark.conf.set("spark.sql.ansi.enabled", ansi)
+      assert(run(dec) === want, s"DECIMAL(38,0) operands, ansi=$ansi")
+      assert(run(big) === longIdx.map(want), s"BIGINT operands, ansi=$ansi")
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansiBefore)
+  }
+
   test("scalable rank correlation == declared window form, at two SFs") {
     // ranks are exact integers in both forms, so equality is exact —
     // any boundary mistake in the offset arithmetic (off-by-one at a

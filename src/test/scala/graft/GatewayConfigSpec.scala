@@ -61,17 +61,6 @@ class GatewayConfigSpec extends AnyFunSuite {
     assert(local.active && local.periodSeconds === 0L && local.outDir === "/tmp/sinks/emoncms_local")
     val remote = c.buffers(1)
     assert(!remote.active && remote.periodSeconds === 30L)
-    // executor_post defaults FALSE (driver-ordered sends, the
-    // reference-faithful path) — a silent default flip would change
-    // delivery ordering semantics for every existing deployment
-    assert(c.buffers.forall(!_.executorPost))
-  }
-
-  test("executor_post opts a buffer into executor-side sends") {
-    val b = parseBuffer(
-      """            domain = example.org
-        |            executor_post = True""".stripMargin)
-    assert(b.executorPost, "executor_post = True must parse")
   }
 
   private def bufferIni(settings: String): String =

@@ -264,76 +264,6 @@ class GatewaySpec extends AnyFunSuite {
     } finally server.stop(0)
   }
 
-  test("S5 executorPost: same payload set as the driver path; failed POST still replays (r16 VERDICT #6)") {
-    // The executor-side sink gives up cross-chunk ORDER, not content:
-    // over a multi-chunk batch both paths must deliver the same
-    // payload SET, and a rejected POST must still fail the batch so
-    // the checkpoint replay loop is unchanged. maxRows is the default
-    // 1000, so chunking comes from row volume (26 channels x 2 nodes).
-    val ckpt = Files.createTempDirectory("gw-ckpt").toString
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val received = new java.util.concurrent.CopyOnWriteArrayList[String]()
-    val reject = new java.util.concurrent.atomic.AtomicBoolean(true)
-    val server = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("localhost", 0), 0)
-    server.createContext("/emoncms/input/bulk.json",
-      (ex: com.sun.net.httpserver.HttpExchange) => {
-        received.add(new String(ex.getRequestBody.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8))
-        val reply = if (reject.get()) "Error: Invalid API key" else "ok"
-        val bytes = reply.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        ex.sendResponseHeaders(200, bytes.length)
-        ex.getResponseBody.write(bytes)
-        ex.close()
-      })
-    server.start()
-    try {
-      val url =
-        s"http://localhost:${server.getAddress.getPort}/emoncms/input/bulk.json?apikey=k"
-      val frames = (0 until 2).flatMap(node =>
-        Seq(s"1000 ${10 + node} " + (0 until 26).map(c => s"$c.5").mkString(" ")))
-      def run(ms: MemoryStream[String], executor: Boolean, ckptDir: String): Unit = {
-        val c = GatewayConf(
-          listeners = Seq(listener),
-          buffers = Seq(BufferConf("post", outDir = "", periodSeconds = 0,
-            postUrl = Some(url), executorPost = executor)),
-          checkpointRoot = ckptDir)
-        val qs = Gateway.start(Gateway.aggregate(Gateway.decode(ms.toDF(), listener), c), c)
-        qs.foreach(_.processAllAvailable())
-        qs.foreach(_.stop())
-      }
-      // phase 1 (executor path, rejecting server): the batch must FAIL
-      reject.set(true)
-      val failCkpt = Files.createTempDirectory("gw-ckpt-fail").toString
-      val msExec = MemoryStream[String]
-      msExec.addData(frames: _*)
-      val boom = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-        run(msExec, executor = true, failCkpt)
-      }
-      assert(boom.getMessage.contains("emoncms rejected bulk upload"),
-        "executor-path send failure must fail the micro-batch")
-      assert(received.size() >= 1)
-      // phase 2: restart the SAME stream from the SAME checkpoint
-      // against a healthy server — the identical batch replays and
-      // delivers (proof the failed executor-path batch never committed)
-      reject.set(false)
-      received.clear()
-      run(msExec, executor = true, failCkpt)
-      val executorSet = received.toArray.map(_.toString).toSet
-      assert(executorSet.nonEmpty, "executor path delivered nothing on replay")
-      // phase 3: driver path on a fresh stream + checkpoint over the
-      // same frames — same payload SET (order is the documented trade)
-      received.clear()
-      val msDrv = MemoryStream[String]
-      msDrv.addData(frames: _*)
-      run(msDrv, executor = false, ckpt)
-      val driverSet = received.toArray.map(_.toString).toSet
-      assert(executorSet === driverSet,
-        s"executor and driver paths must deliver the same payload set")
-    } finally server.stop(0)
-  }
-
   test("S5: payload chunking caps rows per POST, shared sentat") {
     import spark.implicits._
     val agg = Seq(
