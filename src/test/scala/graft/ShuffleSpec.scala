@@ -73,6 +73,30 @@ class ShuffleSpec extends AnyFunSuite {
     assert(a === b)
   }
 
+  /** One audit row as a plain tuple; NULL fields stay null. */
+  private def auditRow(keys: Seq[Option[String]]): Seq[Any] = {
+    import spark.implicits._
+    val rows = Shuffle.keySkewOf(keys.toDF("k2"), "k2", "f").collect()
+    assert(rows.length === 1, "the oracle's ungrouped aggregate returns exactly one row")
+    rows.head.toSeq
+  }
+
+  test("keySkewOf on an empty key family: one row, n_keys 0, NULL totals, no verdict") {
+    // DuckDB: an aggregate without GROUP BY over no groups is one row
+    assert(auditRow(Seq.empty) === Seq("f", null, 0L, null, null, null, 0L, 1L))
+  }
+
+  test("keySkewOf: a NULL-key group tied at the max count loses to the min non-null key") {
+    val keys = Seq.fill(3)(None) ++ Seq.fill(3)(Some("c")) ++ Seq.fill(3)(Some("b")) ++
+      Seq(Some("a"))
+    assert(auditRow(keys) === Seq("f", 10L, 4L, 3L, "b", 1.2, 0L, 1L))
+  }
+
+  test("keySkewOf: a NULL-key group alone at the max count reports a NULL hot key") {
+    val keys = Seq.fill(5)(None) ++ Seq.fill(3)(Some("b")) ++ Seq(Some("c"), Some("a"))
+    assert(auditRow(keys) === Seq("f", 10L, 4L, 5L, null, 2.0, 0L, 1L))
+  }
+
   test("q_join_plan: the static column catalog matches every table's live parquet schema") {
     import org.apache.spark.sql.types._
     for ((t, cols) <- Shuffle.tableCatalog) {
