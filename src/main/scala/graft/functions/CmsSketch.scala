@@ -3,13 +3,11 @@ package graft.functions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import java.nio.ByteBuffer
 import java.security.MessageDigest
 
 /** Count–min sketch (Cormode & Muthukrishnan, J. Algorithms 2005):
@@ -46,7 +44,7 @@ case class CmsSketch(
     width: Int,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]]
+  extends LongArrayAggregate
   with UnaryLike[Expression] {
 
   override def createAggregationBuffer(): Array[Long] = new Array[Long](depth * width)
@@ -79,17 +77,6 @@ case class CmsSketch(
 
   override def eval(buffer: Array[Long]): Any =
     new GenericArrayData(buffer.clone())
-
-  override def serialize(buffer: Array[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(8 * buffer.length)
-    buffer.foreach(bb.putLong)
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    Array.fill(bytes.length / 8)(bb.getLong)
-  }
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = false

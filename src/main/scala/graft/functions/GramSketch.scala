@@ -4,12 +4,9 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
-
-import java.nio.ByteBuffer
 
 /** One-pass upper-triangle gram accumulator (X93's scale path): per
   * group, maintains all d(d+1)/2 entries of Σᵥ xᵥxᵥᵀ in a single
@@ -42,7 +39,7 @@ case class GramSketch(
     child: Expression,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]]
+  extends LongArrayAggregate
   with UnaryLike[Expression] {
 
   /** buffer layout: [d, g(1,1), g(1,2), …, g(1,d), g(2,2), …, g(d,d)];
@@ -110,18 +107,6 @@ case class GramSketch(
       i += 1
     }
     new GenericArrayData(out)
-  }
-
-  override def serialize(buffer: Array[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(java.lang.Long.BYTES * buffer.length)
-    buffer.foreach(bb.putLong)
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val n = bytes.length / java.lang.Long.BYTES
-    val bb = ByteBuffer.wrap(bytes)
-    Array.fill(n)(bb.getLong)
   }
 
   override def dataType: DataType = ArrayType(

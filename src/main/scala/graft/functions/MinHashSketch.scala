@@ -3,12 +3,9 @@ package graft.functions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
-
-import java.nio.ByteBuffer
 
 /** One-pass MinHash signature sketch (SURVEY.md §4 stretch; the
   * repo's first custom aggregate): for each group, maintains all
@@ -33,7 +30,7 @@ case class MinHashSketch(
     child: Expression,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]]
+  extends LongArrayAggregate
   with UnaryLike[Expression] {
 
   import MinHashSketch._
@@ -64,17 +61,6 @@ case class MinHashSketch(
   }
 
   override def eval(buffer: Array[Long]): Any = new GenericArrayData(buffer.clone())
-
-  override def serialize(buffer: Array[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(java.lang.Long.BYTES * numHashes)
-    buffer.foreach(bb.putLong)
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    Array.fill(numHashes)(bb.getLong)
-  }
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = false

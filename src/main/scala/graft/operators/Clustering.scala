@@ -3,6 +3,7 @@ package graft.operators
 import graft.QueryDef
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import Extensions.dec
 
 import scala.collection.immutable.ListMap
 
@@ -1167,10 +1168,7 @@ object Clustering {
     * embedding row — zero join).
     */
   private def sourceCentroid(s: SparkSession, dir: String): DataFrame = {
-    val e = graft.Tables(s, dir, "embeddings")
-      .select(col("vec_id"), posexplode(col("embedding")))
-      .select(col("vec_id"), (col("pos") + 1).as("dim"),
-        round(col("col").cast("double") * 1000000.0, 0).cast("long").as("xf"))
+    val e = Similarity.embeddingDims(s, dir)
     val meta = graft.Tables(s, dir, "documents")
       .select(col("doc_id").as("vec_id"), col("source"))
     val sv = e.join(meta, "vec_id")
@@ -1180,7 +1178,6 @@ object Clustering {
     // broadcast instead of letting stats guess (a SMJ here costs two
     // pointless exchanges of plan-constant-sized data)
     val g = sv.groupBy(col("dim")).agg(sum(col("sv")).as("gv"))
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     sv.join(broadcast(g), "dim")
       .groupBy(col("source"))
       .agg(
@@ -1338,11 +1335,7 @@ object Clustering {
     * n(n−1) = 0), never divided by zero.
     */
   private def sourceDispersion(s: SparkSession, dir: String): DataFrame = {
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
-    val e = graft.Tables(s, dir, "embeddings")
-      .select(col("vec_id"), posexplode(col("embedding")))
-      .select(col("vec_id"), (col("pos") + 1).as("dim"),
-        round(col("col").cast("double") * 1000000.0, 0).cast("long").as("xf"))
+    val e = Similarity.embeddingDims(s, dir)
     val meta = graft.Tables(s, dir, "documents")
       .select(col("doc_id").as("vec_id"), col("source"))
     e.join(meta, "vec_id")

@@ -3,6 +3,7 @@ package graft.operators
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import Extensions.dec
 
 import scala.collection.immutable.ListMap
 
@@ -109,13 +110,23 @@ object Curation {
     * dedups repeated grams the way the old pre-join `distinct` did,
     * on ~10⁻⁴ of the volume (r10).
     */
-  private def decontaminate(s: SparkSession, dir: String): DataFrame = {
+  /** The decontamination family's (bench, train) sides: every 50th
+    * document is the held-out benchmark; the training side is the rest
+    * plus one planted drop-first-word copy of each benchmark doc (ids
+    * + 300000), so every X15-family result is non-vacuous.
+    */
+  private def decontamSides(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val d = Tables(s, dir, "documents").select(col("doc_id"), col("text"))
     val bench = d.filter(col("doc_id") % 50 === 0)
     val train = d.filter(col("doc_id") % 50 =!= 0)
       .unionByName(bench.select(
         (col("doc_id") + 300000).as("doc_id"),
         regexp_replace(col("text"), "^[^ ]+ ", "").as("text")))
+    (bench, train)
+  }
+
+  private def decontaminate(s: SparkSession, dir: String): DataFrame = {
+    val (bench, train) = decontamSides(s, dir)
     grams(graft.Tables.fanOutForCompute(train)) // r21: gram explode is compute-dense, scan is 1 task
       .join(grams(bench).select("gram").distinct(), "gram")
       .groupBy(col("doc_id"))
@@ -148,12 +159,7 @@ object Curation {
     * to another.
     */
   private def decontamSweep(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables(s, dir, "documents").select(col("doc_id"), col("text"))
-    val bench = d.filter(col("doc_id") % 50 === 0)
-    val train = d.filter(col("doc_id") % 50 =!= 0)
-      .unionByName(bench.select(
-        (col("doc_id") + 300000).as("doc_id"),
-        regexp_replace(col("text"), "^[^ ]+ ", "").as("text")))
+    val (bench, train) = decontamSides(s, dir)
     // r21: the train side pays the n-gram explode THREE times (one per
     // swept n) over a single-task scan — fan it out once for all three
     val trainF = graft.Tables.fanOutForCompute(train)
@@ -493,12 +499,7 @@ object Curation {
   }
 
   private def decontamReport(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables(s, dir, "documents").select(col("doc_id"), col("text"))
-    val bench = d.filter(col("doc_id") % 50 === 0)
-    val train = d.filter(col("doc_id") % 50 =!= 0)
-      .unionByName(bench.select(
-        (col("doc_id") + 300000).as("doc_id"),
-        regexp_replace(col("text"), "^[^ ]+ ", "").as("text")))
+    val (bench, train) = decontamSides(s, dir)
     decontamReportOf(bench, train)
   }
 
@@ -551,6 +552,16 @@ object Curation {
     */
   private[graft] val mixTemperatures = Seq(1, 2, 4, 8)
 
+  /** X151's weight p ∝ n^(1/T) of a count `n` at temperature column
+    * `t`, as SQL text both engines evaluate identically (sqrt only);
+    * shared by the batch query, its oracle and `Gateway.temperatureFeed`.
+    */
+  private[graft] def temperatureWeight(n: String): String =
+    s"CASE WHEN t = 1 THEN CAST($n AS DOUBLE) " +
+      s"WHEN t = 2 THEN sqrt($n) " +
+      s"WHEN t = 4 THEN sqrt(sqrt($n)) " +
+      s"ELSE sqrt(sqrt(sqrt($n))) END"
+
   /** X151 — mixture-temperature sweep (`q_mix_temperature`): the
     * tuning table behind X25's single knob — multilingual/multi-source
     * pretraining picks T by reading exactly this grid (the
@@ -582,10 +593,7 @@ object Curation {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("t")).orderBy("lang")
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val p = "CASE WHEN t = 1 THEN CAST(n_docs AS DOUBLE) " +
-      "WHEN t = 2 THEN sqrt(n_docs) " +
-      "WHEN t = 4 THEN sqrt(sqrt(n_docs)) " +
-      "ELSE sqrt(sqrt(sqrt(n_docs))) END"
+    val p = temperatureWeight("n_docs")
     Tables(s, dir, "documents")
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"))
@@ -611,10 +619,7 @@ object Curation {
   }
 
   private def mixTemperatureSql: String = {
-    val p = "CASE WHEN t = 1 THEN CAST(n_docs AS DOUBLE) " +
-      "WHEN t = 2 THEN sqrt(n_docs) " +
-      "WHEN t = 4 THEN sqrt(sqrt(n_docs)) " +
-      "ELSE sqrt(sqrt(sqrt(n_docs))) END"
+    val p = temperatureWeight("n_docs")
     s"""WITH c AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_docs FROM documents GROUP BY lang),
        |ts AS (SELECT unnest([${mixTemperatures.mkString(", ")}]) AS t),
        |g AS (SELECT ts.t, c.lang, c.n_docs, $p AS p FROM c, ts),
@@ -709,12 +714,7 @@ object Curation {
     * sf0.1 — within budget).
     */
   private def decontamBloom(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables(s, dir, "documents").select(col("doc_id"), col("text"))
-    val bench = d.filter(col("doc_id") % 50 === 0)
-    val train = d.filter(col("doc_id") % 50 =!= 0)
-      .unionByName(bench.select(
-        (col("doc_id") + 300000).as("doc_id"),
-        regexp_replace(col("text"), "^[^ ]+ ", "").as("text")))
+    val (bench, train) = decontamSides(s, dir)
     // The k positions are DISJOINT 8-hex-char slices of ONE md5 — one
     // digest per gram instead of k; the digest over the ~60-char gram
     // string is the dominant per-row cost of the membership scan.
@@ -858,7 +858,6 @@ object Curation {
     * real slice.
     */
   private def mixConvergence(s: SparkSession, dir: String): DataFrame = {
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val perLang = Tables(s, dir, "documents")
       .select(col("lang"),
         (h32(concat(lit("mix"), col("doc_id").cast("string"))) % 1000000).as("u"))
@@ -2317,7 +2316,6 @@ object Curation {
     import org.apache.spark.sql.expressions.Window
     val wAll = Window.partitionBy()
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     withRuleFlags(Tables(s, dir, "documents").select(col("source"), col("text")))
       .select(col("source"), col("n_words").cast("long").as("tok"), col("keep"))
       .groupBy(col("source"))
@@ -3132,9 +3130,7 @@ object Curation {
     * like [[wmFlag]].
     */
   private[graft] def wmGreen(w: Column): Column =
-    size(filter(w, x =>
-      conv(substring(md5(concat(lit("wm "), x)), 1, 8), 16, 10).cast("long") % 2 === 0))
-      .cast("long")
+    size(filter(w, x => h32(concat(lit("wm "), x)) % 2 === 0)).cast("long")
 
   /** X154's integer-exact z ≥ 2 verdict for `g` green of `n` tokens:
     * 2g − n ≥ 0 ∧ (2g − n)² ≥ 4n, as 0/1.

@@ -47,8 +47,10 @@ object Etl {
     *
     * Batch analog: deterministically synthesize a wire frame per event
     * (some malformed, some '?'-flagged — same derivation on the oracle
-    * side), then tokenize/validate/parse exactly like the reference and
-    * aggregate per node. try_cast-style validation = cast + isNotNull.
+    * side), then tokenize/validate/parse with the gateway's own
+    * socket-dialect [[FrameCodec]] expressions and aggregate per node.
+    * Every synthesized frame carries at most one value, so the first
+    * parsed value is the frame's value.
     */
   private def filterValid(s: SparkSession, dir: String): DataFrame = {
     val framed = events(s, dir).withColumn(
@@ -57,15 +59,10 @@ object Etl {
         .when(col("event_id") % 17 === 0, concat(lit("bad "), col("value").cast("string")))
         .when(col("event_id") % 19 === 0, col("user_id").cast("string")) // too short
         .otherwise(concat(col("user_id").cast("string"), lit(" "), col("value").cast("string"))))
-    val toks = framed.withColumn("toks", split(col("frame"), " "))
-    toks
-      .filter(!col("frame").startsWith("?"))                 // unreliable
-      .filter(size(col("toks")) >= 2)                         // too short
-      // try_cast, not cast: ANSI mode (Spark 4 default) throws on the
-      // deliberately-malformed frames; the reference logs-and-drops them.
-      .withColumn("node", element_at(col("toks"), 1).try_cast("long"))
-      .withColumn("v", element_at(col("toks"), 2).try_cast("double"))
-      .filter(col("node").isNotNull && col("v").isNotNull)    // non-numeric
+    framed.withColumn("toks", FrameCodec.tokens(col("frame")))
+      .filter(FrameCodec.socketValid(col("frame"), col("toks")))
+      .withColumn("node", FrameCodec.socketNode(col("toks")))
+      .withColumn("v", element_at(FrameCodec.socketValues(col("toks")), 1))
       .groupBy(col("node"))
       .agg(
         count(lit(1)).as("n_valid"),

@@ -569,20 +569,18 @@ object Extensions {
     * 100 TB release computes anyway, stated portably.
     */
   private def manifest(s: SparkSession, dir: String): DataFrame = {
-    def h(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      conv(substring(md5(c), 1, 15), 16, 10).cast("long")
     val docs = Tables(s, dir, "documents")
       .select(col("doc_id").as("id"),
-        h(concat_ws("|", col("doc_id"), col("lang"), col("source"), col("text"))).as("h"))
+        Hashing.h60(concat_ws("|", col("doc_id"), col("lang"), col("source"), col("text"))).as("h"))
     val embs = Tables(s, dir, "embeddings")
       .select(col("vec_id").as("id"),
-        h(concat_ws("|", col("vec_id"),
+        Hashing.h60(concat_ws("|", col("vec_id"),
           concat_ws(",", transform(col("embedding"),
             x => round(x.cast("double") * 1000000.0, 0).cast("long"))),
           col("label"))).as("h"))
     val evs = Tables(s, dir, "events")
       .select(col("event_id").as("id"),
-        h(concat_ws("|", col("event_id"), col("user_id"), col("event_type"),
+        Hashing.h60(concat_ws("|", col("event_id"), col("user_id"), col("event_type"),
           unix_micros(col("ts")),
           round(col("value") * 1000000.0, 0).cast("long"))).as("h"))
     def row(name: String, d: DataFrame): DataFrame =
@@ -667,6 +665,11 @@ object Extensions {
        |ELSE (CASE WHEN ($num) < 0 THEN -1 ELSE 1 END)
        |     * ((abs($num) * 20000 + ($den)) $div (2 * ($den))) END AS BIGINT)"""
       .stripMargin
+
+  /** A column as DECIMAL(38,0): the headroom exact integer products
+    * and cross-multiplied roundings ride past the BIGINT cliff.
+    */
+  private[graft] def dec(c: Column): Column = c.cast("decimal(38,0)")
 
   /** [[sq4]] as a DOUBLE share: round(num/den, 4), 0.0 when den = 0. */
   private[graft] def share4(num: String, den: String): Column =
@@ -926,16 +929,25 @@ object Extensions {
     * variant would sort half the corpus on one task; the range
     * machine never does.
     */
+  /** X144's type-1 quantile positions in an arm of `n` users —
+    * (n+3)÷4, (n+1)÷2, (3n+3)÷4 — shared with the streaming
+    * `Gateway.qteFeed`.
+    */
+  private[graft] def qtePositions(n: String): Seq[(String, String)] = Seq(
+    "p25" -> s"CAST(($n + 3) DIV 4 AS BIGINT)",
+    "p50" -> s"CAST(($n + 1) DIV 2 AS BIGINT)",
+    "p75" -> s"CAST((3 * $n + 3) DIV 4 AS BIGINT)")
+
   private[graft] def qteOf(perUser: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val rk = rankedByRange(
       perUser.select(col("variant"), col("y"), col("uid")),
       "variant", Seq("y", "uid"), "rk")
     val cnt = perUser.groupBy(col("variant")).agg(count(lit(1)).as("n"))
-    val qs = rk.join(broadcast(cnt), "variant")
-      .withColumn("p25", expr("CAST((n + 3) DIV 4 AS BIGINT)"))
-      .withColumn("p50", expr("CAST((n + 1) DIV 2 AS BIGINT)"))
-      .withColumn("p75", expr("CAST((3 * n + 3) DIV 4 AS BIGINT)"))
+    val qs = qtePositions("n")
+      .foldLeft(rk.join(broadcast(cnt), "variant")) { case (df, (p, pos)) =>
+        df.withColumn(p, expr(pos))
+      }
       .groupBy(col("variant"), col("n"))
       .agg(
         min(when(col("rk") === col("p25"), col("y"))).as("q25"),

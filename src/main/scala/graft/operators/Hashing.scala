@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Cross-engine hash helpers. The oracle-parity contract depends on
   * Spark and DuckDB computing these identically, so there is exactly
-  * ONE definition shared by every operator (Dedup, TextAnalysis).
+  * ONE definition shared by every operator (Dedup, TextAnalysis,
+  * Curation, Packing, the Extensions manifest) and every Gateway feed.
   */
 object Hashing {
   /** 32-bit hash both engines compute identically: first 8 hex chars

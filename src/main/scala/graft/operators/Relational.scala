@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, RelationalGroupedDataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -511,12 +511,17 @@ object Relational {
     * sentinel so the hash never sees engine-specific NULL ordering.
     */
   private def aggRollup(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
-      .rollup(col("o_orderstatus"), col("o_orderpriority"))
-      .agg(
-        count(lit(1)).as("n"),
-        round(sum(col("o_totalprice")), 4).as("total"),
-        grouping_id().cast("long").as("gid"))
+    orderSetTotals(t(s, dir, "orders").rollup(col("o_orderstatus"), col("o_orderpriority")))
+
+  /** The tail R7/R15/R24 share: per grouping set the order count, the
+    * 4-dp price total and the grouping_id; NULL set keys coalesced to
+    * the `(all)` sentinel, then a total order.
+    */
+  private def orderSetTotals(g: RelationalGroupedDataset): DataFrame =
+    g.agg(
+      count(lit(1)).as("n"),
+      round(sum(col("o_totalprice")), 4).as("total"),
+      grouping_id().cast("long").as("gid"))
       .select(
         coalesce(col("o_orderstatus"), lit("(all)")).as("status"),
         coalesce(col("o_orderpriority"), lit("(all)")).as("priority"),
@@ -766,17 +771,7 @@ object Relational {
 
   /** R15 — CUBE: all grouping-set combinations (rollup's superset). */
   private def aggCube(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
-      .cube(col("o_orderstatus"), col("o_orderpriority"))
-      .agg(
-        count(lit(1)).as("n"),
-        round(sum(col("o_totalprice")), 4).as("total"),
-        grouping_id().cast("long").as("gid"))
-      .select(
-        coalesce(col("o_orderstatus"), lit("(all)")).as("status"),
-        coalesce(col("o_orderpriority"), lit("(all)")).as("priority"),
-        col("n"), col("total"), col("gid"))
-      .orderBy("gid", "status", "priority")
+    orderSetTotals(t(s, dir, "orders").cube(col("o_orderstatus"), col("o_orderpriority")))
 
   /** R24 — explicit GROUPING SETS: independent per-dimension totals
     * {(status), (priority), ()} — the marginals-only shape neither
@@ -789,19 +784,9 @@ object Relational {
     * sentinel keys + grouping_id in the total order).
     */
   private def aggGroupingSets(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
-      .groupingSets(
-        Seq(Seq(col("o_orderstatus")), Seq(col("o_orderpriority")), Seq.empty),
-        col("o_orderstatus"), col("o_orderpriority"))
-      .agg(
-        count(lit(1)).as("n"),
-        round(sum(col("o_totalprice")), 4).as("total"),
-        grouping_id().cast("long").as("gid"))
-      .select(
-        coalesce(col("o_orderstatus"), lit("(all)")).as("status"),
-        coalesce(col("o_orderpriority"), lit("(all)")).as("priority"),
-        col("n"), col("total"), col("gid"))
-      .orderBy("gid", "status", "priority")
+    orderSetTotals(t(s, dir, "orders").groupingSets(
+      Seq(Seq(col("o_orderstatus")), Seq(col("o_orderpriority")), Seq.empty),
+      col("o_orderstatus"), col("o_orderpriority")))
 
   /** R16 — exact interpolated quantiles (both engines: linear
     * interpolation over the sorted set; approximate sketches have no

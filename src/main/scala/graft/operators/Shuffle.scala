@@ -54,46 +54,52 @@ object Shuffle {
     * corpus-scale pass (narrow single-column scan, map-side partial
     * agg, one exchange to the key dictionary). Factored out of
     * [[keySkewOf]] so ShuffleSpec can pin column pruning (ReadSchema
-    * carries only the audited key) on the pre-checkpoint plan.
+    * carries only the audited key) on the dictionary plan.
     */
   private[graft] def keyCounts(df: DataFrame, keyCol: String): DataFrame =
     df.select(col(keyCol).cast("string").as("k"))
       .groupBy("k").agg(count(lit(1)).as("c"))
 
+  /** X128's audit fold over a (k, c) count dictionary — ONE aggregate,
+    * shared with the streaming `Gateway.skewFeed`: row total, key
+    * count, max count and the hot key. The hot key is the MIN key among
+    * the max-count groups, carried as `min(struct(-c, k IS NULL, k))`
+    * — order-free, so partitioning and micro-batch boundaries cannot
+    * move it — and the `k IS NULL` field keeps the oracle's rule: a
+    * NULL key wins only when its group alone holds the max count.
+    */
+  private[graft] def skewAgg: Seq[Column] = Seq(
+    sum(col("c")).as("n_rows"),
+    count(lit(1)).as("n_keys"),
+    max(col("c")).as("max_cnt"),
+    min(struct((-col("c")).as("negc"), col("k").isNull.as("knull"), col("k").as("hk")))
+      .as("hot"))
+
+  /** The audit row read off [[skewAgg]]'s columns. */
+  private[graft] def skewCols(threshold: Long): Seq[Column] = Seq(
+    col("n_rows").cast("long").as("n_rows"),
+    col("n_keys").cast("long").as("n_keys"),
+    col("max_cnt").cast("long").as("max_cnt"),
+    col("hot").getField("hk").as("hot_key"),
+    skewRatio.as("skew_ratio"),
+    skewVerdict(threshold).as("is_skewed"),
+    skewSalt(threshold).as("salt_n"))
+
   /** X128 core — audit one key family's count dictionary into a 1-row
-    * profile. The dictionary is localCheckpointed because it has two
-    * consumers (the totals aggregate and the hot-key argmax scan) —
-    * the q_dedup_sweep lesson: without the checkpoint each consumer
-    * re-runs the corpus scan + exchange.
+    * profile: [[skewAgg]] over [[keyCounts]]. An aggregate without
+    * grouping keys, so an empty family still yields its one row
+    * (n_keys 0, NULL totals and hot key, no verdict), as in the oracle.
     *
     * Numerics are exact end-to-end: skew_ratio = max_cnt*n_keys/n_rows
     * is an exact rational rounded 4dp HALF_UP in integer space
     * ((20000*num + den) DIV (2*den), DECIMAL(38,0) so 10^13 rows x
     * 10^9 keys stays in range); salt_n = ceil(max/avg) by integer
-    * ceiling division; hot_key is the STRING-MIN key among the max-
-    * count ties (deterministic in both engines byte-wise).
+    * ceiling division.
     */
   private[graft] def keySkewOf(
-      df: DataFrame, keyCol: String, label: String): DataFrame = {
-    val cnts = keyCounts(df, keyCol).localCheckpoint(true)
-    val tot = cnts.agg(
-      sum(col("c")).as("n_rows"),
-      count(lit(1)).as("n_keys"),
-      max(col("c")).as("max_cnt"))
-    cnts.crossJoin(broadcast(tot))
-      .filter(col("c") === col("max_cnt"))
-      .groupBy(col("n_rows"), col("n_keys"), col("max_cnt"))
-      .agg(min(col("k")).as("hot_key"))
-      .select(
-        lit(label).as("key_name"),
-        col("n_rows").cast("long").as("n_rows"),
-        col("n_keys").cast("long").as("n_keys"),
-        col("max_cnt").cast("long").as("max_cnt"),
-        col("hot_key"),
-        skewRatio.as("skew_ratio"),
-        skewVerdict(skewThreshold).as("is_skewed"),
-        skewSalt(skewThreshold).as("salt_n"))
-  }
+      df: DataFrame, keyCol: String, label: String): DataFrame =
+    keyCounts(df, keyCol).agg(skewAgg.head, skewAgg.tail: _*)
+      .select(lit(label).as("key_name") +: skewCols(skewThreshold): _*)
 
   /** X128's skew algebra over (n_rows, n_keys, max_cnt) columns,
     * shared with the streaming `Gateway.skewFeed`: the exact max/avg
@@ -132,39 +138,15 @@ object Shuffle {
     * and recounts every field sequentially at two SFs.
     *
     * Scale: per family ONE narrow single-column scan collapsed
-    * map-side to the key dictionary, a localCheckpoint of that
-    * dictionary, a 1-row broadcast totals join back, and a
-    * dictionary-bounded argmax scan. Five families = five independent
-    * small plans; nothing corpus-wide survives past the first agg.
+    * map-side to the key dictionary and one dictionary-bounded
+    * aggregate. The five families are independent branches of one
+    * lazy union, so Spark runs their stages side by side; nothing
+    * corpus-wide survives past the first agg.
     */
-  private def keySkew(s: SparkSession, dir: String): DataFrame = {
-    // OPTIMIZATION r20 (guide §2.6 "overlap independent jobs"): each
-    // family's keySkewOf pays an EAGER localCheckpoint of its key
-    // dictionary at construction, and building the five frames
-    // sequentially serialized five independent scan+agg jobs on an
-    // otherwise idle scheduler. Constructing them on a small thread
-    // pool overlaps the checkpoints (Spark's scheduler handles
-    // concurrent jobs natively); result order — and therefore the
-    // declared output — is unchanged because the Futures are awaited
-    // in family order before the union.
-    // r20 ADVICE: a dedicated fixed pool (not the global fork-join
-    // pool) — its threads are created HERE, so the Spark job-group/
-    // description InheritableThreadLocals they inherit are this
-    // caller's, not whichever unrelated thread first touched the
-    // global pool; it is torn down when all five futures settle, so a
-    // failed family cannot leave detached jobs running on a shared
-    // executor context.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(skewFamilies.size)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    try
-      skewFamilies
-        .map { case (t, k) => Future(keySkewOf(Tables(s, dir, t), k, s"$t.$k")) }
-        .map(Await.result(_, Duration.Inf))
-        .reduce(_ unionByName _).orderBy("key_name")
-    finally pool.shutdown()
-  }
+  private def keySkew(s: SparkSession, dir: String): DataFrame =
+    skewFamilies
+      .map { case (t, k) => keySkewOf(Tables(s, dir, t), k, s"$t.$k") }
+      .reduce(_ unionByName _).orderBy("key_name")
 
   private def skewSql(table: String, key: String): String =
     s"""SELECT '$table.$key' AS key_name, CAST(t.n AS BIGINT) AS n_rows,

@@ -3,6 +3,7 @@ package graft.operators
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import Extensions.dec
 
 import scala.collection.immutable.ListMap
 
@@ -699,12 +700,18 @@ object Similarity {
     * JL concentration (mean ratio ≈ 1, bounded spread) — the
     * distortion evidence, not just the algebra.
     */
-  private def jlProject(s: SparkSession, dir: String): DataFrame = {
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
-    val e = graft.Tables(s, dir, "embeddings")
+  /** The embeddings table as one (vec_id, dim, xf) row per component:
+    * 1-based `dim`, each component snapped to integer millionths
+    * (`xf`), so every downstream sum is exact and order-free.
+    */
+  private[graft] def embeddingDims(s: SparkSession, dir: String): DataFrame =
+    graft.Tables(s, dir, "embeddings")
       .select(col("vec_id"), posexplode(col("embedding")))
       .select(col("vec_id"), (col("pos") + 1).as("dim"),
         round(col("col").cast("double") * 1000000.0, 0).cast("long").as("xf"))
+
+  private def jlProject(s: SparkSession, dir: String): DataFrame = {
+    val e = embeddingDims(s, dir)
     val comps = (0 until jlK).map { i =>
       val signs = array(jlSigns(i).map(lit): _*)
       sum(element_at(signs, col("dim")) * col("xf")).as(s"c$i")
@@ -906,6 +913,37 @@ object Similarity {
     */
   private[graft] val pcaIters = 8
 
+  /** [[pcaIters]] integer power steps on the d×d matrix `m` (1-based
+    * accessor) from the all-10⁶ start: y = M·v in exact BigInt, then
+    * the sign-explicit rescale to ~10⁶ scale.
+    */
+  private def powerIterate(d: Int, m: (Int, Int) => BigInt): Array[BigInt] =
+    (1 to pcaIters).foldLeft(Array.fill(d)(BigInt(1000000))) { (v, _) =>
+      val y = Array.tabulate(d)(i => (1 to d).map(j => m(i + 1, j) * v(j - 1)).sum)
+      val sden = (y.map(_.abs).max / 1000000).max(BigInt(1))
+      y.map(x => (x.abs / sden) * (if (x < 0) -1 else 1))
+    }
+
+  /** The exact quadratic form vᵀ·M·v. */
+  private def quadForm(v: Array[BigInt], m: (Int, Int) => BigInt): BigInt =
+    (for { i <- v.indices; j <- v.indices } yield v(i) * m(i + 1, j + 1) * v(j)).sum
+
+  /** The driver half shared by X109/X110: collect the X93 triangle
+    * once, run [[powerIterate]] on it, and return the iterate v, its
+    * exact Rayleigh pieces vᵀGv and vᵀv, tr(G), and the Gram accessor
+    * (1-based, symmetric) X110 deflates.
+    */
+  private def pcaSolve(s: SparkSession, dir: String)
+      : (Array[BigInt], BigInt, BigInt, BigInt, (Int, Int) => BigInt) = {
+    val tri = embedGram(s, dir).collect()
+      .map(r => (r.getLong(0).toInt, r.getLong(1).toInt) -> BigInt(r.getLong(2)))
+      .toMap
+    val d = tri.keys.map(_._2).max
+    val gf = (i: Int, j: Int) => tri(if (i <= j) (i, j) else (j, i))
+    val v = powerIterate(d, gf)
+    (v, quadForm(v, gf), v.map(x => x * x).sum, (1 to d).map(i => gf(i, i)).sum, gf)
+  }
+
   /** X109 — PCA top component by portable integer power iteration
     * (`q_pca_power`): completes the pipeline X93 starts. The
     * corpus-sized half is the one-pass [[graft.functions.GramSketch]]
@@ -933,30 +971,8 @@ object Similarity {
     * shuffles, one triangle buffer per partition; the added work is
     * 8·d² multiplies on the driver and a d-row literal output.
     */
-  /** The driver half shared by X109/X110: collect the X93 triangle,
-    * run the fixed-K integer power iteration, and return the iterate
-    * with its exact Rayleigh-share numerator/denominator pieces.
-    */
-  private def pcaSolve(s: SparkSession, dir: String): (Array[BigInt], BigInt, BigInt, BigInt) = {
-    val tri = embedGram(s, dir).collect()
-      .map(r => (r.getLong(0).toInt, r.getLong(1).toInt) -> BigInt(r.getLong(2)))
-      .toMap
-    val d = tri.keys.map(_._2).max
-    def gf(i: Int, j: Int): BigInt = tri(if (i <= j) (i, j) else (j, i))
-    var v = Array.fill(d)(BigInt(1000000))
-    for (_ <- 1 to pcaIters) {
-      val y = Array.tabulate(d)(i => (1 to d).map(j => gf(i + 1, j) * v(j - 1)).sum)
-      val sden = (y.map(_.abs).max / 1000000).max(BigInt(1))
-      v = y.map(x => (x.abs / sden) * (if (x < 0) -1 else 1))
-    }
-    val num = (for { i <- 1 to d; j <- 1 to d } yield v(i - 1) * gf(i, j) * v(j - 1)).sum
-    val den = v.map(x => x * x).sum
-    val tr = (1 to d).map(i => gf(i, i)).sum
-    (v, num, den, tr)
-  }
-
   private def pcaPower(s: SparkSession, dir: String): DataFrame = {
-    val (v, num, den, tr) = pcaSolve(s, dir)
+    val (v, num, den, tr, _) = pcaSolve(s, dir)
     val share = ((BigInt(20000) * num + den * tr) / (den * tr * 2)).toLong / 10000.0
     import s.implicits._
     v.indices.map(i => ((i + 1).toLong, v(i).toLong, share))
@@ -1181,14 +1197,10 @@ object Similarity {
     * tested SF).
     */
   private def pcaProject(s: SparkSession, dir: String): DataFrame = {
-    val (v, _, den, _) = pcaSolve(s, dir)
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
+    val (v, _, den, _, _) = pcaSolve(s, dir)
     val vlit = array(v.map(x => lit(x.toLong)): _*)
     val v2 = den.toLong // Σ v_i² ≤ 64·(2·10⁶)² ≈ 2.6·10¹⁴ — long-safe
-    val e = graft.Tables(s, dir, "embeddings")
-      .select(col("vec_id"), posexplode(col("embedding")))
-      .select(col("vec_id"), (col("pos") + 1).as("dim"),
-        round(col("col").cast("double") * 1000000.0, 0).cast("long").as("xf"))
+    val e = embeddingDims(s, dir)
     // ONE corpus scan: the (vec_id, dot, x2) reduction is materialized
     // (X101's localCheckpoint discipline) because the verdict totals
     // are a second consumer — without it Spark re-scans the parquet
@@ -1271,27 +1283,17 @@ object Similarity {
     * driver/dictionary work and a d-row literal output.
     */
   private def pcaDeflate(s: SparkSession, dir: String): DataFrame = {
-    val (v1, _, _, tr) = pcaSolve(s, dir)
+    val (v1, _, _, tr, gf) = pcaSolve(s, dir)
     def scale3(v: Array[BigInt]): Array[BigInt] =
       v.map(x => (x.abs / 1000) * (if (x < 0) -1 else 1))
-    val tri = embedGram(s, dir).collect()
-      .map(r => (r.getLong(0).toInt, r.getLong(1).toInt) -> BigInt(r.getLong(2)))
-      .toMap
-    val d = v1.length
-    def gf(i: Int, j: Int): BigInt = tri(if (i <= j) (i, j) else (j, i))
     val v1s = scale3(v1)
     val denS = v1s.map(x => x * x).sum
-    val numS = (for { i <- 1 to d; j <- 1 to d } yield v1s(i - 1) * gf(i, j) * v1s(j - 1)).sum
-    def df(i: Int, j: Int): BigInt = denS * denS * gf(i, j) - numS * v1s(i - 1) * v1s(j - 1)
-    var w = Array.fill(d)(BigInt(1000000))
-    for (_ <- 1 to pcaIters) {
-      val y = Array.tabulate(d)(i => (1 to d).map(j => df(i + 1, j) * w(j - 1)).sum)
-      val sden = (y.map(_.abs).max / 1000000).max(BigInt(1))
-      w = y.map(x => (x.abs / sden) * (if (x < 0) -1 else 1))
-    }
+    val numS = quadForm(v1s, gf)
+    val w = powerIterate(v1.length,
+      (i, j) => denS * denS * gf(i, j) - numS * v1s(i - 1) * v1s(j - 1))
     val w3 = scale3(w)
     val den2 = w3.map(x => x * x).sum
-    val num2 = (for { i <- 1 to d; j <- 1 to d } yield w3(i - 1) * gf(i, j) * w3(j - 1)).sum
+    val num2 = quadForm(w3, gf)
     val share2 = ((BigInt(20000) * num2 + den2 * tr) / (den2 * tr * 2)).toLong / 10000.0
     val gap = ((BigInt(20000) * num2 * denS + numS * den2)
       / (numS * den2 * 2)).toLong / 10000.0

@@ -3,6 +3,7 @@ package graft.operators
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import Extensions.dec
 
 import scala.collection.immutable.ListMap
 
@@ -541,6 +542,14 @@ object TextAnalysis {
     */
   private[graft] val vocabV = 20
 
+  /** The corpus's top-[[vocabV]] tokens with their counts (count
+    * desc, tok asc — a total order, so the cut is deterministic).
+    */
+  private def topVocab(toks: DataFrame): DataFrame =
+    toks.groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
+      .orderBy(col("cnt").desc, col("tok").asc)
+      .limit(vocabV)
+
   /** X37 — vocabulary coverage / OOV rate: per document, the share of
     * tokens outside the corpus's own top-V vocabulary — the tokenizer
     * coverage check a pipeline runs before committing to a vocab
@@ -559,9 +568,7 @@ object TextAnalysis {
   private def vocabCoverage(s: SparkSession, dir: String): DataFrame = {
     val toks = docs(s, dir)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-    val vocab = toks.groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
-      .orderBy(col("cnt").desc, col("tok").asc)
-      .limit(vocabV)
+    val vocab = topVocab(toks)
       .select(col("tok"), lit(1L).as("in_vocab"))
     toks.join(vocab, Seq("tok"), "left")
       .groupBy(col("doc_id"))
@@ -593,9 +600,7 @@ object TextAnalysis {
   private def sourceSim(s: SparkSession, dir: String): DataFrame = {
     val toks = docs(s, dir)
       .select(col("source"), explode(split(col("text"), " ")).as("tok"))
-    val vocab = toks.groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
-      .orderBy(col("cnt").desc, col("tok").asc)
-      .limit(vocabV)
+    val vocab = topVocab(toks)
       .select(col("tok"))
     val prof = toks.join(vocab, Seq("tok"))
       .groupBy(col("source"), col("tok"))
@@ -934,9 +939,7 @@ object TextAnalysis {
     import org.apache.spark.sql.expressions.Window
     val toks = docs(s, dir)
       .select(col("source"), explode(split(col("text"), " ")).as("tok"))
-    val vocab = toks.groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
-      .orderBy(col("cnt").desc, col("tok").asc)
-      .limit(vocabV)
+    val vocab = topVocab(toks)
       .select(col("tok"))
     val prof = toks.join(vocab, Seq("tok"))
       .groupBy(col("source"), col("tok")).agg(count(lit(1)).as("c"))
@@ -1277,7 +1280,6 @@ object TextAnalysis {
     * hapax vocabulary squares past BIGINT — the X63 lesson).
     */
   private def vocabSaturation(s: SparkSession, dir: String): DataFrame = {
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     docs(s, dir)
       .select(col("source"), explode(split(col("text"), " ")).as("tok"))
       .groupBy(col("source"), col("tok"))
@@ -2114,6 +2116,22 @@ object TextAnalysis {
       |  CAST(f.v AS BIGINT) AS v_empty, f.branch
       |FROM fin f JOIN ex USING (source) ORDER BY source""".stripMargin
 
+  /** X158's quantile ladder: one exploded `q` struct per target
+    * percentile (q_pct, and the fraction qn/qd), shared with the
+    * streaming `Gateway.histQuantilesFeed`.
+    */
+  private[graft] def quantileLadder: Column = explode(array(
+    struct(lit(50L).as("q_pct"), lit(1L).as("qn"), lit(2L).as("qd")),
+    struct(lit(90L).as("q_pct"), lit(9L).as("qn"), lit(10L).as("qd")),
+    struct(lit(99L).as("q_pct"), lit(99L).as("qn"), lit(100L).as("qd"))))
+    .as("q")
+
+  /** The ceiling rank ⌈q·n_docs⌉ of a [[quantileLadder]] row, exact in
+    * integers.
+    */
+  private[graft] def quantileRank: Column =
+    expr("CAST((q.qn * n_docs + q.qd - 1) DIV q.qd AS BIGINT)")
+
   /** X158's binning (the HdrHistogram scheme, Tene): values < 2^(s+1)
     * map to themselves (exact); larger values keep their top s+1 bits
     * — bucket index (b−s−1)·2^s + (n ≫ (b−s−1)) with b = bitlen(n),
@@ -2181,14 +2199,9 @@ object TextAnalysis {
     // scan (r18 probe: the operator was 3 narrow scans; the audit scan
     // is irreducible, the count scan was not)
     val tgt = bc.groupBy(col("source")).agg(sum(col("cnt")).as("n_docs"))
-      .select(col("source"), col("n_docs"), explode(array(
-        struct(lit(50L).as("q_pct"), lit(1L).as("qn"), lit(2L).as("qd")),
-        struct(lit(90L).as("q_pct"), lit(9L).as("qn"), lit(10L).as("qd")),
-        struct(lit(99L).as("q_pct"), lit(99L).as("qn"), lit(100L).as("qd"))))
-        .as("q"))
-      .select(col("source"), col("n_docs"),
-        col("q.q_pct").as("q_pct"),
-        expr("CAST((q.qn * n_docs + q.qd - 1) DIV q.qd AS BIGINT)").as("rk"))
+      .select(col("source"), col("n_docs"), quantileLadder)
+      .select(col("source"), col("n_docs"), col("q.q_pct").as("q_pct"),
+        quantileRank.as("rk"))
     val pick = tgt.join(cum.select(col("source").as("csrc"), col("idx"), col("cum")),
         col("csrc") === col("source") && col("cum") >= col("rk"))
       .groupBy(col("source"), col("q_pct"), col("n_docs"))

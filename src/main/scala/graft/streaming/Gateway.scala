@@ -539,12 +539,12 @@ object Gateway {
     * collapses the stream to per-(window, key) counts — state bounded
     * by key churn per watermark horizon; the second re-windows via
     * `window_time` and collapses the count dictionary to the 1-row
-    * audit. Hot-key tie-break is MIN key among max-count ties, carried
-    * as `min(struct(-count, key))` — order-free, so micro-batch
-    * boundaries cannot move it; ratio/verdict/salt are the batch
-    * `keySkewOf`'s own DECIMAL(38,0) definitions
-    * ([[graft.operators.Shuffle.skewRatio]]; GatewaySpec pins stream ≡ batch ≡ sequential recount, with the
-    * fired branch driven by a hot-key window in the same feed).
+    * audit with the batch `keySkewOf`'s own aggregate and output
+    * columns ([[graft.operators.Shuffle.skewAgg]], `skewCols`): hot
+    * key = MIN key among max-count ties, order-free, so micro-batch
+    * boundaries cannot move it (GatewaySpec pins stream ≡ batch ≡
+    * sequential recount, with the fired branch driven by a hot-key
+    * window in the same feed).
     */
   def skewFeed(
       lines: DataFrame,
@@ -558,20 +558,8 @@ object Gateway {
       .agg(count(lit(1)).as("c"))
     perKey
       .groupBy(window(window_time(col("window")), windowDuration))
-      .agg(
-        sum(col("c")).as("n_rows"),
-        count(lit(1)).as("n_keys"),
-        max(col("c")).as("max_cnt"),
-        min(struct((-col("c")).as("negc"), col("k").as("hk"))).as("hot"))
-      .select(
-        col("window.start").as("window_start"),
-        col("n_rows").cast("long").as("n_rows"),
-        col("n_keys").cast("long").as("n_keys"),
-        col("max_cnt").cast("long").as("max_cnt"),
-        col("hot").getField("hk").as("hot_key"),
-        Shuffle.skewRatio.as("skew_ratio"),
-        Shuffle.skewVerdict(skewThreshold).as("is_skewed"),
-        Shuffle.skewSalt(skewThreshold).as("salt_n"))
+      .agg(Shuffle.skewAgg.head, Shuffle.skewAgg.tail: _*)
+      .select(col("window.start").as("window_start") +: Shuffle.skewCols(skewThreshold): _*)
   }
 
   /** Streaming X145 — windowed sample-ratio-mismatch guard
@@ -855,14 +843,10 @@ object Gateway {
          |  (a, e) -> named_struct('cum', a.cum + e.c,
          |    'q', CASE WHEN a.q IS NULL AND a.cum + e.c >= $pos THEN e.y ELSE a.q END)).q"""
         .stripMargin
-    def quantiles(v: Int): Seq[(String, String)] = {
-      val pos = Map(
-        "p25" -> s"CAST((n_$v + 3) DIV 4 AS BIGINT)",
-        "p50" -> s"CAST((n_$v + 1) DIV 2 AS BIGINT)",
-        "p75" -> s"CAST((3 * n_$v + 3) DIV 4 AS BIGINT)")
-      Seq("p25", "p50", "p75").map(p =>
-        s"${p}_$v" -> s"coalesce(${ostat(s"h_$v", pos(p))}, CAST(0 AS BIGINT))")
-    }
+    def quantiles(v: Int): Seq[(String, String)] =
+      Extensions.qtePositions(s"n_$v").map { case (p, pos) =>
+        s"${p}_$v" -> s"coalesce(${ostat(s"h_$v", pos)}, CAST(0 AS BIGINT))"
+      }
     hist
       .groupBy(window(window_time(col("window")), windowDuration))
       .agg(collect_list(struct(col("variant"), col("y"), col("c"))).as("hist"))
@@ -1131,9 +1115,7 @@ object Gateway {
       lines: DataFrame,
       windowDuration: String = "10 seconds",
       watermarkDelay: String = "30 seconds"): DataFrame = {
-    val p = (nE: String) =>
-      s"CASE WHEN t = 1 THEN CAST($nE AS DOUBLE) WHEN t = 2 THEN sqrt($nE) " +
-        s"WHEN t = 4 THEN sqrt(sqrt($nE)) ELSE sqrt(sqrt(sqrt($nE))) END"
+    val p = Curation.temperatureWeight _
     val parsed = FeedLine.parse(lines, "doc_id:long lang")
       .withWatermark("ts", watermarkDelay)
     parsed
@@ -1445,12 +1427,8 @@ object Gateway {
       .withColumn("n_docs",
         expr("aggregate(arr, CAST(0 AS BIGINT), (a, e) -> a + e.cnt)"))
       .select(col("window_start"), col("source"), col("arr"), col("n_docs"),
-        explode(array(
-          struct(lit(50L).as("q_pct"), lit(1L).as("qn"), lit(2L).as("qd")),
-          struct(lit(90L).as("q_pct"), lit(9L).as("qn"), lit(10L).as("qd")),
-          struct(lit(99L).as("q_pct"), lit(99L).as("qn"), lit(100L).as("qd"))))
-          .as("q"))
-      .withColumn("rk", expr("CAST((q.qn * n_docs + q.qd - 1) DIV q.qd AS BIGINT)"))
+        graft.operators.TextAnalysis.quantileLadder)
+      .withColumn("rk", graft.operators.TextAnalysis.quantileRank)
       // least bin reaching the rank: fold carries (cum, lo, hi, done)
       .withColumn("win", expr(
         """aggregate(arr,
@@ -2087,8 +2065,7 @@ object Gateway {
     */
   def manifestFeed(lines: DataFrame): DataFrame =
     lines
-      .select(
-        conv(substring(md5(col("value")), 1, 15), 16, 10).cast("long").as("h"))
+      .select(Hashing.h60(col("value")).as("h"))
       .agg(count(lit(1)).as("n_rows"), expr("bit_xor(h)").as("checksum"))
 
   /** Streaming X111 — media frame-dedup admission on the ingest path:
